@@ -60,7 +60,9 @@ def zone_path(zone: str, table: str, base: str | None = None) -> str:
 #: in its catalog/metastore. Staleness is handled, not assumed away:
 #: the key carries the file's (mtime_ns, size), so a rewritten or
 #: re-linked lake (tools/degenerate_data.py, prose-lake builds) misses
-#: and re-reads; LRU-bounded like suites/graph_shared.
+#: and re-reads. Bounded at _DF_CACHE_MAX entries with FIFO eviction:
+#: a hit does not refresh an entry's position (unlike the LRU in
+#: suites/graph_shared), so the oldest insertion is evicted first.
 _DF_CACHE: "dict[tuple, DataFrame]" = {}
 _DF_CACHE_MAX = 128
 
@@ -111,12 +113,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _DF_CACHE.pop(next(iter(_DF_CACHE)))
         _DF_CACHE[key] = df
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def link_donor_tables(src: str, out_dir: str, exclude: set[str]) -> None:

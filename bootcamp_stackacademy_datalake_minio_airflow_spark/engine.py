@@ -1,0 +1,136 @@
+"""Engine primitives shared by the operators and suites.
+
+Two concerns live here so that no operator module hand-codes them:
+
+- **Cache policy.** ``cache_scope`` persists the intermediates an
+  operator re-reads and releases every one of them when the block
+  exits, normally or by exception; ``materialize`` is the one eager
+  ``localCheckpoint`` that pins a (small) result before that release.
+  ``return materialize(out)`` inside the block checkpoints first and
+  releases second, so the returned frame never reads a dropped cache.
+- **Shared plan helpers.** ``fanout_repartition`` (explicit-N
+  exchange ahead of fan-out work), ``normalize_text`` (the canonical
+  text form every fingerprint/dedup operator hashes) and
+  ``_norm_base`` (that form materialized behind an exchange).
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+
+@contextmanager
+def cache_scope() -> Iterator[Callable[..., DataFrame]]:
+    """Yield ``hold``: ``hold(df)`` or ``hold(df, level)`` persists
+    ``df``, records it and returns it. On exit every recorded frame is
+    unpersisted (non-blocking), including when the block raises — a
+    failed invocation in a long-lived session (a pipeline, the bench
+    loop) must not leak executor memory.
+
+    A frame the caller already owns (e.g. suites/graph_shared.py's
+    shared edge set) is simply not passed to ``hold``, so the scope
+    never releases it.
+    """
+    held: list[DataFrame] = []
+
+    def hold(
+        df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+    ) -> DataFrame:
+        held.append(df.persist(level))
+        return df
+
+    try:
+        yield hold
+    finally:
+        for df in held:
+            df.unpersist(blocking=False)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` via ``localCheckpoint`` and return
+    the checkpointed frame, whose plan no longer references the
+    caches it was computed from.
+
+    Operators use it on results orders of magnitude smaller than the
+    corpus-sized intermediates they release, so eager materialization
+    is the cheap side of the trade. Trade-off, stated honestly:
+    localCheckpoint truncates lineage into executor-local storage,
+    which is NOT fault tolerant — lose an executor afterwards and the
+    blocks can't recompute. For pair results (tiny, cheap to re-derive
+    by re-running the operator) that's the right trade; for anything
+    expensive to rebuild on an unreliable cluster, write a parquet
+    checkpoint instead.
+    """
+    return df.localCheckpoint(eager=True)
+
+
+def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
+    """Hash-repartition a narrow frame on ``cols`` with an EXPLICIT
+    partition count — ``spark.sql.shuffle.partitions`` — ahead of a
+    CPU-heavy fan-out stage (explode × hash/regex per element).
+
+    Why explicit and not ``repartition(cols)``: AQE's partition
+    coalescing sizes post-shuffle partitions by BYTES
+    (``minPartitionSize``, 1 MB), so a kilobyte-scale exchange whose
+    downstream stage does 25-100x per-row fan-out work is folded back
+    to ONE partition — bytes are the proxy AQE trusts, and fan-out
+    compute defeats it (measured r12: the keyless form coalesced every
+    operator exchange on this lake to 1 partition; the explicit form
+    ran the GD feature build 35% faster warm at identical plans
+    otherwise). An explicit count is honored by AQE, and
+    ``spark.sql.shuffle.partitions`` is the deployment's scale knob
+    (set 2-3x total cores on a cluster per session.py), so stage
+    parallelism tracks the cluster, not a local constant — exactly
+    the non-AQE semantics every shuffle had before coalescing.
+
+    With no ``cols`` this is a round-robin exchange — the right form
+    when no near-unique key exists: hash-partitioning on a DATA VALUE
+    column (a measure, a raw text) collapses to a handful of
+    partitions the moment the value distribution degenerates
+    (constant column, duplicate-heavy corpus), recreating the serial
+    stage the exchange exists to break (guide §2.5; VERDICT r12 #3).
+    Round-robin placement is deterministic (sortBeforeRepartition)
+    and callers here feed global/grouped aggregates, so placement
+    cannot change any result.
+    """
+    # the conf may be non-numeric on deployments with auto-optimized
+    # shuffle ("auto"); fall back to the context's parallelism rather
+    # than breaking every operator routed through this helper
+    try:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *cols) if cols else df.repartition(n)
+
+
+def normalize_text(col: str | Column) -> Column:
+    """Lowercase + collapse whitespace — the canonical form all
+    fingerprint/dedup operators hash."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
+
+
+def _norm_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(__id, __txt) with normalization materialized via an exchange
+    boundary so downstream per-element expressions read a concrete
+    column instead of re-running the regex per element.
+
+    NULL text is dropped at the scan (pushdown-friendly IsNotNull):
+    a NULL document cannot participate in text dedup, and letting it
+    through is actively wrong — Spark's NULL-skipping greatest() in
+    the gram builders turns a NULL token array into one EMPTY-STRING
+    gram, which then spuriously pairs with genuinely-empty documents
+    while an independent engine (whose unnest drops NULL lists)
+    emits nothing (found by the NULL tier of
+    tools/degenerate_data.py)."""
+    return fanout_repartition(
+        df.filter(F.col(text_col).isNotNull()).select(
+            F.col(id_col).alias("__id"), normalize_text(text_col).alias("__txt")
+        ),
+        "__id",
+    )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import zone_path
+from ..engine import cache_scope
 from ..schemas import OLIST_SCHEMAS
 from ..sources import read_csv, write_parquet
 
@@ -63,26 +64,28 @@ def bronze_to_silver(
         return df
 
     corrupt = "_corrupt_record"
-    raw = read_csv(
-        spark,
-        src,
-        OLIST_SCHEMAS[table],
-        multi_line=table in MULTILINE_TABLES,
-        corrupt_col=corrupt,
-    ).cache()
-    # materialize the cache FIRST: Spark refuses a raw-CSV query whose
-    # pruned schema is only the internal corrupt-record column
-    # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); once the parsed rows are in
-    # the in-memory relation, the corrupt-only projection is legal —
-    # and the scan runs once for both sides anyway
-    raw.count()
-    write_parquet(
-        raw.filter(raw[corrupt].isNotNull()).select(F.col(corrupt).alias("raw_line")),
-        quarantine_path,
-    )
-    clean = raw.filter(raw[corrupt].isNull()).drop(corrupt)
-    write_parquet(clean, dst)
-    raw.unpersist()
+    with cache_scope() as hold:
+        raw = hold(
+            read_csv(
+                spark,
+                src,
+                OLIST_SCHEMAS[table],
+                multi_line=table in MULTILINE_TABLES,
+                corrupt_col=corrupt,
+            )
+        )
+        # materialize the cache FIRST: Spark refuses a raw-CSV query whose
+        # pruned schema is only the internal corrupt-record column
+        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); once the parsed rows are in
+        # the in-memory relation, the corrupt-only projection is legal —
+        # and the scan runs once for both sides anyway
+        raw.count()
+        write_parquet(
+            raw.filter(raw[corrupt].isNotNull()).select(F.col(corrupt).alias("raw_line")),
+            quarantine_path,
+        )
+        clean = raw.filter(raw[corrupt].isNull()).drop(corrupt)
+        write_parquet(clean, dst)
     # hand back the WRITTEN table, not the raw-CSV plan: once the
     # cache is released, any re-execution of `clean` would re-trip the
     # corrupt-column query restriction (and re-parse the CSV)

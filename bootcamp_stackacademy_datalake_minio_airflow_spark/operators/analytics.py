@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
+from ..engine import cache_scope, fanout_repartition, materialize
 
 
 def pareto_front_2d(df: DataFrame, cost_col: str, gain_col: str) -> DataFrame:
@@ -807,28 +807,25 @@ def split_conformal_coverage(
     spark = df.sparkSession
     t_train = _hex_threshold(train_frac)
     t_calib = _hex_threshold(train_frac + calib_frac)
-    from .dedup import _materialize_release, fanout_repartition
 
     # explicit-N repartition + persist: the three split slices (train
     # x2 actions, calib, test) each re-ran the scan + per-row md5 draw
     # inside the one-task scan stage; one narrow exchange + cache runs
     # it once, parallel (guide §2.5 / §5; rationale in
-    # operators/dedup.py:fanout_repartition). Released via the house
-    # materialize-release on the 1-row result below.
-    base = fanout_repartition(
-        df.select(
-            F.col(key_col).alias("__id"),
-            F.col(group_col).alias("__g"),
-            F.col(val_col).cast("double").alias("__v"),
-            _draw(F.col(key_col), f"{salt}:").alias("__d"),
-        ).filter(F.col("__v").isNotNull()),
-        "__id",
-    ).persist()
-    # ONE try covering everything after the persist (ADVICE r12 #2:
-    # an exception between the res actions used to leak the
-    # corpus-sized base cache in a long-lived session); the redundant
-    # unpersist after _materialize_release is a no-op
-    try:
+    # engine.fanout_repartition). Released when the scope exits, after
+    # the 1-row result below materializes.
+    with cache_scope() as hold:
+        base = hold(
+            fanout_repartition(
+                df.select(
+                    F.col(key_col).alias("__id"),
+                    F.col(group_col).alias("__g"),
+                    F.col(val_col).cast("double").alias("__v"),
+                    _draw(F.col(key_col), f"{salt}:").alias("__d"),
+                ).filter(F.col("__v").isNotNull()),
+                "__id",
+            )
+        )
         train = base.filter(F.col("__d") < t_train)
         calib = base.filter((F.col("__d") >= t_train) & (F.col("__d") < t_calib))
         test = base.filter(F.col("__d") >= t_calib)
@@ -839,15 +836,14 @@ def split_conformal_coverage(
         )
         # res feeds two actions (the count and the order statistic):
         # persist so the split + model + residual join runs once, and
-        # release before returning — the returned plan never reads res
-        res = (
-            calib.join(F.broadcast(model), "__g")
-            .select(
-                "__id", F.round(F.abs(F.col("__v") - F.col("__pred")), 4).alias("__r")
+        # release it before the scoring pass — the returned plan never
+        # reads res
+        with cache_scope() as hold_res:
+            res = hold_res(
+                calib.join(F.broadcast(model), "__g").select(
+                    "__id", F.round(F.abs(F.col("__v") - F.col("__pred")), 4).alias("__r")
+                )
             )
-            .persist()
-        )
-        try:
             n_calib = res.count()
             if n_calib == 0:
                 return spark.createDataFrame(
@@ -859,8 +855,6 @@ def split_conformal_coverage(
             q_hat = float(
                 res.orderBy("__r", "__id").offset(k - 1).limit(1).collect()[0]["__r"]
             )
-        finally:
-            res.unpersist()
 
         scored = test.join(F.broadcast(model), "__g").select(
             F.round(F.abs(F.col("__v") - F.col("__pred")), 4).alias("__r")
@@ -886,6 +880,4 @@ def split_conformal_coverage(
                 "coverage",
             )
         )
-        return _materialize_release(out, base)
-    finally:
-        base.unpersist(blocking=False)
+        return materialize(out)

@@ -32,14 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
+from ..engine import fanout_repartition, materialize, normalize_text
 
 
 def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """(w, cnt): every distinct word, char-segmented ('h e l l o'),
     with its corpus frequency."""
-    from .dedup import normalize_text
-
     # one narrow text-projection exchange ahead of the token explode
     # so the fan-out + partial word counts run at shuffle parallelism
     # rather than inside the scan stage (one task on a single-
@@ -105,7 +103,7 @@ def bpe_train(
     """Learn ``n_merges`` BPE merges; returns ``[(rank, pair, merged,
     pair_count)]`` in learned order. One distributed pair-count
     aggregation + a 1-row argmax collect per round."""
-    vocab = word_vocab(df, text_col).localCheckpoint(eager=True)
+    vocab = materialize(word_vocab(df, text_col))
     merges: list[tuple[int, str, str, int]] = []
     for k in range(n_merges):
         best = (
@@ -119,9 +117,9 @@ def bpe_train(
         pat, cnt = best[0].p, int(best[0].s)
         merged = pat.replace(" ", "")
         merges.append((k, pat, merged, cnt))
-        vocab = vocab.select(
-            _apply_merge(F.col("w"), pat, merged).alias("w"), "cnt"
-        ).localCheckpoint(eager=True)
+        vocab = materialize(
+            vocab.select(_apply_merge(F.col("w"), pat, merged).alias("w"), "cnt")
+        )
     return merges
 
 
@@ -131,8 +129,6 @@ def bpe_segment(
     """Apply a learned merge table to a text column; adds
     ``bpe_tokens`` (per-row subword count) — the map-only inference
     side of the trainer."""
-    from .dedup import normalize_text
-
     # char-segment the whole normalized text, keeping word boundaries
     # as a symbol that can never merge (the '␟' separator is not
     # produced by any pair)

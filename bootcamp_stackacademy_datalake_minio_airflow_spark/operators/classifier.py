@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
+from ..engine import cache_scope, fanout_repartition, materialize
 
 
 def train_embedding_classifier(
@@ -121,12 +121,8 @@ def logreg_gd_train(
     # while recomputation per step re-runs the caller's tokenization
     # and interpreted-HOF stopword filter. Measured at sf0.1 (r11):
     # calibration 5.6s -> see COVERAGE for the post-change number.
-    # try/finally so a raise anywhere between persist() and the
-    # materialize cannot leak the cache across invocations in a
-    # long-lived session (ADVICE r11 #1); the extra unpersist after a
-    # successful _materialize_release is a no-op.
-    feat = _gd_feat(df, label_col, feature_cols).persist()
-    try:
+    with cache_scope() as hold:
+        feat = hold(_gd_feat(df, label_col, feature_cols))
         w = _gd_fit(feat, len(feature_cols), lr, n_steps)
         if w is None:
             return spark.createDataFrame(
@@ -145,7 +141,6 @@ def logreg_gd_train(
         correct = (
             (_z(w) >= 0.0) == (F.col("__y") == 1.0)
         ).cast("int")
-        from .dedup import _materialize_release
 
         out = feat.agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -159,9 +154,7 @@ def logreg_gd_train(
             ],
             "accuracy",
         )
-        return _materialize_release(out, feat)
-    finally:
-        feat.unpersist(blocking=False)
+        return materialize(out)
 
 
 def _gd_feat(df: DataFrame, label_col, feature_cols: list) -> DataFrame:
@@ -238,9 +231,8 @@ def logreg_calibration_bins(
     spark = df.sparkSession
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
-    # leak-proof persist: see logreg_gd_train (ADVICE r11 #1)
-    feat = _gd_feat(df, label_col, feature_cols).persist()
-    try:
+    with cache_scope() as hold:
+        feat = hold(_gd_feat(df, label_col, feature_cols))
         w = _gd_fit(feat, len(feature_cols), lr, n_steps)
         if w is None:
             return spark.createDataFrame(
@@ -251,7 +243,6 @@ def logreg_calibration_bins(
             z = z + F.lit(w[j + 1]) * F.col(f"__x{j}")
         p6 = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
         b = F.least(F.floor(p6 * n_bins).cast("int"), F.lit(n_bins - 1))
-        from .dedup import _materialize_release
 
         out = (
             feat.select(b.alias("bin"), p6.alias("__p"), "__y")
@@ -262,9 +253,7 @@ def logreg_calibration_bins(
                 F.round(F.avg("__y"), 4).alias("frac_pos"),
             )
         )
-        return _materialize_release(out, feat)
-    finally:
-        feat.unpersist(blocking=False)
+        return materialize(out)
 
 
 # --- multinomial Naive Bayes (count-exact training -> oracle-replayable) -----
@@ -419,9 +408,8 @@ def logreg_auc_roc(
     class is absent, and the frame is empty on empty input. The feat
     frame persists across training + scoring (see logreg_gd_train)."""
     spark = df.sparkSession
-    # leak-proof persist: see logreg_gd_train (ADVICE r11 #1)
-    feat = _gd_feat(df, label_col, feature_cols).persist()
-    try:
+    with cache_scope() as hold:
+        feat = hold(_gd_feat(df, label_col, feature_cols))
         w = _gd_fit(feat, len(feature_cols), lr, n_steps)
         if w is None:
             return spark.createDataFrame(
@@ -453,7 +441,6 @@ def logreg_auc_roc(
             "__neg",
             F.coalesce(F.sum("__neg").over(wd), F.lit(0)).alias("__cneg"),
         )
-        from .dedup import _materialize_release
 
         out = cum.agg(
             F.sum("__pos").cast("long").alias("n_pos"),
@@ -475,9 +462,7 @@ def logreg_auc_roc(
                 ),
             ).alias("auc"),
         )
-        return _materialize_release(out, feat)
-    finally:
-        feat.unpersist(blocking=False)
+        return materialize(out)
 
 
 # --- depth-1 decision tree (CART root split) ----------------------------------
@@ -613,9 +598,8 @@ def isotonic_calibration_bins(
             f"n_bins must be in [1, 10000] (driver collect and the "
             f"O(n_bins^2) oracle replay are grid-bounded), got {n_bins}"
         )
-    # leak-proof persist: see logreg_gd_train (ADVICE r11 #1)
-    feat = _gd_feat(df, label_col, feature_cols).persist()
-    try:
+    with cache_scope() as hold:
+        feat = hold(_gd_feat(df, label_col, feature_cols))
         w = _gd_fit(feat, len(feature_cols), lr, n_steps)
         if w is None:
             return spark.createDataFrame([], schema)
@@ -636,8 +620,6 @@ def isotonic_calibration_bins(
             )
             .collect()  # bounded by n_bins, never by the data
         )
-    finally:
-        feat.unpersist(blocking=False)
     # PAV: pool adjacent blocks while the rate sequence decreases.
     # blocks: [bin_count, n, pos] — rates compared as cross products
     # (pos_a * n_b vs pos_b * n_a) so pooling decisions are INTEGER-

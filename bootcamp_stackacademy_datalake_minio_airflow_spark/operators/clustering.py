@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
+from ..engine import cache_scope, fanout_repartition
 from .multimodal import _round_half_away6
 
 #: hard ceiling on the codebook collect — k*dim rows, not corpus rows
@@ -98,19 +98,18 @@ def kmeans_lloyd_seeded(
     # report all re-read it (n_iter + 2 passes), and without the
     # exchange all of that per-row distance arithmetic runs inside
     # the scan stage — one task on a single-row-group parquet (guide
-    # §2.5 repartition-after-read; §5 persist-on-reuse). Released via
-    # the house materialize-release discipline below.
+    # §2.5 repartition-after-read; §5 persist-on-reuse). Released when
+    # the scope exits.
     vv_sql = _dbl(0.0)
     for i in range(dim):
         vv_sql = f"({vv_sql} + (__v[{i}] * __v[{i}]))"
-    base = (
-        df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-        .select(F.col(id_col).alias("__id"), vec.alias("__v"))
-        .transform(lambda d: fanout_repartition(d, "__id"))
-        .selectExpr("__id", "__v", f"{vv_sql} AS __vv")
-        .persist()
-    )
-    try:
+    with cache_scope() as hold:
+        base = hold(
+            df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
+            .select(F.col(id_col).alias("__id"), vec.alias("__v"))
+            .transform(lambda d: fanout_repartition(d, "__id"))
+            .selectExpr("__id", "__v", f"{vv_sql} AS __vv")
+        )
         # seeds: k smallest (md5(id), id) — codebook-sized collect
         seed_rows = (
             base.select(
@@ -159,8 +158,6 @@ def kmeans_lloyd_seeded(
         return spark.createDataFrame(
             rows, "cluster_id INT, n_points BIGINT, inertia DOUBLE"
         )
-    finally:
-        base.unpersist(blocking=False)
 
 
 def _lloyd_partials(base: DataFrame, centroids: dict[int, list[float]], want_inertia: bool):

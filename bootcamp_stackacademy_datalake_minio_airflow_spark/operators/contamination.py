@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
-
-from .dedup import normalize_text
+from ..engine import fanout_repartition, normalize_text
 
 
 def word_ngrams(toks: Column, n: int) -> Column:

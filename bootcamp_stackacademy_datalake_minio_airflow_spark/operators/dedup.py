@@ -19,6 +19,14 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine import (
+    _norm_base,
+    cache_scope,
+    fanout_repartition,
+    materialize,
+    normalize_text,
+)
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -47,13 +55,6 @@ def dedup_exact(df: DataFrame, cols: list[str], order_by: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # shingling + MinHash
 # ---------------------------------------------------------------------------
-
-
-def normalize_text(col: str | Column) -> Column:
-    """Lowercase + collapse whitespace — the canonical form all
-    fingerprint/dedup operators hash."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
 def _shingles_of(c: Column, n: int) -> Column:
@@ -98,81 +99,6 @@ def _word_shingles_of(c: Column, n: int) -> Column:
     idx = F.sequence(F.lit(1), F.greatest(F.size(w) - F.lit(n - 1), F.lit(1)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(w, i, n), " "))
-    )
-
-
-def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition a narrow frame on ``cols`` with an EXPLICIT
-    partition count — ``spark.sql.shuffle.partitions`` — ahead of a
-    CPU-heavy fan-out stage (explode × hash/regex per element).
-
-    Why explicit and not ``repartition(cols)``: AQE's partition
-    coalescing sizes post-shuffle partitions by BYTES
-    (``minPartitionSize``, 1 MB), so a kilobyte-scale exchange whose
-    downstream stage does 25-100x per-row fan-out work is folded back
-    to ONE partition — bytes are the proxy AQE trusts, and fan-out
-    compute defeats it (measured r12: the keyless form coalesced every
-    operator exchange on this lake to 1 partition; the explicit form
-    ran the GD feature build 35% faster warm at identical plans
-    otherwise). An explicit count is honored by AQE, and
-    ``spark.sql.shuffle.partitions`` is the deployment's scale knob
-    (set 2-3x total cores on a cluster per session.py), so stage
-    parallelism tracks the cluster, not a local constant — exactly
-    the non-AQE semantics every shuffle had before coalescing.
-
-    With no ``cols`` this is a round-robin exchange — the right form
-    when no near-unique key exists: hash-partitioning on a DATA VALUE
-    column (a measure, a raw text) collapses to a handful of
-    partitions the moment the value distribution degenerates
-    (constant column, duplicate-heavy corpus), recreating the serial
-    stage the exchange exists to break (guide §2.5; VERDICT r12 #3).
-    Round-robin placement is deterministic (sortBeforeRepartition)
-    and callers here feed global/grouped aggregates, so placement
-    cannot change any result.
-    """
-    # the conf may be non-numeric on deployments with auto-optimized
-    # shuffle ("auto"); fall back to the context's parallelism rather
-    # than breaking every operator routed through this helper
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *cols) if cols else df.repartition(n)
-
-
-def _norm_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(__id, __txt) with normalization materialized via an exchange
-    boundary so downstream per-element expressions read a concrete
-    column instead of re-running the regex per element.
-
-    NULL text is dropped at the scan (pushdown-friendly IsNotNull):
-    a NULL document cannot participate in text dedup, and letting it
-    through is actively wrong — Spark's NULL-skipping greatest() in
-    the gram builders turns a NULL token array into one EMPTY-STRING
-    gram, which then spuriously pairs with genuinely-empty documents
-    while an independent engine (whose unnest drops NULL lists)
-    emits nothing (found by the NULL tier of
-    tools/degenerate_data.py)."""
-    return fanout_repartition(
-        df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("__id"), normalize_text(text_col).alias("__txt")
-        ),
-        "__id",
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as an array column (single-expression form,
-    for per-row use). NOTE: higher-order functions are interpreted
-    (not codegen'd) in Spark — for corpus-scale signatures use the
-    explode/groupBy path inside ``minhash_lsh_pairs``, which stays in
-    whole-stage codegen and partial-aggregates map-side.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s, _i=i: F.xxhash64(s, F.lit(_i))))
-            for i in range(num_hashes)
-        ]
     )
 
 
@@ -250,31 +176,6 @@ def _minhash_table(hashes: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def _materialize_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Eagerly materialize a (candidate-pair-sized) result via
-    localCheckpoint, then unpersist the corpus-sized cached
-    intermediates it consumed.
-
-    The pair operators persist per-document tables that several later
-    joins re-reference; without an explicit release those caches
-    accumulate executor memory across invocations in a long-lived
-    session (a pipeline, the bench loop). The result is orders of
-    magnitude smaller than the inputs, so eager materialization is the
-    cheap side of the trade.
-
-    Trade-off, stated honestly: localCheckpoint truncates lineage into
-    executor-local storage, which is NOT fault tolerant — lose an
-    executor afterwards and the blocks can't recompute. For pair
-    results (tiny, cheap to re-derive by re-running the operator)
-    that's the right trade; for anything expensive to rebuild on an
-    unreliable cluster, write a parquet checkpoint instead.
-    """
-    out = result.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist(blocking=False)
-    return out
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two array columns (set semantics).
 
@@ -342,132 +243,133 @@ def minhash_lsh_pairs(
     # ~corpus-metadata-sized. Shingle SETS are never materialized for
     # the whole corpus: signatures use the duplicate-tolerant explode
     # path, and exact sets are built only for verification survivors.
-    norm = _norm_base(df, id_col, text_col).persist()
-    sig = _minhash_table(_shingle_hashes(norm, shingle_n), num_hashes).persist()
+    with cache_scope() as hold:
+        norm = hold(_norm_base(df, id_col, text_col))
+        sig = hold(_minhash_table(_shingle_hashes(norm, shingle_n), num_hashes))
 
-    # Stage 3+4a fused: band-collision candidate generation with the
-    # estimated-Jaccard prefilter evaluated INSIDE the join condition.
-    #
-    # The estimator is the fraction of agreeing minhashes, compared
-    # BYTE-wise on a packed form (8 hashes -> one long, low byte of
-    # each) that rides along in the banded rows. Why this shape:
-    #   - Evaluating est in the join condition kills false candidates
-    #     (bucket collisions at sim << threshold — millions on a
-    #     shared-vocabulary corpus) BEFORE the distinct shuffle, so
-    #     the wide exchange carries survivors only.
-    #   - Packing keeps the join's field count small; joining the full
-    #     64-long signatures would exceed spark.sql.codegen.maxFields
-    #     (100) and silently drop the pipeline out of whole-stage
-    #     codegen (~3x slower end to end, measured).
-    #   - Byte equality is an upward-biased proxy for hash equality
-    #     (unequal hashes collide per byte w.p. 1/256, adding <= ~0.004
-    #     to the estimate), so it can only ADMIT extra survivors —
-    #     recall of the exact verification stage is unaffected.
-    # Margin covers estimator variance (std ~= sqrt(s(1-s)/num_hashes)
-    # ~= 0.06 at s=0.7, so ~2 sigma) plus that bias. The wide column
-    # lists are SQL strings (one parse) — nested Column operators cost
-    # seconds of py4j round-trips at this width.
-    margin = 0.12
-    n_packs = (num_hashes + 7) // 8
+        # Stage 3+4a fused: band-collision candidate generation with the
+        # estimated-Jaccard prefilter evaluated INSIDE the join condition.
+        #
+        # The estimator is the fraction of agreeing minhashes, compared
+        # BYTE-wise on a packed form (8 hashes -> one long, low byte of
+        # each) that rides along in the banded rows. Why this shape:
+        #   - Evaluating est in the join condition kills false candidates
+        #     (bucket collisions at sim << threshold — millions on a
+        #     shared-vocabulary corpus) BEFORE the distinct shuffle, so
+        #     the wide exchange carries survivors only.
+        #   - Packing keeps the join's field count small; joining the full
+        #     64-long signatures would exceed spark.sql.codegen.maxFields
+        #     (100) and silently drop the pipeline out of whole-stage
+        #     codegen (~3x slower end to end, measured).
+        #   - Byte equality is an upward-biased proxy for hash equality
+        #     (unequal hashes collide per byte w.p. 1/256, adding <= ~0.004
+        #     to the estimate), so it can only ADMIT extra survivors —
+        #     recall of the exact verification stage is unaffected.
+        # Margin covers estimator variance (std ~= sqrt(s(1-s)/num_hashes)
+        # ~= 0.06 at s=0.7, so ~2 sigma) plus that bias. The wide column
+        # lists are SQL strings (one parse) — nested Column operators cost
+        # seconds of py4j round-trips at this width.
+        margin = 0.12
+        n_packs = (num_hashes + 7) // 8
 
-    def _pack_sql(k: int) -> str:
-        lanes = " | ".join(
-            f"shiftleft(h{8 * k + j} & 255, {8 * j})"
-            for j in range(min(8, num_hashes - 8 * k))
-        )
-        return f"({lanes})"
+        def _pack_sql(k: int) -> str:
+            lanes = " | ".join(
+                f"shiftleft(h{8 * k + j} & 255, {8 * j})"
+                for j in range(min(8, num_hashes - 8 * k))
+            )
+            return f"({lanes})"
 
-    # xxhash64, not hash(): the 32-bit murmur key would collide
-    # bucket-randomly at ~100M docs x bands scale (birthday on 2^32),
-    # inflating the compared-pair count; 64 bits keeps random
-    # collisions negligible as documented above
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bhash', xxhash64({b}, {cols}))".format(
-            b=b,
-            cols=", ".join(
-                f"h{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.selectExpr(
-        "__id",
-        *[f"{_pack_sql(k)} AS p{k}" for k in range(n_packs)],
-        f"explode(array({band_structs})) AS __b",
-    ).selectExpr(
-        "__id",
-        *[f"p{k}" for k in range(n_packs)],
-        "__b.band AS band",
-        "__b.bhash AS bhash",
-    )
-
-    # The estimator counts AGREEING bytes via a SWAR fold instead of
-    # one CASE WHEN per hash: per pack, fold each byte of the XOR down
-    # to its low bit (t |= t>>4; t |= t>>2; t |= t>>1), mask the
-    # byte-low-bits, and popcount — that's the number of DISagreeing
-    # bytes, 3 shifts/3 ors/1 and/1 bit_count per pack instead of 8
-    # shift/mask/compare/CASE chains. Measured 3.3x faster on the
-    # collision stream (the estimator runs once per colliding banded
-    # row — millions of times on a shared-vocabulary corpus — so its
-    # per-row cost dominates the candidate stage). agree/n >= t-margin
-    # (agree integral) means agree >= ceil(n*(t-margin)), i.e.
-    # disagree <= n - ceil(n*(t-margin)) — NOT floor(n*(1-t+margin)),
-    # which is one tighter whenever n*(t-margin) is exactly integral
-    # (n=100, t-m=0.55: 45 disagreeing bytes admissible, floor caps at
-    # 44 and drops boundary-true pairs before exact verification).
-    # Packs beyond num_hashes stay zero-padded: XOR of equal zero
-    # lanes contributes no disagreement, so the bound is exact.
-    def _swar_disagree(k: int) -> str:
-        x = f"(l.p{k} ^ r.p{k})"
-        t1 = f"({x} | shiftrightunsigned({x}, 4))"
-        t2 = f"({t1} | shiftrightunsigned({t1}, 2))"
-        t3 = f"({t2} | shiftrightunsigned({t2}, 1))"
-        # 72340172838076673 = 0x0101010101010101 (low bit of each byte)
-        return f"bit_count({t3} & 72340172838076673)"
-
-    lanes_used = sum(min(8, num_hashes - 8 * k) for k in range(n_packs))
-    assert lanes_used == num_hashes
-    disagree_sql = " + ".join(_swar_disagree(k) for k in range(n_packs))
-    max_disagree = _max_disagree(num_hashes, threshold, margin)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    prefiltered = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l.__id") < F.col("r.__id"))
-            & (F.expr(f"({disagree_sql}) <= {max_disagree}")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
-    )
-
-    # Stage 4b: exact verification on the (now small) survivor set.
-    # Shingle sets are computed HERE, after the candidate joins, so the
-    # interpreted transform() runs over candidate rows only — never the
-    # corpus. __txt is a concrete shuffled column (norm is behind an
-    # exchange), so the HOF reads it without re-evaluating upstream
-    # expressions per element.
-    verified = (
-        prefiltered.join(
-            norm.select(F.col("__id").alias("id_a"), F.col("__txt").alias("__ta")), "id_a"
-        )
-        .join(norm.select(F.col("__id").alias("id_b"), F.col("__txt").alias("__tb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                jaccard(
-                    _word_shingles_of(F.col("__ta"), shingle_n),
-                    _word_shingles_of(F.col("__tb"), shingle_n),
+        # xxhash64, not hash(): the 32-bit murmur key would collide
+        # bucket-randomly at ~100M docs x bands scale (birthday on 2^32),
+        # inflating the compared-pair count; 64 bits keeps random
+        # collisions negligible as documented above
+        band_structs = ", ".join(
+            "named_struct('band', {b}, 'bhash', xxhash64({b}, {cols}))".format(
+                b=b,
+                cols=", ".join(
+                    f"h{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
                 ),
-                4,
-            ).alias("jaccard_sim"),
+            )
+            for b in range(bands)
         )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-    return _materialize_release(verified, norm, sig)
+        banded = sig.selectExpr(
+            "__id",
+            *[f"{_pack_sql(k)} AS p{k}" for k in range(n_packs)],
+            f"explode(array({band_structs})) AS __b",
+        ).selectExpr(
+            "__id",
+            *[f"p{k}" for k in range(n_packs)],
+            "__b.band AS band",
+            "__b.bhash AS bhash",
+        )
+
+        # The estimator counts AGREEING bytes via a SWAR fold instead of
+        # one CASE WHEN per hash: per pack, fold each byte of the XOR down
+        # to its low bit (t |= t>>4; t |= t>>2; t |= t>>1), mask the
+        # byte-low-bits, and popcount — that's the number of DISagreeing
+        # bytes, 3 shifts/3 ors/1 and/1 bit_count per pack instead of 8
+        # shift/mask/compare/CASE chains. Measured 3.3x faster on the
+        # collision stream (the estimator runs once per colliding banded
+        # row — millions of times on a shared-vocabulary corpus — so its
+        # per-row cost dominates the candidate stage). agree/n >= t-margin
+        # (agree integral) means agree >= ceil(n*(t-margin)), i.e.
+        # disagree <= n - ceil(n*(t-margin)) — NOT floor(n*(1-t+margin)),
+        # which is one tighter whenever n*(t-margin) is exactly integral
+        # (n=100, t-m=0.55: 45 disagreeing bytes admissible, floor caps at
+        # 44 and drops boundary-true pairs before exact verification).
+        # Packs beyond num_hashes stay zero-padded: XOR of equal zero
+        # lanes contributes no disagreement, so the bound is exact.
+        def _swar_disagree(k: int) -> str:
+            x = f"(l.p{k} ^ r.p{k})"
+            t1 = f"({x} | shiftrightunsigned({x}, 4))"
+            t2 = f"({t1} | shiftrightunsigned({t1}, 2))"
+            t3 = f"({t2} | shiftrightunsigned({t2}, 1))"
+            # 72340172838076673 = 0x0101010101010101 (low bit of each byte)
+            return f"bit_count({t3} & 72340172838076673)"
+
+        lanes_used = sum(min(8, num_hashes - 8 * k) for k in range(n_packs))
+        assert lanes_used == num_hashes
+        disagree_sql = " + ".join(_swar_disagree(k) for k in range(n_packs))
+        max_disagree = _max_disagree(num_hashes, threshold, margin)
+        left = banded.alias("l")
+        right = banded.alias("r")
+        prefiltered = (
+            left.join(
+                right,
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col("l.bhash") == F.col("r.bhash"))
+                & (F.col("l.__id") < F.col("r.__id"))
+                & (F.expr(f"({disagree_sql}) <= {max_disagree}")),
+            )
+            .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
+            .distinct()
+        )
+
+        # Stage 4b: exact verification on the (now small) survivor set.
+        # Shingle sets are computed HERE, after the candidate joins, so the
+        # interpreted transform() runs over candidate rows only — never the
+        # corpus. __txt is a concrete shuffled column (norm is behind an
+        # exchange), so the HOF reads it without re-evaluating upstream
+        # expressions per element.
+        verified = (
+            prefiltered.join(
+                norm.select(F.col("__id").alias("id_a"), F.col("__txt").alias("__ta")), "id_a"
+            )
+            .join(norm.select(F.col("__id").alias("id_b"), F.col("__txt").alias("__tb")), "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.round(
+                    jaccard(
+                        _word_shingles_of(F.col("__ta"), shingle_n),
+                        _word_shingles_of(F.col("__tb"), shingle_n),
+                    ),
+                    4,
+                ).alias("jaccard_sim"),
+            )
+            .filter(F.col("jaccard_sim") >= threshold)
+        )
+        return materialize(verified)
 
 
 def dedup_minhash(
@@ -525,79 +427,75 @@ def connected_components(
     cluster. Pass ``driver_budget_edges=0`` to force the distributed
     path (the property tests assert both paths agree).
     """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .persist()
-    )
-    if driver_budget_edges > 0 and edges.count() <= driver_budget_edges:
-        # collect ALL rows (self-loops included, so an isolated (x, x)
-        # pair still yields node x — matching the distributed path),
-        # and preserve the caller's id type: node ids may be strings,
-        # and Python's min/< agree with Spark's ordering for both
-        # numeric and string types.
-        rows = edges.collect()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for u, v in rows:
-            if u == v:
-                continue
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                # union by smaller id so the root IS the min label
-                lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                parent[hi] = lo
-        nodes = {x for uv in rows for x in uv}
-        labels = [(n, find(n)) for n in sorted(nodes)]
-        spark = pairs.sparkSession
-        id_type = dict(pairs.dtypes)[src]
-        schema = f"node {id_type}, component {id_type}"
-        edges.unpersist(blocking=False)
-        return spark.createDataFrame(labels, schema)
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy(edges.u.alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
+    with cache_scope() as hold:
+        edges = hold(
+            pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+            .distinct()
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
+        if driver_budget_edges > 0 and edges.count() <= driver_budget_edges:
+            # collect ALL rows (self-loops included, so an isolated (x, x)
+            # pair still yields node x — matching the distributed path),
+            # and preserve the caller's id type: node ids may be strings,
+            # and Python's min/< agree with Spark's ordering for both
+            # numeric and string types.
+            rows = edges.collect()
+            parent: dict = {}
+
+            def find(x):
+                root = x
+                while parent.get(root, root) != root:
+                    root = parent[root]
+                while parent.get(x, x) != x:  # path compression
+                    parent[x], x = root, parent[x]
+                return root
+
+            for u, v in rows:
+                if u == v:
+                    continue
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    # union by smaller id so the root IS the min label
+                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
+                    parent[hi] = lo
+            nodes = {x for uv in rows for x in uv}
+            labels = [(n, find(n)) for n in sorted(nodes)]
+            spark = pairs.sparkSession
+            id_type = dict(pairs.dtypes)[src]
+            schema = f"node {id_type}, component {id_type}"
+            return spark.createDataFrame(labels, schema)
+        labels = materialize(
+            edges.select(F.col("u").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
+        )
+        converged = False
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.v == labels.node)
+                .groupBy(edges.u.alias("node"))
+                .agg(F.min("component").alias("nbr_min"))
             )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist(blocking=False)
+            new_labels = materialize(
+                labels.join(neighbor_min, "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+                    ).alias("component"),
+                )
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .limit(1)
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
     if not converged:
         # min-label propagation moves a label one hop per round, so a
         # chain longer than max_iter would exit with one real cluster
@@ -612,32 +510,6 @@ def connected_components(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash64(col: str | Column) -> Column:
-    """64-bit SimHash over whitespace tokens of the normalized text.
-
-    For each bit b: sum +1/-1 over token hashes' bit b; bit set in the
-    output if the sum is positive. Single-expression form for per-row
-    use; ``_simhash_table`` below is the corpus-scale path.
-    """
-    tokens = F.split(normalize_text(col), " ")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    out = F.lit(0).cast("long")
-    for b in range(64):
-
-        def _bit(acc: Column, h: Column, _b: int = b) -> Column:
-            return acc + F.when(
-                F.shiftright(h, _b).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        bit_sum = F.aggregate(hashes, F.lit(0), _bit)
-        out = out.bitwiseOR(
-            F.when(bit_sum > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
 
 
 def _simhash_table(
@@ -716,46 +588,47 @@ def simhash_pairs(
     """
     width = 64 // blocks
     # persisted: the block self-join references this table twice
-    sh = _simhash_table(df, id_col, text_col, hash_fn=hash_fn).persist()
-    mask = (1 << width) - 1
-    blocked = sh.select(
-        "__id",
-        "__sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("blk"),
-                        F.shiftright(F.col("__sim"), b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bval"),
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("__b"),
-    ).select("__id", "__sim", "__b.blk", "__b.bval")
+    with cache_scope() as hold:
+        sh = hold(_simhash_table(df, id_col, text_col, hash_fn=hash_fn))
+        mask = (1 << width) - 1
+        blocked = sh.select(
+            "__id",
+            "__sim",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("blk"),
+                            F.shiftright(F.col("__sim"), b * width)
+                            .bitwiseAND(F.lit(mask))
+                            .alias("bval"),
+                        )
+                        for b in range(blocks)
+                    ]
+                )
+            ).alias("__b"),
+        ).select("__id", "__sim", "__b.blk", "__b.bval")
 
-    l, r = blocked.alias("l"), blocked.alias("r")
-    # exact-hamming check INSIDE the join condition: false block
-    # collisions die before the distinct shuffle, which then carries
-    # true near-dup pairs only
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.bval") == F.col("r.bval"))
-            & (F.col("l.__id") < F.col("r.__id"))
-            & (hamming64(F.col("l.__sim"), F.col("r.__sim")) <= max_hamming),
+        l, r = blocked.alias("l"), blocked.alias("r")
+        # exact-hamming check INSIDE the join condition: false block
+        # collisions die before the distinct shuffle, which then carries
+        # true near-dup pairs only
+        pairs = (
+            l.join(
+                r,
+                (F.col("l.blk") == F.col("r.blk"))
+                & (F.col("l.bval") == F.col("r.bval"))
+                & (F.col("l.__id") < F.col("r.__id"))
+                & (hamming64(F.col("l.__sim"), F.col("r.__sim")) <= max_hamming),
+            )
+            .select(
+                F.col("l.__id").alias("id_a"),
+                F.col("r.__id").alias("id_b"),
+                hamming64(F.col("l.__sim"), F.col("r.__sim")).alias("hamming"),
+            )
+            .distinct()
         )
-        .select(
-            F.col("l.__id").alias("id_a"),
-            F.col("r.__id").alias("id_b"),
-            hamming64(F.col("l.__sim"), F.col("r.__sim")).alias("hamming"),
-        )
-        .distinct()
-    )
-    return _materialize_release(pairs, sh)
+        return materialize(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -787,15 +660,16 @@ def _threshold_10k(threshold: float) -> int:
 
 
 def _gram_prefix_index(
-    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
+    hold, df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
 ):
     """Shared gram-index scaffolding of the set-similarity joins
     (factored out of ngram_jaccard_pairs / ngram_containment_pairs so
     the integer-arithmetic prefix budget is defined exactly once).
 
     Returns ``(base, inv, prefix)``:
-    - ``base``: (__id, __g) distinct word-n-gram arrays, PERSISTED —
-      the caller must release it via ``_materialize_release``;
+    - ``base``: (__id, __g) distinct word-n-gram arrays, persisted
+      through the caller's ``hold`` (``engine.cache_scope``), which
+      releases it;
     - ``inv``: (__id, __sz, gram) full inverted index;
     - ``prefix``: (__id, gram, __sz, __rk) limited to each document's
       ``|A| - ceil(t|A|) + 1`` globally-rarest grams (ascending
@@ -825,7 +699,7 @@ def _gram_prefix_index(
     )
     # persisted: the inverted-index join and the verification joins
     # re-reference the gram sets
-    base = norm.select("__id", grams.alias("__g")).persist()
+    base = hold(norm.select("__id", grams.alias("__g")))
     inv = base.select("__id", F.size("__g").alias("__sz"), F.explode("__g").alias("gram"))
     # document frequency stays agg + join back, NOT a window over
     # gram partitions: a window count saves one exchange (measured
@@ -867,54 +741,57 @@ def ngram_jaccard_pairs(
     and filters on the UNROUNDED value (display is rounded), so
     candidate pruning and acceptance agree at every boundary.
     """
-    base, _inv, prefix = _gram_prefix_index(df, id_col, text_col, n, threshold)
-    T = _threshold_10k(threshold)
-    l, r = prefix.alias("l"), prefix.alias("r")
-    # Two lossless cuts inside the candidate join, BEFORE the distinct
-    # + gram-array verification join (at corpus scale that join's
-    # shuffle carries the full gram sets, so every candidate killed
-    # here halves the operator's dominant traffic):
-    #   - size-ratio: J <= min(|A|,|B|)/max(|A|,|B|), so J >= t
-    #     requires min >= t*max. Sizes ride along the prefix rows.
-    #   - positional (PPJoin): on a match at prefix positions
-    #     (rka, rkb), the overlap is bounded by
-    #     1 + min(|A|-rka, |B|-rkb) (everything shared beyond this
-    #     gram sits after it in both df-sorted prefixes), while
-    #     J >= t forces overlap >= ceil(t/(1+t) * (|A|+|B|)). Any
-    #     J >= t pair still survives via its FIRST shared prefix
-    #     gram, where the bound is tightest-but-sufficient.
-    overlap_ub = 1 + F.least(
-        F.col("l.__sz") - F.col("l.__rk"), F.col("r.__sz") - F.col("r.__rk")
-    )
-    # ceil(t/(1+t) * (|A|+|B|)) as exact integers: T*(sa+sb) / (10000+T),
-    # rounded up — the float form ceil(0.375 * s) was only safe by the
-    # accident of 0.6/1.6 being exactly representable
-    overlap_req = _int_div(
-        F.lit(T) * (F.col("l.__sz") + F.col("r.__sz")) + F.lit(10000 + T - 1),
-        10000 + T,
-    )
-    cand = (
-        l.join(
-            r,
-            (F.col("l.gram") == F.col("r.gram"))
-            & (F.col("l.__id") < F.col("r.__id"))
-            & (
-                F.least(F.col("l.__sz"), F.col("r.__sz")) * 10000
-                >= F.lit(T) * F.greatest(F.col("l.__sz"), F.col("r.__sz"))
-            )
-            & (overlap_ub >= overlap_req),
+    with cache_scope() as hold:
+        base, _inv, prefix = _gram_prefix_index(
+            hold, df, id_col, text_col, n, threshold
         )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
-    )
-    verified = (
-        cand.join(base.withColumnRenamed("__id", "id_a").withColumnRenamed("__g", "g_a"), "id_a")
-        .join(base.withColumnRenamed("__id", "id_b").withColumnRenamed("__g", "g_b"), "id_b")
-        .select("id_a", "id_b", jaccard(F.col("g_a"), F.col("g_b")).alias("__j"))
-        .filter(F.col("__j") >= threshold)
-        .select("id_a", "id_b", F.round("__j", 4).alias("jaccard_sim"))
-    )
-    return _materialize_release(verified, base)
+        T = _threshold_10k(threshold)
+        l, r = prefix.alias("l"), prefix.alias("r")
+        # Two lossless cuts inside the candidate join, BEFORE the distinct
+        # + gram-array verification join (at corpus scale that join's
+        # shuffle carries the full gram sets, so every candidate killed
+        # here halves the operator's dominant traffic):
+        #   - size-ratio: J <= min(|A|,|B|)/max(|A|,|B|), so J >= t
+        #     requires min >= t*max. Sizes ride along the prefix rows.
+        #   - positional (PPJoin): on a match at prefix positions
+        #     (rka, rkb), the overlap is bounded by
+        #     1 + min(|A|-rka, |B|-rkb) (everything shared beyond this
+        #     gram sits after it in both df-sorted prefixes), while
+        #     J >= t forces overlap >= ceil(t/(1+t) * (|A|+|B|)). Any
+        #     J >= t pair still survives via its FIRST shared prefix
+        #     gram, where the bound is tightest-but-sufficient.
+        overlap_ub = 1 + F.least(
+            F.col("l.__sz") - F.col("l.__rk"), F.col("r.__sz") - F.col("r.__rk")
+        )
+        # ceil(t/(1+t) * (|A|+|B|)) as exact integers: T*(sa+sb) / (10000+T),
+        # rounded up — the float form ceil(0.375 * s) was only safe by the
+        # accident of 0.6/1.6 being exactly representable
+        overlap_req = _int_div(
+            F.lit(T) * (F.col("l.__sz") + F.col("r.__sz")) + F.lit(10000 + T - 1),
+            10000 + T,
+        )
+        cand = (
+            l.join(
+                r,
+                (F.col("l.gram") == F.col("r.gram"))
+                & (F.col("l.__id") < F.col("r.__id"))
+                & (
+                    F.least(F.col("l.__sz"), F.col("r.__sz")) * 10000
+                    >= F.lit(T) * F.greatest(F.col("l.__sz"), F.col("r.__sz"))
+                )
+                & (overlap_ub >= overlap_req),
+            )
+            .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
+            .distinct()
+        )
+        verified = (
+            cand.join(base.withColumnRenamed("__id", "id_a").withColumnRenamed("__g", "g_a"), "id_a")
+            .join(base.withColumnRenamed("__id", "id_b").withColumnRenamed("__g", "g_b"), "id_b")
+            .select("id_a", "id_b", jaccard(F.col("g_a"), F.col("g_b")).alias("__j"))
+            .filter(F.col("__j") >= threshold)
+            .select("id_a", "id_b", F.round("__j", 4).alias("jaccard_sim"))
+        )
+        return materialize(verified)
 
 
 def cross_doc_ngram_stats(
@@ -1047,40 +924,43 @@ def ngram_containment_pairs(
     engines verify on the EXACT unrounded ratio (display rounded),
     so candidate pruning and acceptance agree at every boundary.
     """
-    base, inv, prefix = _gram_prefix_index(df, id_col, text_col, n, threshold)
-    T = _threshold_10k(threshold)
-    a, b = prefix.alias("a"), inv.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.__id") != F.col("b.__id"))
-            & (F.col("b.__sz") * 10000 >= F.lit(T) * F.col("a.__sz")),
+    with cache_scope() as hold:
+        base, inv, prefix = _gram_prefix_index(
+            hold, df, id_col, text_col, n, threshold
         )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
-    verified = (
-        cand.join(
-            base.withColumnRenamed("__id", "id_a").withColumnRenamed("__g", "g_a"),
-            "id_a",
+        T = _threshold_10k(threshold)
+        a, b = prefix.alias("a"), inv.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.gram") == F.col("b.gram"))
+                & (F.col("a.__id") != F.col("b.__id"))
+                & (F.col("b.__sz") * 10000 >= F.lit(T) * F.col("a.__sz")),
+            )
+            .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+            .distinct()
         )
-        .join(
-            base.withColumnRenamed("__id", "id_b").withColumnRenamed("__g", "g_b"),
-            "id_b",
+        verified = (
+            cand.join(
+                base.withColumnRenamed("__id", "id_a").withColumnRenamed("__g", "g_a"),
+                "id_a",
+            )
+            .join(
+                base.withColumnRenamed("__id", "id_b").withColumnRenamed("__g", "g_b"),
+                "id_b",
+            )
+            .select(
+                "id_a",
+                "id_b",
+                (
+                    F.size(F.array_intersect("g_a", "g_b"))
+                    / F.size("g_a").cast("double")
+                ).alias("__c"),
+            )
+            .filter(F.col("__c") >= threshold)
+            .select("id_a", "id_b", F.round("__c", 4).alias("containment"))
         )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("g_a", "g_b"))
-                / F.size("g_a").cast("double")
-            ).alias("__c"),
-        )
-        .filter(F.col("__c") >= threshold)
-        .select("id_a", "id_b", F.round("__c", 4).alias("containment"))
-    )
-    return _materialize_release(verified, base)
+        return materialize(verified)
 
 
 def cdc_chunk_stats(
@@ -1332,74 +1212,75 @@ def dup_span_stats(
     unsplittable). Span assembly is a per-DOCUMENT ordered window
     (partitioned — bounded by document length), then two partial-
     aggregable groupBys. The hashed position stream feeds both the
-    count and the join, so it is persisted once and released via the
-    materialize-release discipline. md5 family: DuckDB replays every
+    count and the join, so it is held once in an ``engine.cache_scope``
+    and released after the result materializes. md5 family: DuckDB replays every
     stage, so the oracle hash-gates spans, not just counts.
     """
     from pyspark import StorageLevel
 
-    norm = _norm_base(df, id_col, text_col).filter(
-        F.length("__txt") >= gram_len
-    )
-    n_pos = F.length("__txt") - F.lit(gram_len - 1)
-    pos = (
-        norm.select(
-            "__id",
-            F.length("__txt").alias("__dlen"),
-            "__txt",
-            F.explode(F.sequence(F.lit(1), n_pos)).alias("__i"),
+    with cache_scope() as hold:
+        norm = _norm_base(df, id_col, text_col).filter(
+            F.length("__txt") >= gram_len
         )
-        .select(
-            "__id",
-            "__dlen",
-            "__i",
-            F.md5(F.substr(F.col("__txt"), F.col("__i"), F.lit(gram_len))).alias(
-                "__h"
+        n_pos = F.length("__txt") - F.lit(gram_len - 1)
+        pos = hold(
+            norm.select(
+                "__id",
+                F.length("__txt").alias("__dlen"),
+                "__txt",
+                F.explode(F.sequence(F.lit(1), n_pos)).alias("__i"),
+            )
+            .select(
+                "__id",
+                "__dlen",
+                "__i",
+                F.md5(F.substr(F.col("__txt"), F.col("__i"), F.lit(gram_len))).alias(
+                    "__h"
+                ),
             ),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dup = (
-        pos.groupBy("__h")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") >= 2)
-        .select("__h")
-    )
-    hits = pos.join(dup, "__h").select("__id", "__dlen", "__i")
-    wkey = Window.partitionBy("__id").orderBy("__i")
-    prev_max = F.max("__i").over(
-        wkey.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    flagged = hits.withColumn(
-        "__new",
-        F.when(
-            prev_max.isNull() | (F.col("__i") > prev_max + F.lit(gram_len)),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    isl = flagged.withColumn(
-        "__isl",
-        F.sum("__new").over(wkey.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    spans = isl.groupBy("__id", "__dlen", "__isl").agg(
-        F.min("__i").alias("__s"),
-        (F.max("__i") + F.lit(gram_len - 1)).alias("__e"),
-    )
-    out = (
-        spans.groupBy("__id", "__dlen")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_spans"),
-            F.sum(F.col("__e") - F.col("__s") + 1).cast("long").alias(
-                "dup_chars"
-            ),
+        dup = (
+            pos.groupBy("__h")
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .filter(F.col("__c") >= 2)
+            .select("__h")
         )
-        .select(
-            F.col("__id").alias(id_col),
-            "n_spans",
-            "dup_chars",
-            (
-                F.round(F.col("dup_chars") / F.col("__dlen"), 4) + F.lit(0.0)
-            ).alias("dup_fraction"),
+        hits = pos.join(dup, "__h").select("__id", "__dlen", "__i")
+        wkey = Window.partitionBy("__id").orderBy("__i")
+        prev_max = F.max("__i").over(
+            wkey.rowsBetween(Window.unboundedPreceding, -1)
         )
-    )
-    return _materialize_release(out, pos)
+        flagged = hits.withColumn(
+            "__new",
+            F.when(
+                prev_max.isNull() | (F.col("__i") > prev_max + F.lit(gram_len)),
+                F.lit(1),
+            ).otherwise(F.lit(0)),
+        )
+        isl = flagged.withColumn(
+            "__isl",
+            F.sum("__new").over(wkey.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+        spans = isl.groupBy("__id", "__dlen", "__isl").agg(
+            F.min("__i").alias("__s"),
+            (F.max("__i") + F.lit(gram_len - 1)).alias("__e"),
+        )
+        out = (
+            spans.groupBy("__id", "__dlen")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_spans"),
+                F.sum(F.col("__e") - F.col("__s") + 1).cast("long").alias(
+                    "dup_chars"
+                ),
+            )
+            .select(
+                F.col("__id").alias(id_col),
+                "n_spans",
+                "dup_chars",
+                (
+                    F.round(F.col("dup_chars") / F.col("__dlen"), 4) + F.lit(0.0)
+                ).alias("dup_fraction"),
+            )
+        )
+        return materialize(out)

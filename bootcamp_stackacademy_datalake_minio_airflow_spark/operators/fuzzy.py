@@ -128,7 +128,7 @@ def fuzzy_neighbor_counts(
             "all pairs"
         )
     variants_of = deletion_variants if max_distance == 1 else deletion_variants_k2
-    from .dedup import fanout_repartition
+    from ..engine import fanout_repartition
 
     base = df.select(
         F.col(id_col).alias("__id"), F.col(name_col).alias("__nm")
@@ -141,7 +141,7 @@ def fuzzy_neighbor_counts(
     # same exchange count — while defeating AQE's byte-based coalesce,
     # which folded this KB-sized-but-levenshtein-heavy join down to
     # one task (the whole DP verify ran serially; guide §2.5 / the
-    # fanout_repartition rationale in operators/dedup.py)
+    # fanout_repartition rationale in engine.py)
     idx = fanout_repartition(
         fanout_repartition(names, "__nm")
         .select("__nm", F.explode(variants_of(F.col("__nm"))).alias("__v"))

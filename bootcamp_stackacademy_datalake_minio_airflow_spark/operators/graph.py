@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
+from ..engine import cache_scope, fanout_repartition, materialize
 
 
 def cooccurrence_edges(
@@ -78,7 +78,7 @@ def cooccurrence_edges(
         # SLOWER at sf0.1 (label-prop 2.18->3.03s, triangles
         # 3.41->4.58s standalone A/B): many small per-round jobs paid
         # 32-task scheduling for no CPU-fan-out gain. Explicit N stays
-        # reserved for fan-out stages (see dedup.fanout_repartition).
+        # reserved for fan-out stages (see engine.fanout_repartition).
         return pairs.repartition(partition_by) if partition_by else pairs
     if partition_by is not None:
         # keyless on purpose — see the dedup=False branch note above
@@ -125,73 +125,65 @@ def pagerank(
     unpersists the input, so a cache shared across several graph
     algorithms survives the call.
     """
-    e = edges if external_edge_cache else edges.cache()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")).cache()
-    # the node set IS deg's key set (symmetric edges: every node has an
-    # out-edge) — deriving it from the |V|-row degree table instead of
-    # a second distinct over the |E|-row edge set saves a full edge
-    # shuffle in the build phase
-    nodes = deg.select(F.col("src").alias("node"))
-    n = deg.count()
-    if n == 0:
-        # empty edge set (e.g. every group holds a single item):
-        # return an empty frame with the output schema instead of a
-        # driver-side ZeroDivisionError
-        deg.unpersist()
-        if not external_edge_cache:
-            e.unpersist()
-        return nodes.select(
-            "node", F.lit(0.0).alias("rank")
-        ).select("node", F.round("rank", out_round).alias("pagerank"))
-    base = (1.0 - damping) / n
-    small = n <= broadcast_rank_budget
-    hint = F.broadcast if small else (lambda df: df)
-    # Partition the edge+degree table by the PER-ITERATION aggregation
-    # key. In the broadcast regime the rank join is map-only, so
-    # dst-partitioning flows through the project into
-    # groupBy("node"=dst) and each iteration exchanges NOTHING but the
-    # tiny rank vector — pinning by src (the join key) instead would
-    # re-shuffle the full contribution stream every iteration (5
-    # shuffles of |E| rows; measured ~2x slower at sf0.1). Past the
-    # budget the join itself must shuffle on src, so src-partitioning
-    # is the one worth pinning; deg is |V| rows and rides the same
-    # broadcast budget. When the caller already partitioned the edges
-    # by dst (cooccurrence_edges(partition_by="dst")), ce is just a
-    # broadcast-degree decoration of the cached edge set — two
-    # map-side ops per iteration, no extra exchange, no second cache
-    # holding a full copy of |E|.
-    if small and edges_prepartitioned:
-        ce = e.join(hint(deg), "src")
-        iter_caches: tuple[DataFrame, ...] = (deg,) if external_edge_cache else (deg, e)
-    else:
-        ce = (
-            e.join(hint(deg), "src")
-            .repartition("dst" if small else "src")  # keyless on purpose: iterative consumer (see cooccurrence_edges note)
-            .cache()
-        )
-        iter_caches = (ce, deg) if external_edge_cache else (ce, deg, e)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
-        ranks = (
-            ce.join(hint(ranks), ce.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("__outdeg")).alias("__c"),
+    with cache_scope() as hold:
+        e = edges if external_edge_cache else hold(edges)
+        deg = hold(e.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")))
+        # the node set IS deg's key set (symmetric edges: every node has an
+        # out-edge) — deriving it from the |V|-row degree table instead of
+        # a second distinct over the |E|-row edge set saves a full edge
+        # shuffle in the build phase
+        nodes = deg.select(F.col("src").alias("node"))
+        n = deg.count()
+        if n == 0:
+            # empty edge set (e.g. every group holds a single item):
+            # return an empty frame with the output schema instead of a
+            # driver-side ZeroDivisionError
+            return nodes.select(
+                "node", F.lit(0.0).alias("rank")
+            ).select("node", F.round("rank", out_round).alias("pagerank"))
+        base = (1.0 - damping) / n
+        small = n <= broadcast_rank_budget
+        hint = F.broadcast if small else (lambda df: df)
+        # Partition the edge+degree table by the PER-ITERATION aggregation
+        # key. In the broadcast regime the rank join is map-only, so
+        # dst-partitioning flows through the project into
+        # groupBy("node"=dst) and each iteration exchanges NOTHING but the
+        # tiny rank vector — pinning by src (the join key) instead would
+        # re-shuffle the full contribution stream every iteration (5
+        # shuffles of |E| rows; measured ~2x slower at sf0.1). Past the
+        # budget the join itself must shuffle on src, so src-partitioning
+        # is the one worth pinning; deg is |V| rows and rides the same
+        # broadcast budget. When the caller already partitioned the edges
+        # by dst (cooccurrence_edges(partition_by="dst")), ce is just a
+        # broadcast-degree decoration of the cached edge set — two
+        # map-side ops per iteration, no extra exchange, no second cache
+        # holding a full copy of |E|.
+        if small and edges_prepartitioned:
+            ce = e.join(hint(deg), "src")
+        else:
+            ce = hold(
+                e.join(hint(deg), "src")
+                .repartition("dst" if small else "src")  # keyless on purpose: iterative consumer (see cooccurrence_edges note)
             )
-            .groupBy("node")
-            .agg(
-                F.round(
-                    F.lit(base) + F.lit(damping) * F.sum("__c"), state_round
-                ).alias("rank")
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+        for _ in range(iters):
+            ranks = (
+                ce.join(hint(ranks), ce.src == ranks.node)
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") / F.col("__outdeg")).alias("__c"),
+                )
+                .groupBy("node")
+                .agg(
+                    F.round(
+                        F.lit(base) + F.lit(damping) * F.sum("__c"), state_round
+                    ).alias("rank")
+                )
             )
-        )
-    out = ranks.select("node", F.round("rank", out_round).alias("pagerank"))
-    # materialize (|V| rows) before releasing the cached edge tables
-    # the lazy 5-join plan references — same memory discipline as the
-    # dedup pair operators
-    from .dedup import _materialize_release
-
-    return _materialize_release(out, *iter_caches)
+        out = ranks.select("node", F.round("rank", out_round).alias("pagerank"))
+        # materialize (|V| rows) before the scope releases the cached
+        # edge tables the lazy 5-join plan references
+        return materialize(out)
 
 
 def label_propagation(
@@ -221,42 +213,38 @@ def label_propagation(
     the label join degrades to a co-partitioned shuffle join, like
     pagerank.
     """
-    nodes = edges.select(F.col("dst").alias("node")).distinct().cache()
-    n = nodes.count()
-    small = n <= broadcast_label_budget
-    hint = F.broadcast if small else (lambda df: df)
-    # cache exactly ONE form of the edge set (caching the raw edges
-    # and then a repartition of them would fill both); under
-    # external_edge_cache the caller owns the materialization
-    # (suites/graph_shared.py) and nothing here caches or unpersists it
-    if small and edges_prepartitioned:
-        e = edges if external_edge_cache else edges.cache()
-    else:
-        # keyless on purpose: iterative consumer (see cooccurrence_edges note)
-        e = edges.repartition("dst" if small else "src").cache()
-        external_edge_cache = False  # the repartitioned copy is ours
-    labels = nodes.select("node", F.col("node").alias("lab"))
-    for _ in range(iters):
-        votes = e.join(hint(labels), e.src == labels.node).select(
-            F.col("dst").alias("n"), "lab"
-        )
-        # ONE aggregation per round (r13): mode(lab, deterministic) IS
-        # the per-node argmax with ties to the LOWEST label — the
-        # exact (count DESC, label ASC) rule the old count-then-
-        # max(struct) pair computed in TWO exchanges per iteration
-        # (hashpartitioning(n,lab) then hashpartitioning(n), verified
-        # in the executed plan). mode partial-aggregates its count
-        # map map-side, so shuffle bytes stay comparable and the
-        # per-round stage count halves (guide §2.4 remove shuffles).
-        labels = votes.groupBy("n").agg(
-            F.expr("mode(lab, true)").alias("lab")
-        ).select(F.col("n").alias("node"), "lab")
-    out = labels.select("node", F.col("lab").alias("community"))
-    from .dedup import _materialize_release
-
-    if external_edge_cache:
-        return _materialize_release(out, nodes)
-    return _materialize_release(out, e, nodes)
+    with cache_scope() as hold:
+        nodes = hold(edges.select(F.col("dst").alias("node")).distinct())
+        n = nodes.count()
+        small = n <= broadcast_label_budget
+        hint = F.broadcast if small else (lambda df: df)
+        # cache exactly ONE form of the edge set (caching the raw edges
+        # and then a repartition of them would fill both); under
+        # external_edge_cache the caller owns the materialization
+        # (suites/graph_shared.py) and nothing here caches or unpersists it
+        if small and edges_prepartitioned:
+            e = edges if external_edge_cache else hold(edges)
+        else:
+            # keyless on purpose: iterative consumer (see cooccurrence_edges note)
+            e = hold(edges.repartition("dst" if small else "src"))
+        labels = nodes.select("node", F.col("node").alias("lab"))
+        for _ in range(iters):
+            votes = e.join(hint(labels), e.src == labels.node).select(
+                F.col("dst").alias("n"), "lab"
+            )
+            # ONE aggregation per round (r13): mode(lab, deterministic) IS
+            # the per-node argmax with ties to the LOWEST label — the
+            # exact (count DESC, label ASC) rule the old count-then-
+            # max(struct) pair computed in TWO exchanges per iteration
+            # (hashpartitioning(n,lab) then hashpartitioning(n), verified
+            # in the executed plan). mode partial-aggregates its count
+            # map map-side, so shuffle bytes stay comparable and the
+            # per-round stage count halves (guide §2.4 remove shuffles).
+            labels = votes.groupBy("n").agg(
+                F.expr("mode(lab, true)").alias("lab")
+            ).select(F.col("n").alias("node"), "lab")
+        out = labels.select("node", F.col("lab").alias("community"))
+        return materialize(out)
 
 
 def k_core(
@@ -291,14 +279,13 @@ def k_core(
     # round-0 state: a caller whose edge stream is already eagerly
     # materialized (the shared co-occurrence projection) skips the
     # initial copy — the first round's joins read it directly
-    e = edges if edges_materialized else edges.localCheckpoint(eager=True)
+    e = edges if edges_materialized else materialize(edges)
     for _ in range(rounds):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
         keep = deg.filter(F.col("__deg") >= k).select(F.col("src").alias("node"))
-        e = (
+        e = materialize(
             e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
         )
     deg_final = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree"))
     # converged iff the last round deleted nothing: every survivor of
@@ -346,9 +333,9 @@ def triangle_counts(
       AQE-eligible, no driver state. This is the 100 TB path; the
       orientation bound keeps it hub-safe.
 
-    Cached intermediates are materialize-released, so repeated
-    invocation in a long-lived session doesn't accumulate executor
-    memory.
+    Cached intermediates live in an ``engine.cache_scope`` and are
+    released once the result materializes, so repeated invocation in
+    a long-lived session doesn't accumulate executor memory.
 
     Returns (node, n_triangles) for every node in ≥1 triangle.
     """
@@ -370,172 +357,169 @@ def triangle_counts(
     # shared projection) — skip the dedup exchange and the second
     # cache; both und consumers (degree agg, orientation join) read
     # the caller's materialized table map-side instead.
-    if edges_canonical:
-        canon = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    else:
-        canon = edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+    with cache_scope() as hold:
+        if edges_canonical:
+            canon = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        else:
+            canon = edges.select(
+                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+            )
+        und = canon.filter(F.col("u") < F.col("v"))
+        if not edges_distinct:
+            und = hold(und.distinct())
+        # regime decision up front (the count fills und's cache): the
+        # broadcast hints — degree table for orientation, adjacency for
+        # the intersection — are only legal under the budget. |V| <= 2|E|,
+        # so the edge count bounds both. Past the budget NOTHING is
+        # broadcast or collected; orientation and closing run as
+        # spillable shuffle joins (found in review: the degree broadcast
+        # used to be unconditional, collecting |V| rows to the driver on
+        # the very graphs the scale path exists for).
+        # ``edge_count_hint`` must be a true UPPER bound on |E| (callers
+        # can assert one cheaply, e.g. rows-in x max-group-size for a
+        # bounded-group co-occurrence build). When the bound already fits
+        # the budget the probe job is skipped and the cache fills under
+        # the first real consumer; an over-estimate merely falls back to
+        # the probe, so a conservative bound is always safe.
+        if edge_count_hint is not None and edge_count_hint <= broadcast_edge_budget:
+            small = True
+        else:
+            small = und.count() <= broadcast_edge_budget
+        hint = F.broadcast if small else (lambda df: df)
+        deg = (
+            und.select(F.col("u").alias("n"))
+            .unionAll(und.select(F.col("v").alias("n")))
+            .groupBy("n")
+            .agg(F.count("*").alias("deg"))
         )
-    und = canon.filter(F.col("u") < F.col("v"))
-    if not edges_distinct:
-        und = und.distinct().cache()
-    # regime decision up front (the count fills und's cache): the
-    # broadcast hints — degree table for orientation, adjacency for
-    # the intersection — are only legal under the budget. |V| <= 2|E|,
-    # so the edge count bounds both. Past the budget NOTHING is
-    # broadcast or collected; orientation and closing run as
-    # spillable shuffle joins (found in review: the degree broadcast
-    # used to be unconditional, collecting |V| rows to the driver on
-    # the very graphs the scale path exists for).
-    # ``edge_count_hint`` must be a true UPPER bound on |E| (callers
-    # can assert one cheaply, e.g. rows-in x max-group-size for a
-    # bounded-group co-occurrence build). When the bound already fits
-    # the budget the probe job is skipped and the cache fills under
-    # the first real consumer; an over-estimate merely falls back to
-    # the probe, so a conservative bound is always safe.
-    if edge_count_hint is not None and edge_count_hint <= broadcast_edge_budget:
-        small = True
-    else:
-        small = und.count() <= broadcast_edge_budget
-    hint = F.broadcast if small else (lambda df: df)
-    deg = (
-        und.select(F.col("u").alias("n"))
-        .unionAll(und.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("deg"))
-    )
-    # BOTH degree lookups join the SAME deg subtree via alias(), not
-    # via two renaming Projects: a Project on top of the exchange
-    # child changes its canonical plan, so the old form built (and
-    # fully re-aggregated) the degree table twice — once per
-    # broadcast. With identical children, ReuseExchange ships ONE
-    # build to both joins (and on the past-budget path, one shuffle
-    # of deg serves both sides — guide §2.4 share one exchange).
-    d1, d2 = deg.alias("d1"), deg.alias("d2")
-    e = (
-        und.alias("e")
-        .join(hint(d1), F.col("e.u") == F.col("d1.n"))
-        .join(hint(d2), F.col("e.v") == F.col("d2.n"))
-    )
-    du, dv = F.col("d1.deg"), F.col("d2.deg")
-    u_first = (du < dv) | ((du == dv) & (F.col("e.u") < F.col("e.v")))
-    oriented = e.select(
-        F.when(u_first, F.col("e.u")).otherwise(F.col("e.v")).alias("s"),
-        F.when(u_first, F.col("e.v")).otherwise(F.col("e.u")).alias("t"),
-        F.when(u_first, dv).otherwise(du).alias("dt"),
-    ).cache()
-    from .dedup import _materialize_release
+        # BOTH degree lookups join the SAME deg subtree via alias(), not
+        # via two renaming Projects: a Project on top of the exchange
+        # child changes its canonical plan, so the old form built (and
+        # fully re-aggregated) the degree table twice — once per
+        # broadcast. With identical children, ReuseExchange ships ONE
+        # build to both joins (and on the past-budget path, one shuffle
+        # of deg serves both sides — guide §2.4 share one exchange).
+        d1, d2 = deg.alias("d1"), deg.alias("d2")
+        e = (
+            und.alias("e")
+            .join(hint(d1), F.col("e.u") == F.col("d1.n"))
+            .join(hint(d2), F.col("e.v") == F.col("d2.n"))
+        )
+        du, dv = F.col("d1.deg"), F.col("d2.deg")
+        u_first = (du < dv) | ((du == dv) & (F.col("e.u") < F.col("e.v")))
+        oriented = hold(
+            e.select(
+                F.when(u_first, F.col("e.u")).otherwise(F.col("e.v")).alias("s"),
+                F.when(u_first, F.col("e.v")).otherwise(F.col("e.u")).alias("t"),
+                F.when(u_first, dv).otherwise(du).alias("dt"),
+            )
+        )
+        if not small:
+            # scale path: fill the cache with an explicit pass before the
+            # three shuffle-join consumers plan concurrently
+            oriented.count()
+        # dense path: the adjacency broadcast is built FIRST (broadcast
+        # sides materialize before the probe side streams), so its
+        # aggregation fills oriented's cache and the probe + second
+        # broadcast read it back — an explicit pre-count here was a whole
+        # extra pass over the build pipeline (measured ~0.7s at sf0.1)
+        if small:
+            # dense/fast path: broadcast adjacency, intersect per edge.
+            # Each triangle (s, t, w) with oriented edges s->t, s->w, t->w
+            # is found exactly once, at its base edge (s, t), as
+            # w ∈ N+(s) ∩ N+(t).
+            adj = oriented.groupBy("s").agg(
+                F.sort_array(F.collect_list("t")).alias("nbrs")
+            )
+            # same alias-not-Project discipline as the degree joins above:
+            # the two adjacency lookups (by s and by t) broadcast the SAME
+            # subtree, so the collect_list aggregation + driver collect +
+            # broadcast build — the dense path's heaviest setup — runs
+            # ONCE and ReuseExchange serves the second join from it
+            a1, a2 = adj.alias("a1"), adj.alias("a2")
+            tri_edges = (
+                oriented.select("s", "t")
+                .alias("o")
+                .join(F.broadcast(a1), F.col("o.s") == F.col("a1.s"))
+                .join(
+                    F.broadcast(a2),
+                    F.col("o.t") == F.col("a2.s"),
+                    "left",  # sink nodes have no out-list
+                )
+                .select(
+                    F.col("o.s").alias("s"),
+                    F.col("o.t").alias("t"),
+                    # empty-of-the-right-type via slice(ns, 1, 0): keeps the
+                    # operator generic over node id type (bigint, string, ...)
+                    F.array_intersect(
+                        F.col("a1.nbrs"),
+                        F.coalesce(F.col("a2.nbrs"), F.slice(F.col("a1.nbrs"), 1, 0)),
+                    ).alias("__w"),
+                )
+                .filter(F.size("__w") > 0)
+            )
+            # ONE pass over the intersect stream (r13): the previous 3-way
+            # union referenced tri_edges three times, and with nothing but
+            # map-side broadcast joins below it there is no exchange for
+            # ReuseExchange to dedupe — the scan + double join + intersect
+            # subtree executed THREE times (measured: the probe+agg leg
+            # alone ran ~3x the single-pass cost). Each row now emits all
+            # of its incidences — (s, |w|), (t, |w|), and (x, 1) per
+            # closing vertex — through a single Generate (§2.4 do fewer
+            # passes). The transform() lambda is interpreted, but it runs
+            # once per TRIANGLE, not once per probe pass.
+            out = (
+                tri_edges.select(
+                    F.explode(
+                        F.concat(
+                            F.array(
+                                F.struct(
+                                    F.col("s").alias("node"),
+                                    F.size("__w").cast("long").alias("c"),
+                                ),
+                                F.struct(
+                                    F.col("t").alias("node"),
+                                    F.size("__w").cast("long").alias("c"),
+                                ),
+                            ),
+                            F.transform(
+                                "__w",
+                                lambda x: F.struct(
+                                    x.alias("node"), F.lit(1).cast("long").alias("c")
+                                ),
+                            ),
+                        )
+                    ).alias("__e")
+                )
+                .select(F.col("__e.node").alias("node"), F.col("__e.c").alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").cast("long").alias("n_triangles"))
+            )
+            return materialize(out)
 
-    if not small:
-        # scale path: fill the cache with an explicit pass before the
-        # three shuffle-join consumers plan concurrently
-        oriented.count()
-    # dense path: the adjacency broadcast is built FIRST (broadcast
-    # sides materialize before the probe side streams), so its
-    # aggregation fills oriented's cache and the probe + second
-    # broadcast read it back — an explicit pre-count here was a whole
-    # extra pass over the build pipeline (measured ~0.7s at sf0.1)
-    if small:
-        # dense/fast path: broadcast adjacency, intersect per edge.
-        # Each triangle (s, t, w) with oriented edges s->t, s->w, t->w
-        # is found exactly once, at its base edge (s, t), as
-        # w ∈ N+(s) ∩ N+(t).
-        adj = oriented.groupBy("s").agg(
-            F.sort_array(F.collect_list("t")).alias("nbrs")
+        # scale path: wedge join; spillable end to end
+        o1 = oriented.select(F.col("s"), F.col("t").alias("t1"), F.col("dt").alias("d1"))
+        o2 = oriented.select(F.col("s"), F.col("t").alias("t2"), F.col("dt").alias("d2"))
+        t1_first = (F.col("d1") < F.col("d2")) | (
+            (F.col("d1") == F.col("d2")) & (F.col("t1") < F.col("t2"))
         )
-        # same alias-not-Project discipline as the degree joins above:
-        # the two adjacency lookups (by s and by t) broadcast the SAME
-        # subtree, so the collect_list aggregation + driver collect +
-        # broadcast build — the dense path's heaviest setup — runs
-        # ONCE and ReuseExchange serves the second join from it
-        a1, a2 = adj.alias("a1"), adj.alias("a2")
-        tri_edges = (
-            oriented.select("s", "t")
-            .alias("o")
-            .join(F.broadcast(a1), F.col("o.s") == F.col("a1.s"))
-            .join(
-                F.broadcast(a2),
-                F.col("o.t") == F.col("a2.s"),
-                "left",  # sink nodes have no out-list
-            )
-            .select(
-                F.col("o.s").alias("s"),
-                F.col("o.t").alias("t"),
-                # empty-of-the-right-type via slice(ns, 1, 0): keeps the
-                # operator generic over node id type (bigint, string, ...)
-                F.array_intersect(
-                    F.col("a1.nbrs"),
-                    F.coalesce(F.col("a2.nbrs"), F.slice(F.col("a1.nbrs"), 1, 0)),
-                ).alias("__w"),
-            )
-            .filter(F.size("__w") > 0)
+        wedges = (
+            o1.join(o2, "s")
+            .filter(t1_first)  # each unordered wedge once, rank-ordered
+            .select(F.col("s").alias("apex"), F.col("t1").alias("lo"), F.col("t2").alias("hi"))
         )
-        # ONE pass over the intersect stream (r13): the previous 3-way
-        # union referenced tri_edges three times, and with nothing but
-        # map-side broadcast joins below it there is no exchange for
-        # ReuseExchange to dedupe — the scan + double join + intersect
-        # subtree executed THREE times (measured: the probe+agg leg
-        # alone ran ~3x the single-pass cost). Each row now emits all
-        # of its incidences — (s, |w|), (t, |w|), and (x, 1) per
-        # closing vertex — through a single Generate (§2.4 do fewer
-        # passes). The transform() lambda is interpreted, but it runs
-        # once per TRIANGLE, not once per probe pass.
+        closing = oriented.select(F.col("s").alias("lo"), F.col("t").alias("hi"))
+        tris = wedges.join(closing, ["lo", "hi"])
+        # one pass: each triangle row explodes into its three member nodes
+        # instead of the 3-way union re-reading the join output (r13,
+        # same rationale as the dense path's single-pass incidence emit)
         out = (
-            tri_edges.select(
-                F.explode(
-                    F.concat(
-                        F.array(
-                            F.struct(
-                                F.col("s").alias("node"),
-                                F.size("__w").cast("long").alias("c"),
-                            ),
-                            F.struct(
-                                F.col("t").alias("node"),
-                                F.size("__w").cast("long").alias("c"),
-                            ),
-                        ),
-                        F.transform(
-                            "__w",
-                            lambda x: F.struct(
-                                x.alias("node"), F.lit(1).cast("long").alias("c")
-                            ),
-                        ),
-                    )
-                ).alias("__e")
+            tris.select(
+                F.explode(F.array(F.col("apex"), F.col("lo"), F.col("hi"))).alias(
+                    "node"
+                )
             )
-            .select(F.col("__e.node").alias("node"), F.col("__e.c").alias("c"))
             .groupBy("node")
-            .agg(F.sum("c").cast("long").alias("n_triangles"))
+            .agg(F.count("*").cast("long").alias("n_triangles"))
         )
-        if edges_distinct:
-            return _materialize_release(out, oriented)
-        return _materialize_release(out, und, oriented)
-
-    # scale path: wedge join; spillable end to end
-    o1 = oriented.select(F.col("s"), F.col("t").alias("t1"), F.col("dt").alias("d1"))
-    o2 = oriented.select(F.col("s"), F.col("t").alias("t2"), F.col("dt").alias("d2"))
-    t1_first = (F.col("d1") < F.col("d2")) | (
-        (F.col("d1") == F.col("d2")) & (F.col("t1") < F.col("t2"))
-    )
-    wedges = (
-        o1.join(o2, "s")
-        .filter(t1_first)  # each unordered wedge once, rank-ordered
-        .select(F.col("s").alias("apex"), F.col("t1").alias("lo"), F.col("t2").alias("hi"))
-    )
-    closing = oriented.select(F.col("s").alias("lo"), F.col("t").alias("hi"))
-    tris = wedges.join(closing, ["lo", "hi"])
-    # one pass: each triangle row explodes into its three member nodes
-    # instead of the 3-way union re-reading the join output (r13,
-    # same rationale as the dense path's single-pass incidence emit)
-    out = (
-        tris.select(
-            F.explode(F.array(F.col("apex"), F.col("lo"), F.col("hi"))).alias(
-                "node"
-            )
-        )
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("n_triangles"))
-    )
-    if edges_distinct:
-        return _materialize_release(out, oriented)
-    return _materialize_release(out, und, oriented)
+        return materialize(out)

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import cache_scope, fanout_repartition, materialize
 from .multimodal import _round_half_away, _round_half_away6
 
 _PI = 3.141592653589793
@@ -72,8 +73,6 @@ def gmm_em_1d(
     grid that keeps the engines in lock-step. Standardized, every
     aggregate is O(1)-valued and the rounding grid is ~10⁵ coarser
     than the cross-engine noise."""
-    from .dedup import fanout_repartition
-
     spark = df.sparkSession
     x = F.col(val_col).cast("double")
     # explicit-N ROUND-ROBIN repartition + persist: the EM loop
@@ -81,17 +80,18 @@ def gmm_em_1d(
     # evaluates two exp()-responsibilities per row — without the
     # exchange all of it re-scans and recomputes inside the one-task
     # scan stage per action (guide §2.5 / §5 persist-on-reuse; the
-    # fanout_repartition rationale in operators/dedup.py). Keyless on
+    # fanout_repartition rationale in engine.py). Keyless on
     # purpose (VERDICT r12 #3): hashing on the value column "__r"
     # serializes the exp() fan-out the moment the value distribution
     # degenerates (constant/low-cardinality lake); every consumer is
     # a global aggregate on a ROUND(·,6) grid, so placement is
-    # semantics-free. Released in the finally below.
-    raw = fanout_repartition(
-        df.select(x.alias("__r")).filter(F.col("__r").isNotNull())
-    ).persist()
-
-    try:
+    # semantics-free. Released when the scope exits.
+    with cache_scope() as hold:
+        raw = hold(
+            fanout_repartition(
+                df.select(x.alias("__r")).filter(F.col("__r").isNotNull())
+            )
+        )
         stats = raw.agg(
             F.count("*").alias("n"),
             F.round(F.avg("__r"), 2).alias("m"),
@@ -177,8 +177,4 @@ def gmm_em_1d(
             .select(F.explode(F.array(*rows)).alias("__s"))
             .select("__s.*")
         )
-        from .dedup import _materialize_release
-
-        return _materialize_release(out, raw)
-    finally:
-        raw.unpersist(blocking=False)
+        return materialize(out)

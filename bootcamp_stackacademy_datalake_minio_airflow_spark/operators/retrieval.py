@@ -28,9 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
-
-from .dedup import normalize_text
+from ..engine import fanout_repartition, normalize_text
 
 __all__ = [
     "bm25_topk",

@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
+from .. import engine
+from ..engine import cache_scope, fanout_repartition, normalize_text
 
 #: hex digits of md5 used for the draw; 8 digits = 32-bit resolution
 _PREFIX_W = 8
@@ -392,8 +393,6 @@ def dsir_importance(
     final per-doc mean is float-order-sensitive (house-accepted
     ROUND residual).
     """
-    from .dedup import normalize_text
-
     # narrow (id, flag, tokens) exchange before the token explode so
     # the fan-out runs at shuffle parallelism, not inside the scan
     # stage (one task on a single-row-group parquet; guide §2.5)
@@ -479,97 +478,93 @@ def token_budget_select(
     # heuristics) feed THREE consumers — the per-quality histogram,
     # the shard totals, and the final cumsum join — and would
     # otherwise be recomputed per branch (measured 0.3s -> 3.0s at
-    # sf0.1 when the shard level landed without this). Released after
-    # the result materializes, same discipline as dedup's pair caches.
+    # sf0.1 when the shard level landed without this). Released when
+    # the scope below exits, after the result materializes.
     # explicit-N repartition BEFORE the scoring projection so the
     # regex-heavy quality expressions evaluate at shuffle parallelism
     # during the cache fill, not inside the one-task scan stage
-    # (guide §2.5; rationale in operators/dedup.py:fanout_repartition)
-    scored = (
-        fanout_repartition(df, id_col)
-        .select(
-            F.col(id_col),
-            q.alias("__q"),
-            n_tokens.cast("long").alias("__nt"),
+    # (guide §2.5; rationale in engine.fanout_repartition)
+    with cache_scope() as hold:
+        scored = hold(
+            fanout_repartition(df, id_col)
+            .select(
+                F.col(id_col),
+                q.alias("__q"),
+                n_tokens.cast("long").alias("__nt"),
+            )
+            .filter(F.col("__q").isNotNull() & F.col("__nt").isNotNull())
         )
-        .filter(F.col("__q").isNotNull() & F.col("__nt").isNotNull())
-        .persist()
-    )
-    per_q = scored.groupBy("__q").agg(
-        F.sum("__nt").cast("long").alias("__tot"),
-        F.min(id_col).cast("long").alias("__mn"),
-        F.max(id_col).cast("long").alias("__mx"),
-    )
-    wq = Window.orderBy(F.desc("__q")).rowsBetween(Window.unboundedPreceding, -1)
-    buckets = per_q.select(
-        F.col("__q").alias("__qb"),
-        F.coalesce(F.sum("__tot").over(wq), F.lit(0).cast("long")).alias(
-            "__before"
-        ),
-        "__mn",
-        "__mx",
-    ).filter(F.col("__before") <= budget)
-    # buckets: every quality level whose prefix does not already
-    # overshoot. <= not <: a bucket whose prefix EQUALS the budget
-    # can still admit zero-token docs (cum unchanged, still within
-    # budget — hypothesis found the < form dropping exactly those);
-    # the in-shard cumsum filter rejects everything else.
-    #
-    # Distributed-scan tree, level 2: ORDER-PRESERVING id-range shards
-    # inside each quality bucket so no tie group owns one window
-    # partition. The shard index floor((id - mn) / step) is monotone
-    # in id whatever the id distribution, and step = (mx-mn)/S + 1 is
-    # integer arithmetic with no overflow; shard totals cumulate over
-    # a |q| x S table, and the per-row window runs per (q, shard).
-    n_shards = 64
-    joined = scored.join(F.broadcast(buckets), F.col("__q") == F.col("__qb"))
-    step = (F.col("__mx") - F.col("__mn")) / F.lit(n_shards) + F.lit(1)
-    sharded = joined.withColumn(
-        "__shard",
-        ((F.col(id_col).cast("long") - F.col("__mn")) / step.cast("long"))
-        .cast("long"),
-    )
-    shard_tot = sharded.groupBy("__q", "__shard").agg(
-        F.sum("__nt").cast("long").alias("__stot")
-    )
-    ws = Window.partitionBy("__q").orderBy(F.asc("__shard")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    shard_prefix = shard_tot.select(
-        F.col("__q").alias("__qs"),
-        F.col("__shard").alias("__shards"),
-        F.coalesce(F.sum("__stot").over(ws), F.lit(0).cast("long")).alias(
-            "__sbefore"
-        ),
-    )
-    win = Window.partitionBy("__q", "__shard").orderBy(F.asc(id_col))
-    cum = (
-        F.col("__before") + F.col("__sbefore") + F.sum("__nt").over(win)
-    ).cast("long")
-    result = (
-        sharded.join(
-            F.broadcast(shard_prefix),
-            (F.col("__q") == F.col("__qs"))
-            & (F.col("__shard") == F.col("__shards")),
+        per_q = scored.groupBy("__q").agg(
+            F.sum("__nt").cast("long").alias("__tot"),
+            F.min(id_col).cast("long").alias("__mn"),
+            F.max(id_col).cast("long").alias("__mx"),
         )
-        .withColumn("__cum", cum)
-        .filter(F.col("__cum") <= budget)
-        .select(
-            id_col,
-            (F.col("__q") + F.lit(0.0)).alias("quality"),
-            F.col("__nt").alias("n_tokens"),
-            F.col("__cum").alias("cum_tokens"),
+        wq = Window.orderBy(F.desc("__q")).rowsBetween(Window.unboundedPreceding, -1)
+        buckets = per_q.select(
+            F.col("__q").alias("__qb"),
+            F.coalesce(F.sum("__tot").over(wq), F.lit(0).cast("long")).alias(
+                "__before"
+            ),
+            "__mn",
+            "__mx",
+        ).filter(F.col("__before") <= budget)
+        # buckets: every quality level whose prefix does not already
+        # overshoot. <= not <: a bucket whose prefix EQUALS the budget
+        # can still admit zero-token docs (cum unchanged, still within
+        # budget — hypothesis found the < form dropping exactly those);
+        # the in-shard cumsum filter rejects everything else.
+        #
+        # Distributed-scan tree, level 2: ORDER-PRESERVING id-range shards
+        # inside each quality bucket so no tie group owns one window
+        # partition. The shard index floor((id - mn) / step) is monotone
+        # in id whatever the id distribution, and step = (mx-mn)/S + 1 is
+        # integer arithmetic with no overflow; shard totals cumulate over
+        # a |q| x S table, and the per-row window runs per (q, shard).
+        n_shards = 64
+        joined = scored.join(F.broadcast(buckets), F.col("__q") == F.col("__qb"))
+        step = (F.col("__mx") - F.col("__mn")) / F.lit(n_shards) + F.lit(1)
+        sharded = joined.withColumn(
+            "__shard",
+            ((F.col(id_col).cast("long") - F.col("__mn")) / step.cast("long"))
+            .cast("long"),
         )
-    )
-    if not materialize:
-        # plan-inspection path (tests/test_plans.py): checkpointing
-        # would hide the window/aggregate shapes behind a block scan.
-        # The scored cache is NOT released on this path — callers own
-        # the lifecycle.
-        return result
-    from .dedup import _materialize_release
-
-    return _materialize_release(result, scored)
+        shard_tot = sharded.groupBy("__q", "__shard").agg(
+            F.sum("__nt").cast("long").alias("__stot")
+        )
+        ws = Window.partitionBy("__q").orderBy(F.asc("__shard")).rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        shard_prefix = shard_tot.select(
+            F.col("__q").alias("__qs"),
+            F.col("__shard").alias("__shards"),
+            F.coalesce(F.sum("__stot").over(ws), F.lit(0).cast("long")).alias(
+                "__sbefore"
+            ),
+        )
+        win = Window.partitionBy("__q", "__shard").orderBy(F.asc(id_col))
+        cum = (
+            F.col("__before") + F.col("__sbefore") + F.sum("__nt").over(win)
+        ).cast("long")
+        result = (
+            sharded.join(
+                F.broadcast(shard_prefix),
+                (F.col("__q") == F.col("__qs"))
+                & (F.col("__shard") == F.col("__shards")),
+            )
+            .withColumn("__cum", cum)
+            .filter(F.col("__cum") <= budget)
+            .select(
+                id_col,
+                (F.col("__q") + F.lit(0.0)).alias("quality"),
+                F.col("__nt").alias("n_tokens"),
+                F.col("__cum").alias("cum_tokens"),
+            )
+        )
+        if not materialize:
+            # plan-inspection path (tests/test_plans.py): checkpointing
+            # would hide the window/aggregate shapes behind a block scan.
+            return result
+        return engine.materialize(result)
 
 
 def epoch_schedule(

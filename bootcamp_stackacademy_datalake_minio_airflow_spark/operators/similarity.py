@@ -402,7 +402,7 @@ def ann_topk_lsh(
     # narrow (id, vec) projection + explicit-N exchange ahead of the
     # n_planes x dim bucket fan-out, so the per-row plane dots run at
     # shuffle parallelism instead of inside the scan stage (guide
-    # §2.5 repartition-after-read; the dedup.fanout_repartition
+    # §2.5 repartition-after-read; the engine.fanout_repartition
     # rationale). Measured neutral at sf0.1 (the 2000-row corpus is
     # below where the exchange pays) — the change is the scale
     # posture, same as every other fan-out operator. NOTE r13: a
@@ -410,7 +410,7 @@ def ann_topk_lsh(
     # 8x64-term chains exceed the 64KB generated-method limit, Janino
     # fails per execution and the fallback ran 2-3x slower than the
     # interpreted HOF (see OPTIMIZATION_r13.md).
-    from .dedup import fanout_repartition
+    from ..engine import fanout_repartition
 
     bucketed = fanout_repartition(
         df.select(F.col(id_col), F.col(vec_col)), id_col

@@ -11,9 +11,13 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
-from .dedup import fanout_repartition
-
-from .dedup import normalize_text
+from ..engine import (
+    _norm_base,
+    cache_scope,
+    fanout_repartition,
+    materialize,
+    normalize_text,
+)
 
 
 def tokens(col: str | Column) -> Column:
@@ -106,12 +110,6 @@ URL_PATTERN = r"https?://\S+"
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+"
 
 
-def strip_html(col: str | Column) -> Column:
-    """Remove HTML/XML tags (anything between < and >)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, HTML_TAG_PATTERN, " ")
-
-
 def url_count(col: str | Column) -> Column:
     """Number of http(s) URLs in the raw text."""
     c = F.col(col) if isinstance(col, str) else col
@@ -146,32 +144,6 @@ def fingerprint(col: str | Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def winnow_fingerprints(col: str | Column, k: int = 5, window: int = 4) -> Column:
-    """Winnowing fingerprints (Schleimer/Wilkerson/Aiken): hash every
-    character k-gram of the normalized text, then keep the minimum
-    hash of each sliding window of ``window`` consecutive k-gram
-    hashes (deduplicated). Guarantees any shared substring of length
-    >= k + window - 1 contributes at least one common fingerprint —
-    the local-similarity property whole-document md5 lacks.
-
-    Returns array<bigint>. Expression-only (no UDF); pass an
-    already-materialized column for corpus-scale use (the same
-    re-evaluation caveat as char_shingles).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    n_grams = F.greatest(F.length(c) - F.lit(k - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(1), n_grams), lambda i: F.xxhash64(F.substr(c, i, F.lit(k)))
-    )
-    n_windows = F.greatest(F.size(hashes) - F.lit(window - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda i: F.array_min(F.slice(hashes, i, window)),
-        )
-    )
-
-
 def winnow_table(
     df, id_col: str, text_col: str, k: int = 5, window: int = 4, hash_fn: str = "xxhash64"
 ):
@@ -186,8 +158,6 @@ def winnow_table(
     slower and wider, but byte-identical in any engine with md5, which
     makes the operator's output externally verifiable).
     """
-    from .dedup import _norm_base
-
     if hash_fn == "xxhash64":
         gram_hash = lambda g: F.xxhash64(g)  # noqa: E731
     elif hash_fn == "md5":
@@ -658,8 +628,6 @@ def winnow_fp_exploded(
     O(len·window) window-minima chain pathologically (measured
     minutes vs seconds at sf0.01).
     """
-    from .dedup import _norm_base
-
     gram_hash = F.md5 if hash_fn == "md5" else F.xxhash64
     norm = _norm_base(df, id_col, text_col)
     n_grams = F.greatest(F.length("__txt") - F.lit(k - 1), F.lit(1))
@@ -735,41 +703,43 @@ def winnow_overlap_pairs(
     a second bounded explode fanning each position to its ≤ window
     member windows, then a partial-aggregated min per (doc, window)
     and a distinct — all codegen, all map-side combinable. The
-    resulting (doc, fp) table is persisted (it feeds the df filter
-    and both join sides) and released via dedup's
-    materialize-release discipline. The df-capped self-join's
-    fan-out is provably bounded (max_df^2 per key).
+    resulting (doc, fp) table is held in an ``engine.cache_scope``
+    (it feeds the df filter and both join sides) and released once
+    the result materializes. The df-capped self-join's fan-out is
+    provably bounded (max_df^2 per key).
     ``hash_fn='md5'`` is the cross-engine family the registered
     oracle replays.
     """
     from pyspark import StorageLevel
 
-    from .dedup import _materialize_release
-
-    fp = winnow_fp_exploded(
-        df, id_col, text_col, k=k, window=window, hash_fn=hash_fn
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    keep = (
-        fp.groupBy("__fp")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter((F.col("__df") >= 2) & (F.col("__df") <= max_df))
-        .select("__fp")
-    )
-    rare = fp.join(keep, "__fp")
-    a, b = rare.alias("a"), rare.alias("b")
-    result = (
-        a.join(
-            b,
-            (F.col("a.__fp") == F.col("b.__fp"))
-            & (F.col("a.__id") < F.col("b.__id")),
+    with cache_scope() as hold:
+        fp = hold(
+            winnow_fp_exploded(
+                df, id_col, text_col, k=k, window=window, hash_fn=hash_fn
+            ),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        .groupBy(
-            F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
+        keep = (
+            fp.groupBy("__fp")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .filter((F.col("__df") >= 2) & (F.col("__df") <= max_df))
+            .select("__fp")
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    return _materialize_release(result, fp)
+        rare = fp.join(keep, "__fp")
+        a, b = rare.alias("a"), rare.alias("b")
+        result = (
+            a.join(
+                b,
+                (F.col("a.__fp") == F.col("b.__fp"))
+                & (F.col("a.__id") < F.col("b.__id")),
+            )
+            .groupBy(
+                F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
+            )
+            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared)
+        )
+        return materialize(result)
 
 
 def next_token_examples(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import fanout_repartition
+from ..engine import fanout_repartition, normalize_text
 
 from ..catalog import load_table
 from ..queries import register
@@ -248,7 +248,6 @@ def q_token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators.analytics import linear_trend
-    from ..operators.dedup import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
     cnt = (
@@ -325,7 +324,6 @@ def q_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators.analytics import linear_trend
-    from ..operators.dedup import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
     # narrow (id, tokens) exchange shared by BOTH consumers of the

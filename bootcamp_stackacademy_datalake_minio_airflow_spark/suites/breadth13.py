@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import fanout_repartition
+from ..engine import fanout_repartition, normalize_text
 
 from ..catalog import load_table
-from ..operators.dedup import normalize_text
 from ..operators.contamination import semantic_contamination
 from ..operators.funnel import funnel_report
 from ..operators.sampling import (

@@ -400,7 +400,7 @@ _WINNOW_QUOTE_ORACLE = rf"""
                || ' zk postamble end' AS t
       FROM donors
     ), lake_norm AS (
-      -- the operator re-normalizes its input (dedup._norm_base); the
+      -- the operator re-normalizes its input (engine._norm_base); the
       -- planted passage can start/end on a space, making the
       -- concatenation carry a double space that collapses here
       SELECT doc_id,
@@ -462,7 +462,7 @@ def q_winnow_quotation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted pairs survive on passage fingerprints alone. Same
     explode-in-codegen scale shape as the headline query
     (operators/text.py:winnow_overlap_pairs)."""
-    from ..operators.dedup import normalize_text
+    from ..engine import normalize_text
     from ..operators.text import winnow_overlap_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -619,7 +619,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinalities for the HLL sketch (events_distinct_users_hll
     family, no Expand) and the median for the sampled-quantile
     operator — both already registered."""
-    from ..operators.dedup import normalize_text
+    from ..engine import normalize_text
     from ..operators.text import token_count
 
     docs = load_table(spark, sf_dir, "documents")
@@ -764,7 +764,7 @@ def q_corpus_datacard_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (p=8 -> ~6.5% standard error on large cardinalities;
     small cardinalities sit in the exact linear-counting regime).
     """
-    from ..operators.dedup import normalize_text
+    from ..engine import normalize_text
     from ..operators.sampling import hash_sample
     from ..operators.sketches import hll_estimate, hll_registers
     from ..operators.text import token_count

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import fanout_repartition
+from ..engine import fanout_repartition
 
 from ..catalog import load_table
 from ..queries import register

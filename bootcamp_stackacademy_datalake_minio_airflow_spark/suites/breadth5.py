@@ -19,11 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import fanout_repartition
+from ..engine import fanout_repartition, normalize_text
 
 from ..catalog import load_table
 from ..operators.contamination import ngram_contamination
-from ..operators.dedup import normalize_text
 from ..operators.privacy import pii_count, redact
 from ..operators.text import repetition_signals
 from ..queries import register

@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import fanout_repartition
+from ..engine import fanout_repartition, normalize_text
 
 from ..catalog import load_table
-from ..operators.dedup import normalize_text
 from ..operators.packing import pack_sequences
 from ..operators.similarity import semantic_clusters
 from ..queries import register

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for suite parity)
 
 from ..catalog import load_table
+from ..engine import cache_scope, materialize
 from ..operators.retrieval import (
     bigram_nll_score,
     bm25_topk,
@@ -579,28 +580,25 @@ def q_curation_chunks_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # scores feeds BOTH the cutoff aggregate and the keep filter —
     # cache it so the three corpus-wide LM aggregations run once
-    # (review finding), and release after the result materializes
-    scores = bigram_nll_score(docs).persist()
-    cutoff = scores.agg(
-        F.round(F.percentile("avg_nll", F.lit(0.75)), 4).alias("__cut")
-    )
-    keep_ids = (
-        scores.crossJoin(F.broadcast(cutoff))
-        .filter(F.col("avg_nll") <= F.col("__cut"))
-        .select("doc_id")
-    )
-    outlier_ids = length_outliers(docs, z_cutoff=2.0).select("doc_id")
-    kept = (
-        docs.join(keep_ids, "doc_id", "left_semi")
-        .join(outlier_ids, "doc_id", "left_anti")
-        .select("doc_id", "text")
-    )
-    deduped = dedup_exact(kept, ["text"], "doc_id")
-    from ..operators.dedup import _materialize_release
-
-    return _materialize_release(
-        chunk_tokens(deduped, window=32, stride=24), scores
-    )
+    # (review finding); released after the result materializes
+    with cache_scope() as hold:
+        scores = hold(bigram_nll_score(docs))
+        cutoff = scores.agg(
+            F.round(F.percentile("avg_nll", F.lit(0.75)), 4).alias("__cut")
+        )
+        keep_ids = (
+            scores.crossJoin(F.broadcast(cutoff))
+            .filter(F.col("avg_nll") <= F.col("__cut"))
+            .select("doc_id")
+        )
+        outlier_ids = length_outliers(docs, z_cutoff=2.0).select("doc_id")
+        kept = (
+            docs.join(keep_ids, "doc_id", "left_semi")
+            .join(outlier_ids, "doc_id", "left_anti")
+            .select("doc_id", "text")
+        )
+        deduped = dedup_exact(kept, ["text"], "doc_id")
+        return materialize(chunk_tokens(deduped, window=32, stride=24))
 
 
 @register(
@@ -714,8 +712,6 @@ def _basket_rules(
     """``prune=None`` (the registry path) decides adaptively from the
     measured infrequent-item count; True/False force the branch so
     tests can assert both paths agree on a long-tail lake."""
-    from ..operators.dedup import _materialize_release
-
     li = load_table(spark, sf_dir, "lineitem")
     # NOTE r13: an explicit-N exchange between this aggregate and its
     # cached consumers was tried and REVERTED — measured no-op: the
@@ -723,65 +719,64 @@ def _basket_rules(
     # full spark.sql.shuffle.partitions count on this path (verified
     # 32/32 partitions in the cache with and without), so the pair
     # fan-out below never ran coalesced. See OPTIMIZATION_r13.md.
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("__items"))
-        .persist()
-    )
-    n_orders = grouped.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    item_supp = (
-        grouped.select(F.explode("__items").alias("l_partkey"))
-        .groupBy("l_partkey")
-        .agg(F.count("*").cast("double").alias("c"))
-        .persist()  # one row per part; read by the prune check + 2 joins
-    )
-    if prune is None:
-        # a-priori prune decision: one bounded scalar off the persisted
-        # support table (this action also fills grouped's cache for the
-        # pair explode below, so it adds no extra corpus pass)
-        prune = bool(item_supp.filter(F.col("c") < min_support).count())
-    exploded = grouped.select(F.explode("__items").alias("ante"), "__items")
-    if prune:
-        freq = item_supp.filter(F.col("c") >= min_support)
-        exploded = exploded.join(
-            F.broadcast(freq.select(F.col("l_partkey").alias("ante"))),
-            "ante",
-            "leftsemi",
+    with cache_scope() as hold:
+        grouped = hold(
+            li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("__items"))
         )
-    pairs = exploded.select(
-        "ante", F.explode("__items").alias("cons")
-    ).filter(F.col("ante") != F.col("cons"))
-    if prune:
-        pairs = pairs.join(
-            F.broadcast(freq.select(F.col("l_partkey").alias("cons"))),
-            "cons",
-            "leftsemi",
+        n_orders = grouped.agg(F.count(F.lit(1)).cast("double").alias("n"))
+        # one row per part; read by the prune check + 2 joins
+        item_supp = hold(
+            grouped.select(F.explode("__items").alias("l_partkey"))
+            .groupBy("l_partkey")
+            .agg(F.count("*").cast("double").alias("c"))
         )
-    pair_supp = (
-        pairs.groupBy("ante", "cons")
-        .agg(F.count("*").cast("double").alias("c"))
-        .filter(F.col("c") >= min_support)
-    )
-    ia = item_supp.select(F.col("l_partkey").alias("ante"), F.col("c").alias("ca"))
-    ic = item_supp.select(F.col("l_partkey").alias("cons"), F.col("c").alias("cc"))
-    out = (
-        pair_supp.join(F.broadcast(ia), "ante")
-        .join(F.broadcast(ic), "cons")
-        .crossJoin(F.broadcast(n_orders))
-        .select(
-            "ante",
-            "cons",
-            F.col("c").cast("long").alias("n_both"),
-            F.round(F.col("c") / F.col("ca"), 4).alias("confidence"),
-            # products first, one division — see oracle comment
-            F.round(
-                F.col("c") * F.col("n") / (F.col("ca") * F.col("cc")), 4
-            ).alias("lift"),
+        if prune is None:
+            # a-priori prune decision: one bounded scalar off the persisted
+            # support table (this action also fills grouped's cache for the
+            # pair explode below, so it adds no extra corpus pass)
+            prune = bool(item_supp.filter(F.col("c") < min_support).count())
+        exploded = grouped.select(F.explode("__items").alias("ante"), "__items")
+        if prune:
+            freq = item_supp.filter(F.col("c") >= min_support)
+            exploded = exploded.join(
+                F.broadcast(freq.select(F.col("l_partkey").alias("ante"))),
+                "ante",
+                "leftsemi",
+            )
+        pairs = exploded.select(
+            "ante", F.explode("__items").alias("cons")
+        ).filter(F.col("ante") != F.col("cons"))
+        if prune:
+            pairs = pairs.join(
+                F.broadcast(freq.select(F.col("l_partkey").alias("cons"))),
+                "cons",
+                "leftsemi",
+            )
+        pair_supp = (
+            pairs.groupBy("ante", "cons")
+            .agg(F.count("*").cast("double").alias("c"))
+            .filter(F.col("c") >= min_support)
         )
-        .orderBy(F.col("lift").desc(), "ante", "cons")
-        .limit(50)
-    )
-    return _materialize_release(out, grouped, item_supp)
+        ia = item_supp.select(F.col("l_partkey").alias("ante"), F.col("c").alias("ca"))
+        ic = item_supp.select(F.col("l_partkey").alias("cons"), F.col("c").alias("cc"))
+        out = (
+            pair_supp.join(F.broadcast(ia), "ante")
+            .join(F.broadcast(ic), "cons")
+            .crossJoin(F.broadcast(n_orders))
+            .select(
+                "ante",
+                "cons",
+                F.col("c").cast("long").alias("n_both"),
+                F.round(F.col("c") / F.col("ca"), 4).alias("confidence"),
+                # products first, one division — see oracle comment
+                F.round(
+                    F.col("c") * F.col("n") / (F.col("ca") * F.col("cc")), 4
+                ).alias("lift"),
+            )
+            .orderBy(F.col("lift").desc(), "ante", "cons")
+            .limit(50)
+        )
+        return materialize(out)
 
 
 @register(

@@ -41,6 +41,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..engine import materialize
 from ..operators.graph import cooccurrence_edges
 
 #: (applicationId, sf_dir) -> (edges, n_directed_rows). Symmetric
@@ -62,9 +63,9 @@ def part_cooccurrence_edges(
         _CACHE.move_to_end(key)
         return hit
     li = load_table(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", partition_by="dst"
-    ).localCheckpoint(eager=True)
+    edges = materialize(
+        cooccurrence_edges(li, "l_orderkey", "l_partkey", partition_by="dst")
+    )
     n = edges.count()
     _CACHE[key] = (edges, n)
     while len(_CACHE) > _MAX_ENTRIES:

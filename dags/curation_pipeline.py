@@ -89,7 +89,7 @@ def _run_leakage_split() -> None:
     from pyspark.sql import functions as F
 
     from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import zone_path
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.dedup import normalize_text
+    from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import normalize_text
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.sampling import group_split
     from bootcamp_stackacademy_datalake_minio_airflow_spark.session import get_spark
 

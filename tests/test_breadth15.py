@@ -739,24 +739,53 @@ def test_isotonic_n_bins_range_guard(spark):
     assert len(out) == 1 and out[0]["bin"] == 0
 
 
-def test_gd_persist_released_on_error(spark):
-    """ADVICE r11 #1: if training/scoring raises after the feature
-    frame is persisted, the cache must still be released — otherwise
-    every failed invocation in a long-lived session leaks executor
-    memory. Force a mid-operator failure via a feature column whose
-    cast blows up at action time, then assert no new persistent RDD
-    survives the raise."""
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.classifier import (
-        logreg_auc_roc,
+def _leak_case(spark, op):
+    """A call of ``op`` whose first Spark action raises "boom": the
+    failing column is built with ``raise_error`` so the error fires
+    after the operator has registered its caches."""
+    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators import (
+        classifier,
+        dedup,
+        graph,
     )
 
-    sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    df = spark.createDataFrame([(1.0, 1.0)], ["y", "x"]).select(
-        "y", F.raise_error(F.lit("boom")).cast("double").alias("x")
+    boom = F.raise_error(F.lit("boom"))
+    if op == "logreg_auc_roc":
+        df = spark.createDataFrame([(1.0, 1.0)], ["y", "x"]).select(
+            "y", boom.cast("double").alias("x")
+        )
+        return lambda: classifier.logreg_auc_roc(df, "y", ["x"])
+    if op == "minhash_lsh_pairs":
+        docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        docs = docs.select("doc_id", boom.cast("string").alias("text"))
+        return lambda: dedup.minhash_lsh_pairs(docs, "doc_id", "text")
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long").select(
+        boom.cast("long").alias("src"), boom.cast("long").alias("dst")
     )
+    return lambda: getattr(graph, op)(edges)
+
+
+@pytest.mark.parametrize(
+    "op", ["logreg_auc_roc", "pagerank", "label_propagation", "minhash_lsh_pairs"]
+)
+def test_gd_persist_released_on_error(spark, op):
+    """ADVICE r11 #1: if an operator raises after persisting its
+    intermediates, the caches must still be released — otherwise
+    every failed invocation in a long-lived session leaks executor
+    memory. Force a mid-operator failure via a column that raises at
+    action time, then assert that no new persistent RDD survives the
+    raise AND that the SQL CacheManager holds no entry: a cache whose
+    fill job failed can register no RDD, so the RDD check alone misses
+    it."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    call = _leak_case(spark, op)
     with pytest.raises(Exception, match="boom"):
-        logreg_auc_roc(df, "y", ["x"])
+        call()
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     leaked = after - before
     assert not leaked, f"persisted RDDs leaked across a raise: {leaked}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{op} left an entry in the SQL CacheManager across a raise"
+    )

@@ -268,9 +268,9 @@ def test_cross_doc_ngram_stats_planted_skew_equals_window_form(spark):
     hand-derived expectation."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
+    from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import normalize_text
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.dedup import (
         cross_doc_ngram_stats,
-        normalize_text,
     )
 
     boiler = " ".join(f"hot{i}" for i in range(9))  # 9 words -> 6 grams at n=4

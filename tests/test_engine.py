@@ -1,0 +1,90 @@
+"""Pins for ``engine``: the one module that owns the cache policy
+(persist -> materialize -> release) and the plan helpers the operators
+share.
+
+The structure guards fail when a hand-written cache call or a helper
+import from ``operators/dedup.py`` creeps back in: each such site is a
+second copy of the policy, and the copies are where releases went
+missing (a raise between ``persist()`` and ``unpersist()`` leaked the
+cache; see tests/test_breadth15.py::test_gd_persist_released_on_error).
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+from pyspark import StorageLevel
+
+from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import cache_scope
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+PKG = ROOT / "bootcamp_stackacademy_datalake_minio_airflow_spark"
+
+#: The only hand-written persist/cache/unpersist/localCheckpoint calls
+#: left under operators/, suites/ and jobs/, as exact per-file counts
+#: (engine.materialize is the one eager localCheckpoint). Both are
+#: caches that outlive a single call, so no scope can own them:
+#: - suites/graph_shared.py: the cross-query edge cache, which must
+#:   survive clearCache; it unpersists an entry on eviction.
+#: - operators/similarity.py: ivf_index's build-once index cache; it
+#:   persists each new index and unpersists the evicted one.
+ALLOWED_CACHE_CALLS = {
+    "operators/similarity.py": 2,
+    "suites/graph_shared.py": 2,
+}
+
+MOVED = {"fanout_repartition", "normalize_text", "_norm_base", "_materialize_release"}
+
+
+def _cache_calls(path: pathlib.Path) -> int:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    return sum(
+        1
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "cache", "unpersist", "localCheckpoint")
+    )
+
+
+def test_cache_calls_only_in_engine():
+    found = {}
+    for sub in ("operators", "suites", "jobs"):
+        for path in sorted((PKG / sub).rglob("*.py")):
+            n = _cache_calls(path)
+            if n:
+                found[path.relative_to(PKG).as_posix()] = n
+    assert found == ALLOWED_CACHE_CALLS, (
+        "cache calls outside engine.py: hold the frame in "
+        "engine.cache_scope() / use engine.materialize() instead"
+    )
+
+
+def test_no_engine_helper_imported_from_dedup():
+    offenders = []
+    for base in (PKG, ROOT / "dags", ROOT / "tests", ROOT / "tools"):
+        for path in sorted(base.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+                if (
+                    isinstance(node, ast.ImportFrom)
+                    and (node.module or "").split(".")[-1] == "dedup"
+                    and MOVED & {a.name for a in node.names}
+                ):
+                    offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not offenders, f"import these helpers from engine: {offenders}"
+
+
+def test_cache_scope_keeps_level_and_releases_on_exit(spark):
+    owned = spark.range(4).cache()
+    with cache_scope() as hold:
+        disk = hold(spark.range(3), StorageLevel.DISK_ONLY)
+        default = hold(owned.selectExpr("id * 2 AS x"))
+        assert disk.storageLevel == StorageLevel.DISK_ONLY
+        assert default.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    assert not disk.is_cached and not default.is_cached
+    # a frame the caller persisted itself is never passed to hold, so
+    # the scope leaves it alone
+    assert owned.is_cached
+    owned.unpersist()
+

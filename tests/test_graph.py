@@ -163,7 +163,8 @@ def test_label_propagation_caches_repartitioned_edges(spark, monkeypatch):
     c67693e), so every non-prepartitioned caller recomputed the edge
     shuffle per iteration. Pin that the non-prepartitioned path
     persists exactly one edge form (nodes + repartitioned edges = 2
-    cache calls) and the external-cache path persists only nodes."""
+    persist calls, made by engine.cache_scope's hold) and the
+    external-cache path persists only nodes."""
     import itertools
 
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.graph import (
@@ -178,13 +179,13 @@ def test_label_propagation_caches_repartitioned_edges(spark, monkeypatch):
     # abstract facade in Spark 4; instances use the classic subclass)
     cls = type(edges)
     calls = []
-    orig_cache = cls.cache
+    orig_persist = cls.persist
 
-    def counting_cache(self):
+    def counting_persist(self, *args, **kwargs):
         calls.append(self)
-        return orig_cache(self)
+        return orig_persist(self, *args, **kwargs)
 
-    monkeypatch.setattr(cls, "cache", counting_cache)
+    monkeypatch.setattr(cls, "persist", counting_persist)
 
     calls.clear()
     out = {r.node: r.community for r in label_propagation(edges, iters=2).collect()}

@@ -82,9 +82,7 @@ def test_cms_build_partial_aggregates_map_side(spark, sf_dir):
     HashAggregate pair: the exchange carries bounded sketch state,
     not the token stream."""
     from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_table
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.dedup import (
-        normalize_text,
-    )
+    from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import normalize_text
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.sketches import (
         cms_build,
     )

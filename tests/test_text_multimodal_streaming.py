@@ -691,7 +691,7 @@ def test_winnow_textbook_params_recover_every_planted_quotation(spark):
     their df at exactly 2, under the max_df=8 boilerplate cut."""
     from pyspark.sql import functions as F
 
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.dedup import normalize_text
+    from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import normalize_text
     from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_table
     from bootcamp_stackacademy_datalake_minio_airflow_spark.queries import queries
 

@@ -5,7 +5,7 @@ Usage:
     python tools/explain_queries.py OUTDIR SUFFIX q1 q2 ... [--sf=...]
 
 Writes OUTDIR/<query><SUFFIX>.txt per query. Note: operators that end
-in ``_materialize_release`` register a localCheckpoint, whose plan is
+in ``engine.materialize`` register a localCheckpoint, whose plan is
 an opaque ``Scan ExistingRDD`` — for those the INTERNAL plan is what
 matters; this tool still records the registered plan (the checkpoint
 boundary itself is part of the design) plus, where the module exposes
