@@ -12,22 +12,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .schemas import TESTDATA_SCHEMAS
 
 ZONES = ("bronze", "silver", "gold")
 
 #: tables in the driver's synthetic testdata (TESTDATA.md)
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
 
 
 def zone_path(zone: str, table: str, base: str | None = None) -> str:
@@ -49,16 +41,15 @@ def zone_path(zone: str, table: str, base: str | None = None) -> str:
 
 
 #: (app_id, abspath, (mtime_ns, size)) -> DataFrame HANDLE cache.
-#: This memoizes the LOGICAL PLAN OBJECT (schema read + relation
+#: This memoizes the LOGICAL PLAN OBJECT (footer read + relation
 #: construction + py4j traffic), never data: every action on the
-#: returned frame still scans the parquet files. Measured ~0.1 s per
-#: spark.read.parquet call on this host even warm — across the
-#: 214-query bench's ~300+ load_table calls that is tens of seconds
-#: of pure per-query metadata overhead (the r12 scaling block's
-#: "per-job fixed cost" floor; guide §1.2 — fix the structure before
-#: the per-task work). A production engine holds exactly this state
-#: in its catalog/metastore. Staleness is handled, not assumed away:
-#: the key carries the file's (mtime_ns, size), so a rewritten or
+#: returned frame still scans the parquet files. A miss runs no Spark
+#: job (the types are declared, see ``_pinned_schema``) but still
+#: reads the footer on the driver and builds the relation; across the
+#: 214-query bench's ~300+ load_table calls a hit skips that
+#: per-query metadata cost. A production engine holds exactly this
+#: state in its catalog/metastore. Staleness is handled, not assumed
+#: away: the key carries the file's (mtime_ns, size), so a rewritten or
 #: re-linked lake (tools/degenerate_data.py, prose-lake builds) misses
 #: and re-reads. Bounded at _DF_CACHE_MAX entries with FIFO eviction:
 #: a hit does not refresh an entry's position (unlike the LRU in
@@ -80,12 +71,37 @@ def _df_cache_key(spark: SparkSession, path: str):
     )
 
 
+def _pinned_schema(path: str, name: str) -> StructType:
+    """The declared schema of lake table ``name`` restricted to the
+    columns of the file at ``path``, in file order.
+
+    Only the column names come from the parquet footer, read on the
+    driver by pyarrow (no Spark job); the types come from
+    ``schemas.TESTDATA_SCHEMAS``. A file column with no declared type
+    raises, so a drifted lake fails here instead of reading a guess.
+    """
+    import pyarrow.dataset as pads
+
+    declared = {f.name: f for f in TESTDATA_SCHEMAS[name].fields}
+    names = pads.dataset(path, format="parquet").schema.names
+    undeclared = [c for c in names if c not in declared]
+    if undeclared:
+        raise ValueError(
+            f"{path}: column(s) {undeclared} have no declared type in "
+            f"schemas.TESTDATA_SCHEMAS[{name!r}]"
+        )
+    return StructType([declared[c] for c in names])
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic testdata table (parquet).
 
-    The events table is written with nanosecond timestamps, which
-    Spark's parquet reader rejects by default; read them as longs and
-    convert to (microsecond) TimestampType.
+    The scan is typed with the declared ``TESTDATA_SCHEMAS`` entry,
+    restricted to the file's own columns, so a first load runs no
+    schema-inference job. A column the file lacks is not in the
+    frame: a query that uses it fails at analysis, never reads NULL.
+    Timestamps must be microsecond parquet (every producer in the
+    repo writes them); a nanosecond file fails when scanned.
 
     Returns a cached plan handle when the same (session, file
     version) was loaded before — see ``_DF_CACHE`` above. DataFrames
@@ -93,25 +109,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same table twice already behaved as self-joins of one
     relation (breadth4's ann_batch filters one handle twice).
     """
+    if name not in TESTDATA_SCHEMAS:
+        raise ValueError(
+            f"unknown lake table {name!r}; expected one of {TESTDATA_TABLES}"
+        )
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     key = _df_cache_key(spark, path)
-    if key is not None and key in _DF_CACHE:
+    if key is None:
+        return spark.read.parquet(path)  # missing path: Spark raises
+    if key in _DF_CACHE:
         return _DF_CACHE[key]
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # integer division: float division loses precision at
-            # nanosecond-epoch magnitudes (~1e18 > 2^53)
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    if key is not None:
-        while len(_DF_CACHE) >= _DF_CACHE_MAX:
-            _DF_CACHE.pop(next(iter(_DF_CACHE)))
-        _DF_CACHE[key] = df
+    df = spark.read.schema(_pinned_schema(path, name)).parquet(path)
+    while len(_DF_CACHE) >= _DF_CACHE_MAX:
+        _DF_CACHE.pop(next(iter(_DF_CACHE)))
+    _DF_CACHE[key] = df
     return df
 
 

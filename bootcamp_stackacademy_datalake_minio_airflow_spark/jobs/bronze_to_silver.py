@@ -91,4 +91,4 @@ def bronze_to_silver(
     # corrupt-column query restriction (and re-parse the CSV)
     from ..sources import read_parquet
 
-    return read_parquet(spark, dst)
+    return read_parquet(spark, dst, schema=OLIST_SCHEMAS[table])

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import zone_path
 from ..plans.vendas import build_vendas
+from ..schemas import OLIST_SCHEMAS
 from ..sources import read_parquet, write_jdbc, write_parquet
 
 
@@ -33,13 +34,13 @@ def vendas_gold(
     Unlike the reference's single flat file (reference :152-162), the
     gold write is partitioned by sale month so downstream date-range
     queries prune partitions — the layout that holds at 100 TB.
+    The silver reads are typed with the declared ``OLIST_SCHEMAS``
+    (this engine wrote them), so no footer-inference job runs.
     """
-    items = read_parquet(spark, zone_path("silver", "order_items", base))
-    orders = read_parquet(spark, zone_path("silver", "orders", base))
-    products = read_parquet(spark, zone_path("silver", "products", base))
-    customers = read_parquet(spark, zone_path("silver", "customers", base))
-    payments = read_parquet(spark, zone_path("silver", "order_payments", base))
-
+    items, orders, products, customers, payments = (
+        read_parquet(spark, zone_path("silver", t, base), schema=OLIST_SCHEMAS[t])
+        for t in ("order_items", "orders", "products", "customers", "order_payments")
+    )
     df = build_vendas(items, orders, products, customers, payments)
     dst = gold_path or zone_path("gold", "vendas", base)
     if partition_gold:

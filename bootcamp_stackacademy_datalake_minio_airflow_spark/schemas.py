@@ -9,22 +9,46 @@ ingestion_orders_bronze_to_silver.py:66-75). Here every table gets a
 full StructType with the *intended* types, passed to
 ``spark.read.schema(...)`` so the scan itself is typed: no inference
 job, no string-typed timestamps in silver.
+
+The same contract covers the parquet the engine reads back. The
+silver reads of the gold job pass ``OLIST_SCHEMAS``, and
+``catalog.load_table`` reads every lake table with
+``TESTDATA_SCHEMAS`` -- the types Spark infers from the lake files
+(TESTDATA.md) -- so a table's first load runs no footer-inference
+job. ``load_table`` takes only the column *names*, in file order,
+from the parquet footer on the driver. When a lake drifts from the
+declared schema, the failure is loud, never a silent NULL:
+
+* a file column with no declared type raises ``ValueError`` at load
+  (add it here first);
+* a declared column the file lacks is absent from the loaded frame,
+  so a query that uses it fails at analysis;
+* a column whose physical type changed fails the scan, because
+  Spark's parquet reader refuses the conversion (a widening such as
+  int -> bigint, which Spark reads losslessly, is the exception).
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
+    FloatType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
 
 def _st(*fields: tuple[str, object]) -> StructType:
-    return StructType([StructField(n, t(), True) for n, t in fields])
+    """Nullable fields from (name, type class or instance) pairs."""
+    return StructType(
+        [StructField(n, t() if isinstance(t, type) else t, True) for n, t in fields]
+    )
 
 
 # --- Olist medallion tables (reference parity) -------------------------
@@ -124,6 +148,82 @@ OLIST_SCHEMAS: dict[str, StructType] = {
     "order_payments": ORDER_PAYMENTS,
     "order_reviews": ORDER_REVIEWS,
     "products": PRODUCTS,
+}
+
+# --- Synthetic testdata lake (TESTDATA.md) ------------------------------
+# Exactly the types Spark infers from the lake files, identical across
+# the sf0.001/sf0.01/sf0.1 lakes and the degenerate, --nulls and
+# all-empty variants: parquet timestamps without a UTC adjustment read
+# as timestamp_ntz, the embedding list as array<float>.
+TESTDATA_SCHEMAS: dict[str, StructType] = {
+    "region": _st(("r_regionkey", IntegerType), ("r_name", StringType)),
+    "nation": _st(
+        ("n_nationkey", IntegerType),
+        ("n_name", StringType),
+        ("n_regionkey", IntegerType),
+    ),
+    "customer": _st(
+        ("c_custkey", LongType),
+        ("c_name", StringType),
+        ("c_nationkey", IntegerType),
+        ("c_acctbal", DoubleType),
+        ("c_mktsegment", StringType),
+    ),
+    "supplier": _st(
+        ("s_suppkey", LongType),
+        ("s_name", StringType),
+        ("s_nationkey", IntegerType),
+        ("s_acctbal", DoubleType),
+    ),
+    "part": _st(
+        ("p_partkey", LongType),
+        ("p_name", StringType),
+        ("p_brand", StringType),
+        ("p_type", StringType),
+        ("p_size", IntegerType),
+        ("p_retailprice", DoubleType),
+    ),
+    "orders": _st(
+        ("o_orderkey", LongType),
+        ("o_custkey", LongType),
+        ("o_orderstatus", StringType),
+        ("o_totalprice", DoubleType),
+        ("o_orderdate", TimestampNTZType),
+        ("o_orderpriority", StringType),
+    ),
+    "lineitem": _st(
+        ("l_orderkey", LongType),
+        ("l_partkey", LongType),
+        ("l_suppkey", LongType),
+        ("l_linenumber", IntegerType),
+        ("l_quantity", DoubleType),
+        ("l_extendedprice", DoubleType),
+        ("l_discount", DoubleType),
+        ("l_tax", DoubleType),
+        ("l_returnflag", StringType),
+        ("l_linestatus", StringType),
+        ("l_shipdate", TimestampNTZType),
+    ),
+    "events": _st(
+        ("event_id", LongType),
+        ("ts", TimestampNTZType),
+        ("user_id", LongType),
+        ("event_type", StringType),
+        ("value", DoubleType),
+        ("props", StringType),
+    ),
+    "documents": _st(
+        ("doc_id", LongType),
+        ("text", StringType),
+        ("lang", StringType),
+        ("source", StringType),
+        ("n_chars", LongType),
+    ),
+    "embeddings": _st(
+        ("vec_id", LongType),
+        ("embedding", ArrayType(FloatType(), True)),
+        ("label", IntegerType),
+    ),
 }
 
 # Timestamp columns the reference *intended* to cast in bronze->silver

@@ -16,14 +16,26 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def read_parquet(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
+    """Parquet scan over a file/directory/prefix.
+
+    ``schema`` pins the types of a table whose schema the engine
+    declares (the silver tables it writes itself): Spark then skips
+    the footer-inference job it otherwise runs at every read.
+    """
     # no recursiveFileLookup: it would disable Hive-style partition
     # discovery (MES_VENDA=... directories must surface as a column)
     reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
     if merge_schema:
         # schema evolution: files written before a column existed read
         # it back as NULL instead of the scan silently projecting the
