@@ -1,62 +1,28 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries":
+{name: sec}, "sf": ...}.
 
-The stdout line is kept COMPACT (the driver's tail capture truncates
-long lines — round 2's 95-query line overflowed it and the official
-perf record was unparseable): "queries" on stdout carries only the 10
-slowest; the full per-query map goes to stderr and BENCH_FULL.json.
+The timing protocol (session warm-up, untimed pre-pass at
+$SPARK_GRAFT_WARM_DIR, the graph_edge_build row, cold/warm rep pairs)
+is tools/timing.py, shared with tools/probe.py. Each query is forced
+to execute fully (``count()``); timings are wall-clock per query, end
+to end.
 
-Each query is forced to execute fully (count via a noop write-less
-action) after a warm-up of the session; timings are wall-clock per
-query, end to end (scan -> compute -> materialize counts).
-
-Timings are COLD AND WARM per query (VERDICT r5 next-round #2 — a
-single number kept mispricing cache-heavy queries and every round
-devolved into host-noise arguments):
-
-- ALL queries are first warmed untimed at $SPARK_GRAFT_WARM_DIR
-  (default sf0.001 — trivial data) in ONE pre-pass before ANY timing
-  (r12 protocol change, VERDICT r11 ask #2): the old interleaved
-  warm-up (warm q_i, time q_i, warm q_{i+1}, ...) left Spark's
-  SHARED JIT paths cold for early registry slots — the two
-  top-of-registry dedup heavyweights read 5.3-5.8s in-suite vs
-  1.3-2.7s after a full pre-pass, a positional artifact wide enough
-  to swallow a real 2x regression. On a long-lived cluster JIT
-  happens once per executor lifetime, so the pre-pass is the honest
-  steady-state model — and it makes slot position stop mattering;
-- "cold" is the first timed run at the bench SF from a cleared SQL
-  cache — it pays cache fills, broadcast builds, and shared-
-  projection materialization (the honest end-to-end cost);
-- "warm" is an immediate second timed run WITHOUT clearing — the
-  steady-state throughput a long-lived pipeline sees.
-
-Every cold/warm pair is repeated $SPARK_GRAFT_REPS times (default 3;
-VERDICT r7 ask #7 — rounds 4/5/7 each spent a cycle litigating a
-single-rep host-noise swing) and the REPORTED per-query number is the
-per-query MEDIAN; BENCH_FULL.json carries the full
-`queries_cold_med/min/max` and `queries_warm_med/min/max` bands so a
-one-rep outlier is visible as a wide band instead of a fake
-regression. The shared graph edge cache is evicted before every cold
-rep so each rep's `graph_edge_build` pays the real build.
-
-The 20 queries that were most expensive in the PRIOR round's
-committed BENCH_FULL.json run reps+2 reps IN PLACE (medians-of-5 at
-their natural suite position) — ADVICE r11 #3: the r11 protocol
-appended the extra reps at the END of the suite, when page cache and
-JIT were maximally warm, so exactly the adjudicated queries carried
-systematically faster medians and bands mixing early-slot and
-end-of-suite samples spanned 5.5x. Sourcing the top-20 set from the
-prior committed artifact keeps the extra sampling at natural
-position; the chosen names are recorded in "top20_prior".
+Every cold/warm pair is repeated $SPARK_GRAFT_REPS times (default 3)
+and the reported per-query number is the MEDIAN; BENCH_FULL.json
+carries the full ``queries_cold_med/min/max`` and
+``queries_warm_med/min/max`` bands so a one-rep outlier shows as a
+wide band instead of a fake regression. The 20 queries that were
+most expensive in the prior committed BENCH_FULL.json run reps+2 reps
+in place, at their natural suite position (end-of-suite extras were
+systematically warm-biased); the chosen names are in "top20_prior".
 
 The headline "value" is the COLD median sum; "warm_total" sits
-alongside. The stdout "queries" map stays name->cold seconds (the
-documented driver schema, now the median), with "queries_warm"
-carrying the same names' warm medians; full maps go to
-BENCH_FULL.json. The JSON records "warmup_sf" and "reps" so the
-methodology is explicit.
+alongside. The stdout line is kept COMPACT (a tail capture of stdout
+truncates long lines): "queries" carries only the 10 slowest cold
+medians and "queries_warm" the same names' warm medians; the full
+artifact goes to stderr and BENCH_FULL.json.
 """
 
 from __future__ import annotations
@@ -64,198 +30,37 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
-import __spark_entry__ as ep  # noqa: E402
-from bootcamp_stackacademy_datalake_minio_airflow_spark.session import get_spark  # noqa: E402
-
+import timing  # noqa: E402
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qs = ep.queries()
-    # Warm up the JVM (first scan), the Python workers (tiny
-    # mapInPandas), and a broadcast, so one-time process startup isn't
-    # attributed to whichever query happens to run first.
-    try:
-        next(iter(qs.values()))(spark, sf_dir).count()
-        n_workers = spark.sparkContext.defaultParallelism * 2
-        spark.range(n_workers * 4).repartition(n_workers).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
-    except Exception:  # noqa: BLE001
-        pass
-    # drop whatever the warm-up persisted so the first timed query
-    # (which is also the warm-up query) starts from the same cache
-    # state as every other
-    spark.catalog.clearCache()
-
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    sf_dir, warm_dir = timing.SF_DIR, timing.WARM_DIR
+    sf_val = timing.sf_of(sf_dir)
+    spark, qs = timing.start("bench", sf_dir)
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "3")))
+
+    warmups_ok = timing.prepass(spark, qs, warm_dir)
+    top20_prior = (
+        [n for n, _ in timing.prior_ranking(timing.BENCH_FULL, sf_val, qs)[:20]]
+        if reps >= 3
+        else []
+    )
+
     cold_runs: dict[str, list[float]] = {}
     warm_runs: dict[str, list[float]] = {}
-
-    # Full untimed warm-up pre-pass over EVERY query (module
-    # docstring: r12 protocol — kills the positional-JIT inflation on
-    # early registry slots). Periodic clearCache bounds the cache
-    # pressure the pass itself accumulates. Skipped on smoke runs
-    # (reps < 3), where speed beats band quality.
-    warmups_ok = 0
-    if reps >= 3:
-        for i, (name, fn) in enumerate(qs.items()):
-            try:
-                fn(spark, warm_dir).count()
-                warmups_ok += 1
-            except Exception:  # noqa: BLE001
-                pass
-            if i % 25 == 24:
-                spark.catalog.clearCache()
-        spark.catalog.clearCache()
-
-    # Top-20-by-prior-round-cold-median run reps+2 reps at natural
-    # position (module docstring; ADVICE r11 #3). Prior artifact
-    # missing/stale names degrade gracefully to uniform reps.
-    top20_prior: list[str] = []
-    if reps >= 3:
-        try:
-            with open(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_FULL.json",
-                )
-            ) as f:
-                prior_full = json.load(f)
-            # only trust a prior ranking measured at THIS sf with real
-            # reps — a smoke run (reps=1, sf0.01) must not pick the
-            # adjudication set for the official sf0.1 artifact
-            if (
-                str(prior_full.get("sf")) != str(sf_val)
-                or prior_full.get("reps", 0) < 3
-            ):
-                raise ValueError("prior artifact is a different protocol")
-            prior = prior_full.get("queries_cold_med", {})
-            top20_prior = [
-                n
-                for n, _ in sorted(
-                    ((n, m) for n, m in prior.items() if n in qs and m >= 0),
-                    key=lambda kv: kv[1],
-                    reverse=True,
-                )[:20]
-            ]
-        except (OSError, ValueError):
-            pass
-
-    def _median(vals: list[float]) -> float:
-        ok = sorted(v for v in vals if v >= 0)
-        if not ok:
-            return -1.0
-        n = len(ok)
-        mid = ok[n // 2] if n % 2 else (ok[n // 2 - 1] + ok[n // 2]) / 2
-        return round(mid, 3)
-
-    # The graph family shares one per-process edge projection
-    # (suites/graph_shared.py); without this block the build cost lands
-    # on whichever graph query runs FIRST in suite order, making it
-    # look like the slowest query (VERDICT r6 ask #7). Fill the cache
-    # here, timed as its own entry, so the four graph queries report
-    # their marginal cost; the "warm" number is the cache-hit lookup.
-    # Each rep evicts the sf_dir entry first so every cold rep pays
-    # the real build, not an OrderedDict lookup. NOTE: the entries are
-    # localCheckpoints, so Dataset.unpersist cannot free their blocks
-    # (they live outside the SQL cache manager); dropping the dict
-    # reference lets the ContextCleaner reclaim them lazily — bounded
-    # at <= reps stale copies of a tens-of-MB edge set, irrelevant
-    # next to the 128 GiB heap, and the timed REBUILD is real either
-    # way (the dict miss forces the full co-occurrence build).
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.suites import graph_shared
-
-    cold_runs["graph_edge_build"] = []
-    warm_runs["graph_edge_build"] = []
-    try:
-        graph_shared.part_cooccurrence_edges(spark, warm_dir)  # untimed warm-up
-        for rep in range(reps):
-            # evict() is the module's public seam (ADVICE r8: a
-            # hand-built private-dict key would silently no-op on a
-            # key-shape change, turning later "cold" reps into cache
-            # hits). After rep 0 the prior warm run MUST have left an
-            # entry — a miss means eviction is broken; fail loudly.
-            evicted = graph_shared.evict(spark, sf_dir)
-            assert rep == 0 or evicted, (
-                "graph_shared.evict found no cache entry after a warm "
-                "run — cold reps would silently measure cache hits"
-            )
-            t0 = time.perf_counter()
-            graph_shared.part_cooccurrence_edges(spark, sf_dir)
-            cold_runs["graph_edge_build"].append(
-                round(time.perf_counter() - t0, 3)
-            )
-            t0 = time.perf_counter()
-            graph_shared.part_cooccurrence_edges(spark, sf_dir)
-            warm_runs["graph_edge_build"].append(
-                round(time.perf_counter() - t0, 3)
-            )
-    except AssertionError:
-        # a broken evict() means every later "cold" rep silently
-        # measures cache hits — the whole artifact is wrong, so abort
-        # rather than record a -1.0 rep (ADVICE r9 #3: the assert used
-        # to be swallowed by the handler below)
-        raise
-    except Exception as e:  # noqa: BLE001
-        print(f"bench error in graph_edge_build: {e}", file=sys.stderr)
-        cold_runs["graph_edge_build"].append(-1.0)
-        warm_runs["graph_edge_build"].append(-1.0)
-
+    cold_runs["graph_edge_build"], warm_runs["graph_edge_build"] = timing.time_edge_build(
+        spark, sf_dir, warm_dir, reps
+    )
     for name, fn in qs.items():
-        if reps < 3:
-            # smoke runs skip the global pre-pass; keep the old
-            # interleaved per-query warm-up so the single rep still
-            # gets a codegen-cache hit
-            try:
-                fn(spark, warm_dir).count()
-                warmups_ok += 1
-            except Exception:  # noqa: BLE001
-                pass
-        cold_runs[name] = []
-        warm_runs[name] = []
         n_reps = reps + 2 if name in top20_prior else reps
-        for _ in range(n_reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).count()
-                cold_runs[name].append(round(time.perf_counter() - t0, 3))
-            except Exception as e:  # noqa: BLE001
-                print(f"bench error in {name}: {e}", file=sys.stderr)
-                cold_runs[name].append(-1.0)
-                warm_runs[name].append(-1.0)
-                break  # a failing query fails every rep; don't retry
-            # warm run: immediately, WITHOUT clearing — steady state
-            t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).count()
-                warm_runs[name].append(round(time.perf_counter() - t0, 3))
-            except Exception as e:  # noqa: BLE001
-                print(f"bench warm error in {name}: {e}", file=sys.stderr)
-                warm_runs[name].append(-1.0)
-        # operators persist() intermediates; clear between queries so
-        # later timings don't inherit earlier queries' cache pressure
-        spark.catalog.clearCache()
+        cold_runs[name], warm_runs[name], _ = timing.time_query(spark, name, fn, sf_dir, n_reps)
 
-    # The prose-lake tier (VERDICT r9 ask #7) is no longer a bench
-    # special case: proselake_{winnow_overlap_pairs, doc_dup_span_
-    # stats, langid_eval_metrics} are oracle-paired registry queries
-    # (suites/prose_lake.py, VERDICT r10 ask #2) and are timed by the
-    # main loop above like everything else — so set(BENCH) minus
-    # set(registry) is exactly {graph_edge_build}.
-
-    timings = {n: _median(v) for n, v in cold_runs.items()}
-    warm_timings = {n: _median(v) for n, v in warm_runs.items()}
+    cold_band = {n: timing.band(v) for n, v in cold_runs.items()}
+    warm_band = {n: timing.band(v) for n, v in warm_runs.items()}
+    timings = {n: b[0] for n, b in cold_band.items()}
+    warm_timings = {n: b[0] for n, b in warm_band.items()}
 
     # drift guard: every registered query must appear in the loop —
     # a silently vanished query would read as a faster suite
@@ -282,11 +87,9 @@ def main() -> None:
         # warm raised — was filtered out of the warm median and left
         # no trace). {} when all reps of both kinds ran.
         "queries_failed_reps": {
-            n: sum(1 for x in cold_runs.get(n, []) if x < 0)
-            + sum(1 for x in warm_runs.get(n, []) if x < 0)
-            for n in set(cold_runs) | set(warm_runs)
-            if any(x < 0 for x in cold_runs.get(n, []))
-            or any(x < 0 for x in warm_runs.get(n, []))
+            n: failed
+            for n in cold_runs
+            if (failed := sum(1 for x in cold_runs[n] + warm_runs[n] if x < 0))
         },
         # median-vs-median context (VERDICT r8 ask #6): same-day
         # same-tree runs on this host have spanned ~0.8-1.1x of each
@@ -321,30 +124,17 @@ def main() -> None:
         "reps_effective": {
             n: sum(1 for x in cold_runs[n] if x >= 0)
             for n in cold_runs
-            if any(x < 0 for x in cold_runs[n])
-            or any(x < 0 for x in warm_runs.get(n, []))
+            if any(x < 0 for x in cold_runs[n] + warm_runs[n])
             or (n in qs and len(cold_runs[n]) != reps)
         },
         "queries": timings,  # per-query COLD median (driver schema)
         "queries_warm": warm_timings,  # per-query WARM median
         "queries_cold_med": timings,
-        "queries_cold_min": {
-            n: (min((x for x in v if x >= 0), default=-1.0))
-            for n, v in cold_runs.items()
-        },
-        "queries_cold_max": {
-            n: (max((x for x in v if x >= 0), default=-1.0))
-            for n, v in cold_runs.items()
-        },
+        "queries_cold_min": {n: b[1] for n, b in cold_band.items()},
+        "queries_cold_max": {n: b[2] for n, b in cold_band.items()},
         "queries_warm_med": warm_timings,
-        "queries_warm_min": {
-            n: (min((x for x in v if x >= 0), default=-1.0))
-            for n, v in warm_runs.items()
-        },
-        "queries_warm_max": {
-            n: (max((x for x in v if x >= 0), default=-1.0))
-            for n, v in warm_runs.items()
-        },
+        "queries_warm_min": {n: b[1] for n, b in warm_band.items()},
+        "queries_warm_max": {n: b[2] for n, b in warm_band.items()},
         "sf": sf_val,
         # honest methodology record: claim the warm-up only if it
         # actually ran for every query (a missing warm dir would
@@ -360,10 +150,7 @@ def main() -> None:
     # full per-query maps: stderr + a sibling file (never stdout)
     print(json.dumps(full), file=sys.stderr)
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
-            "w",
-        ) as f:
+        with open(timing.BENCH_FULL, "w") as f:
             json.dump(full, f, indent=1)
     except OSError:
         pass
@@ -371,8 +158,8 @@ def main() -> None:
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
     compact = dict(full)
-    # the full med/min/max bands live in BENCH_FULL.json only — the
-    # driver's tail capture truncates long stdout lines (r2 incident)
+    # the full med/min/max bands live in BENCH_FULL.json only — a
+    # tail capture of stdout truncates long lines (r2 incident)
     for k in list(compact):
         if k.startswith("queries_cold_") or k.startswith("queries_warm_"):
             del compact[k]

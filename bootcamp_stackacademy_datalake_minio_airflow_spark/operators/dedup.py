@@ -57,30 +57,6 @@ def dedup_exact(df: DataFrame, cols: list[str], order_by: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _shingles_of(c: Column, n: int) -> Column:
-    """Distinct character n-grams of an ALREADY-NORMALIZED column.
-
-    The input must be a materialized column, not an expression:
-    transform() re-evaluates its target expression per element, so an
-    inlined regex normalization would run O(len) times per row.
-    Documents shorter than ``n`` produce one whole-text shingle so
-    they still participate.
-    """
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - F.lit(n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substr(c, i, F.lit(n))))
-
-
-def char_shingles(col: str | Column, n: int = 5) -> Column:
-    """Distinct character n-grams of the normalized text, as an array.
-
-    Single-expression convenience form. For corpus-scale shingling,
-    materialize ``normalize_text`` behind an exchange first (see
-    ``_norm_base`` in minhash_lsh_pairs) — otherwise the
-    normalization regex is re-evaluated once per shingle.
-    """
-    return _shingles_of(normalize_text(col), n)
-
-
 def _word_shingles_of(c: Column, n: int) -> Column:
     """Distinct word n-grams (space-joined) of an ALREADY-NORMALIZED
     column — the MinHash shingle unit.
@@ -90,10 +66,9 @@ def _word_shingles_of(c: Column, n: int) -> Column:
     instead of one per CHARACTER, so the signature stage processes
     ~6x fewer rows for near-identical pair decisions on prose.
     Documents shorter than ``n`` words collapse to one whole-text
-    shingle, mirroring ``_shingles_of``. The split() inside the
-    lambda re-evaluates per element (interpreted HOF) — use only on
-    verification survivors, never the corpus; the corpus path is
-    ``_shingle_hashes``.
+    shingle. The split() inside the lambda re-evaluates per element
+    (interpreted HOF) — use only on verification survivors, never the
+    corpus; the corpus path is ``_shingle_hashes``.
     """
     w = F.split(c, " ")
     idx = F.sequence(F.lit(1), F.greatest(F.size(w) - F.lit(n - 1), F.lit(1)))

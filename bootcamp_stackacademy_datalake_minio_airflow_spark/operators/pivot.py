@@ -4,12 +4,10 @@ Re-expresses ``pd.pivot_table(index=key, columns=col, aggfunc='sum')``
 (reference: scripts/silver_to_gold/ingestion_vendas_silver_to_gold.py:91-92)
 as ``groupBy(key).pivot(col, values).sum(value)``.
 
-Scale notes: with a pinned value list the pivot is a single hash
-aggregation (map-side partial -> one shuffle on the group key); without
-it Spark first runs a distinct job over ``pivot_col`` to discover the
-output schema. At 100 TB the discovery job is a full extra pass, so
-callers should always pin values when the domain is known (the vendas
-job pins the 5 payment types, schemas.PAYMENT_TYPES).
+Scale notes: the value list is pinned, so the pivot is a single hash
+aggregation (map-side partial -> one shuffle on the group key) with no
+distinct job to discover the output schema (the vendas job pins the 5
+payment types, schemas.PAYMENT_TYPES).
 """
 
 from __future__ import annotations
@@ -25,7 +23,7 @@ def pivot_sum(
     group_key: str | Sequence[str],
     pivot_col: str,
     value_col: str,
-    values: Sequence[str] | None = None,
+    values: Sequence[str],
     round_to: int | None = None,
 ) -> DataFrame:
     """SUM(value_col) per (group_key, pivot_col), pivot_col spread into
@@ -35,11 +33,7 @@ def pivot_sum(
     checked queries so float summation order cannot flip the last bit.
     """
     keys = [group_key] if isinstance(group_key, str) else list(group_key)
-    grouped = df.groupBy(*keys)
-    pivoted = (
-        grouped.pivot(pivot_col, list(values)) if values is not None else grouped.pivot(pivot_col)
-    )
-    out = pivoted.agg(F.sum(value_col))
+    out = df.groupBy(*keys).pivot(pivot_col, list(values)).agg(F.sum(value_col))
     if round_to is not None:
         for c in out.columns:
             if c not in keys:

@@ -258,9 +258,9 @@ def chunk_tokens(
     The tokenization is bound ONCE per row via the single-element-array
     lambda trick (``transform(array(toks), tk -> ...)``): projection
     collapse otherwise inlines the regex+split into every reference,
-    re-tokenizing the document per chunk (the pitfall documented at
-    dedup._shingles_of — here solved without an exchange, keeping the
-    plan map-only).
+    re-tokenizing the document per chunk (transform() re-evaluates its
+    target expression per element) — here solved without an exchange,
+    keeping the plan map-only.
 
     Requires ``stride <= window``: a larger stride would silently skip
     the tokens between window and stride ends (found by the coverage

@@ -57,7 +57,6 @@ def build_vendas(
     payment_types: Sequence[str] = tuple(PAYMENT_TYPES),
     renames: Mapping[str, str] = VENDAS_RENAMES,
     round_payments_to: int | None = None,
-    broadcast_dims: bool = True,
     strict_payment_types: bool = True,
 ) -> DataFrame:
     """Star denormalization with the reference's exact semantics.
@@ -120,9 +119,9 @@ def build_vendas(
     df = star_left_join(
         items_p,
         [
-            (orders_p, "order_id", broadcast_dims),
-            (products_p, "product_id", broadcast_dims),
-            (customers_p, "customer_id", broadcast_dims),
+            (orders_p, "order_id", True),
+            (products_p, "product_id", True),
+            (customers_p, "customer_id", True),
             (pay_pivot, "order_id", False),
         ],
     )

@@ -31,9 +31,7 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    header: bool = True,
     multi_line: bool = False,
-    timestamp_format: str = "yyyy-MM-dd HH:mm:ss",
     corrupt_col: str | None = None,
 ) -> DataFrame:
     """Typed CSV scan over a file/directory/prefix.
@@ -64,8 +62,6 @@ def read_csv(
     reader = (
         spark.read.schema(read_schema)
         .options(**CSV_PARSE_OPTIONS)
-        .option("header", str(header).lower())
-        .option("timestampFormat", timestamp_format)
         .option("mode", "PERMISSIVE")
     )
     if corrupt_col is not None:

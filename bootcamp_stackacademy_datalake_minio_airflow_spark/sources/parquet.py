@@ -51,18 +51,13 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: Sequence[str] | None = None,
-    target_file_rows: int | None = None,
 ) -> None:
     """Write parquet to a lake path.
 
     ``partition_by`` enables partition pruning downstream (e.g. gold
-    vendas by month of DATA_VENDA, SURVEY §7 M6). ``target_file_rows``
-    caps rows per output file (maxRecordsPerFile) so partitions with
-    skewed volume still emit scan-sized files instead of multi-GB ones.
+    vendas by month of DATA_VENDA, SURVEY §7 M6).
     """
     writer = df.write.mode(mode)
-    if target_file_rows:
-        writer = writer.option("maxRecordsPerFile", str(target_file_rows))
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
