@@ -1,6 +1,6 @@
 """Engine primitives shared by the operators and suites.
 
-Two concerns live here so that no operator module hand-codes them:
+Three concerns live here so that no operator module hand-codes them:
 
 - **Cache policy.** ``cache_scope`` persists the intermediates an
   operator re-reads and releases every one of them when the block
@@ -12,10 +12,14 @@ Two concerns live here so that no operator module hand-codes them:
   exchange ahead of fan-out work), ``normalize_text`` (the canonical
   text form every fingerprint/dedup operator hashes) and
   ``_norm_base`` (that form materialized behind an exchange).
+- **Driver-side rounding.** ``round_half_away`` rounds a Python float
+  exactly as SQL ``ROUND`` does, for operators that feed driver-side
+  state back into a plan the oracle replays.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
@@ -134,3 +138,23 @@ def _norm_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         ),
         "__id",
     )
+
+
+def round_half_away(q: float, scale: float) -> float:
+    """Round half away from zero at decimal ``scale`` (1e4 = 4
+    decimals, 1e6 = 6) on the float product — bit-identical to SQL
+    ROUND (DuckDB: std::round(x * scale) / scale). Python's round() is
+    half-EVEN, which disagrees exactly when q lands on a dyadic
+    boundary (the sf0.1 sweep hit 17/128 = 0.1328125 → Python 0.132812
+    vs SQL 0.132813 → hash mismatch). |p| - floor(|p|) is exact for
+    |p| < 2^52, so the .5 comparison never sees an addition rounding
+    error. Negative q mirrors through abs: a floor-based form rounds
+    -0.1328125 toward zero."""
+    p = abs(q) * scale
+    fl = math.floor(p)
+    r = (fl + 1 if p - fl >= 0.5 else fl) / scale
+    # copysign, not a q < 0 branch: SQL ROUND preserves IEEE -0.0
+    # (and rounds tiny negatives to -0.0), while -0.0 < 0 is False —
+    # a sign-branch returns +0.0 there and a hash that formats floats
+    # would split on "0.0" vs "-0.0"
+    return math.copysign(r, q)

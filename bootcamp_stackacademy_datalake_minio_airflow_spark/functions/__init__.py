@@ -23,19 +23,6 @@ def null_fill(df: DataFrame, value: float, columns: Sequence[str]) -> DataFrame:
     return df.na.fill(value, subset=list(columns))
 
 
-def to_timestamp_cols(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """String -> timestamp for the given columns.
-
-    Reference F2: ``pd.to_datetime`` on 5 orders columns
-    (ingestion_orders_bronze_to_silver.py:71-75) -- computed there but
-    dropped (SURVEY §3.1); persisted here as intended.
-    """
-    out = df
-    for c in columns:
-        out = out.withColumn(c, F.to_timestamp(F.col(c)))
-    return out
-
-
 def to_date_col(col: str | Column) -> Column:
     """Timestamp -> calendar date. Reference F3:
     ``pd.to_datetime(col).dt.date`` (ingestion_vendas_silver_to_gold.py:123)."""

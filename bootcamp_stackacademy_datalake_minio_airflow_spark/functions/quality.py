@@ -29,20 +29,6 @@ def orphans(child: DataFrame, parent: DataFrame, fk: str, pk: str) -> DataFrame:
     return child.join(parent, child[fk] == parent[pk], "left_anti")
 
 
-def duplicate_keys(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Key values appearing more than once (uniqueness violations)."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
-def out_of_range(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
-    """Rows whose value falls outside [lo, hi] (NULLs not flagged)."""
-    return df.filter(F.col(col).isNotNull() & ~F.col(col).between(lo, hi))
-
-
 def expectation_report(
     df: DataFrame, expectations: dict[str, "F.Column"]
 ) -> DataFrame:

@@ -1,7 +1,7 @@
 """Manifest-based snapshot isolation for plain-parquet tables
-(extension): time travel, rollback, orphan vacuum, and optimistic
-concurrency — the Iceberg/Delta capability subset that needs nothing
-but a filesystem with create-fails-if-exists rename semantics.
+(extension): time travel, rollback and optimistic concurrency — the
+Iceberg/Delta capability subset that needs nothing but a filesystem
+with create-fails-if-exists rename semantics.
 
 Layout::
 
@@ -20,8 +20,8 @@ reads consistently forever (that is what time travel is).
 Scale notes: manifests carry segment DIRECTORY names, not file lists —
 metadata stays O(commits), and the segment's parquet footers remain
 the source of file-level stats. Commit cost is one rename regardless
-of table size. Vacuum is the only operation that deletes data, and
-only segments no retained manifest references.
+of table size. Nothing in the layer deletes data: every manifest's
+segments stay on disk, so every version stays readable.
 """
 
 from __future__ import annotations
@@ -167,12 +167,11 @@ def rollback_snapshot(spark: SparkSession, root: str, to_version: int) -> int:
             "segments": target["segments"],
         }
         if _write_json_atomic(spark, _manifest_path(root, version), doc):
-            # Post-commit segment verification: a concurrent vacuum may
-            # have deleted to_version's segments between our manifest
-            # read and the CAS (they were only referenced by expired
-            # manifests). Publishing a latest that points at deleted
-            # data would break EVERY subsequent read — un-commit and
-            # raise instead (review finding).
+            # Post-commit segment verification: a retention job outside
+            # this layer may have deleted to_version's segments between
+            # our manifest read and the CAS. Publishing a latest that
+            # points at deleted data would break EVERY subsequent read
+            # — un-commit and raise instead.
             fs, jvm = _fs_for(spark, root)
             missing = [
                 s
@@ -183,82 +182,11 @@ def rollback_snapshot(spark: SparkSession, root: str, to_version: int) -> int:
                 fs.delete(_jp(jvm, _manifest_path(root, version)), False)
                 raise RuntimeError(
                     f"rollback to v{to_version} aborted: segment(s) "
-                    f"{missing} were vacuumed concurrently; the committed "
+                    f"{missing} were deleted concurrently; the committed "
                     "manifest was removed to keep the log readable"
                 )
             return version
     raise RuntimeError("rollback lost the version race 10 times")
-
-
-def vacuum_snapshots(
-    spark: SparkSession,
-    root: str,
-    keep_last: int = 1,
-    min_segment_age_seconds: int = 3600,
-) -> tuple[int, int]:
-    """Expire all but the last ``keep_last`` snapshots and delete data
-    segments no retained snapshot references. Returns ``(n_manifests,
-    n_segments)`` removed. The only destructive operation in the
-    layer; time travel reaches back exactly ``keep_last`` versions
-    afterwards.
-
-    ``min_segment_age_seconds`` protects IN-FLIGHT commits: a writer
-    stages its segment BEFORE winning the manifest CAS, so for that
-    window the segment is unreferenced by any manifest — vacuuming it
-    would let the commit publish a manifest pointing at deleted data.
-    Unreferenced segments younger than the threshold (by filesystem
-    modification time) are skipped; set it above the longest plausible
-    write-to-commit gap (the default hour is generous), or to 0 only
-    when no writer can be concurrent."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    root = root.rstrip("/")
-    vs = table_versions(spark, root)
-    expire, keep = vs[:-keep_last], vs[-keep_last:]
-    live: set[str] = set()
-    for v in keep:
-        live.update(_read_json(spark, _manifest_path(root, v))["segments"])
-    fs, jvm = _fs_for(spark, root)
-    for v in expire:
-        fs.delete(_jp(jvm, _manifest_path(root, v)), False)
-    n_seg = 0
-    ddir = f"{root}/{_DATA_DIR}"
-    # Optimistic re-check against concurrent commits (incl. rollback):
-    # any manifest that appeared since the first version listing —
-    # e.g. a rollback re-referencing old segments — contributes its
-    # segments to the live set. Candidates are gathered first and the
-    # manifest re-list runs IMMEDIATELY before the deletes, so the
-    # remaining race window is just the delete loop itself. Together
-    # with rollback's post-commit verification this NARROWS (does not
-    # fully close — a rollback that commits after the re-list and
-    # verifies before our deletes land can still lose segments; see
-    # ADVICE r5) the vacuum-vs-rollback race; min_segment_age plus
-    # the rollback retry loop covers the residual in practice.
-    candidates = []
-    if fs.exists(_jp(jvm, ddir)):
-        import time as _time
-
-        now_ms = _time.time() * 1000.0
-        for st in fs.listStatus(_jp(jvm, ddir)):
-            name = st.getPath().getName()
-            if name in live:
-                continue
-            age_s = (now_ms - st.getModificationTime()) / 1000.0
-            if age_s < min_segment_age_seconds:
-                continue  # possibly an in-flight commit's segment
-            candidates.append((name, st.getPath()))
-    if candidates:
-        for v in table_versions(spark, root):
-            if v not in keep:
-                live.update(
-                    _read_json(spark, _manifest_path(root, v))["segments"]
-                )
-        for name, jpath in candidates:
-            if name in live:
-                continue
-            fs.delete(jpath, True)
-            n_seg += 1
-    return len(expire), n_seg
 
 
 def mirror_to_snapshot(

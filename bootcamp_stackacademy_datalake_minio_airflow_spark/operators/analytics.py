@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize
+from ..engine import cache_scope, fanout_repartition, materialize, round_half_away
 
 
 def pareto_front_2d(df: DataFrame, cost_col: str, gain_col: str) -> DataFrame:
@@ -752,12 +752,10 @@ def poisson_bootstrap_mean_ci(
     lo = ordered[lo_idx - 1][0] if len(ordered) >= lo_idx else None
     hi = ordered[hi_idx - 1][0] if len(ordered) >= hi_idx else None
     # corpus mean off any one block's piggybacked (Σ__v, n) — SQL
-    # ROUND semantics via the house half-away helper; empty input
+    # ROUND semantics via engine.round_half_away; empty input
     # (no block rows at all) mirrors avg() over zero rows: NULL
-    from .multimodal import _round_half_away
-
     mean = (
-        _round_half_away(float(rows[0]["__sv"]) / int(rows[0]["__cn"]), 1e4)
+        round_half_away(float(rows[0]["__sv"]) / int(rows[0]["__cn"]), 1e4)
         if rows
         else None
     )

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize
+from ..engine import cache_scope, fanout_repartition, materialize, round_half_away
 
 
 def train_embedding_classifier(
@@ -185,11 +185,9 @@ def _gd_fit(
 ) -> list[float] | None:
     """The shared GD loop: ``n_steps`` map-side-combinable gradient
     aggregates, weights half-away-ROUND(·, 6) between steps (matches
-    SQL ROUND; Python round() is half-even — see multimodal's
-    dyadic-boundary hash split, r8 ask #4 / ADVICE r9 #2). Returns
+    SQL ROUND; Python round() is half-even — see
+    engine.round_half_away). Returns
     the final weights [bias, w1..wd], or None on empty input."""
-    from .multimodal import _round_half_away6
-
     w = [0.0] * (1 + d)
     for _ in range(n_steps):
         z = F.lit(w[0])
@@ -206,7 +204,7 @@ def _gd_fit(
         if not n:
             return None
         w = [
-            _round_half_away6(w[j] - lr * (float(row[f"__g{j}"]) / n))
+            round_half_away(w[j] - lr * (float(row[f"__g{j}"]) / n), 1e6)
             for j in range(len(w))
         ]
     return w
@@ -583,8 +581,6 @@ def isotonic_calibration_bins(
     rates are half-away-ROUND(·, 6) (SQL ROUND; Python round() is
     half-even). Returns one row per non-empty bin: (bin, n_docs,
     frac_pos_raw, frac_pos_iso), iso non-decreasing in bin."""
-    from .multimodal import _round_half_away6
-
     spark = df.sparkSession
     schema = "bin INT, n_docs BIGINT, frac_pos_raw DOUBLE, frac_pos_iso DOUBLE"
     # Range-guard the grid (VERDICT r11 nit / the bucket_width
@@ -637,9 +633,9 @@ def isotonic_calibration_bins(
             blocks[-1][2] += p2
     rows, i = [], 0
     for cnt, bn, bpos in blocks:
-        iso = _round_half_away6(bpos / bn)
+        iso = round_half_away(bpos / bn, 1e6)
         for _ in range(cnt):
             _bin, n, pos = hist[i]
-            rows.append((_bin, n, _round_half_away6(pos / n), iso))
+            rows.append((_bin, n, round_half_away(pos / n, 1e6), iso))
             i += 1
     return spark.createDataFrame(rows, schema)

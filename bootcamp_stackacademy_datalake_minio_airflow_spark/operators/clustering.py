@@ -34,8 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition
-from .multimodal import _round_half_away6
+from ..engine import cache_scope, fanout_repartition, round_half_away
 
 #: hard ceiling on the codebook collect — k*dim rows, not corpus rows
 _MAX_CODEBOOK_CELLS = 65536
@@ -137,7 +136,7 @@ def kmeans_lloyd_seeded(
                 n0, s0 = acc.get(c, (0, [0.0] * dim))
                 acc[c] = (n0 + int(r["__n"]), [a + b for a, b in zip(s0, r["__s"])])
             centroids = {
-                c: [_round_half_away6(s_j / n) for s_j in s]
+                c: [round_half_away(s_j / n, 1e6) for s_j in s]
                 for c, (n, s) in acc.items()
             }  # empty clusters drop out on BOTH engines
 
@@ -145,15 +144,13 @@ def kmeans_lloyd_seeded(
         # inertia partials, reduced driver-side; the result is a
         # codebook-sized literal table (bounded by k, never data)
         parts = _lloyd_partials(base, centroids, want_inertia=True)
-        from .multimodal import _round_half_away
-
         acc2: dict[int, tuple[int, float]] = {}
         for r in parts:
             c = int(r["__c"])
             n0, d0 = acc2.get(c, (0, 0.0))
             acc2[c] = (n0 + int(r["__n"]), d0 + float(r["__sd"]))
         rows = [
-            (c, n, _round_half_away(d, 1e2)) for c, (n, d) in sorted(acc2.items())
+            (c, n, round_half_away(d, 1e2)) for c, (n, d) in sorted(acc2.items())
         ]
         return spark.createDataFrame(
             rows, "cluster_id INT, n_points BIGINT, inertia DOUBLE"
@@ -173,7 +170,7 @@ def _lloyd_partials(base: DataFrame, centroids: dict[int, list[float]], want_ine
 
     Exactness contract (same recurrence the DuckDB oracle replays):
     d² = ROUND(__vv − 2·v·c + c·c, 4) — the half-away round mirrors
-    SQL ROUND via the floor(p)+carry formula (multimodal's helper,
+    SQL ROUND via the floor(p)+carry formula (engine.round_half_away,
     vectorized); ties at the quantized d² go to the smallest cluster
     id (np.argmin keeps the FIRST minimum over the cid-sorted
     codebook — exactly least(struct(d, c))'s tie rule). Sum orders

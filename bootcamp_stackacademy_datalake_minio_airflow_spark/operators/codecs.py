@@ -2,14 +2,15 @@
 
 The container has no image/audio libraries, but PNG and WAV are
 decodable with nothing beyond ``zlib``/``struct``/``wave`` + numpy —
-so for those two formats the multimodal pipeline's decode stage is
-REAL, not stubbed: actual DEFLATE inflation, actual PNG scanline
-defiltering (all five filter types), actual PCM frame parsing.
-JPEG/MP4/etc. genuinely require codec libraries and stay behind the
-honest stub in operators/multimodal.py.
+so for those two formats decoding is REAL, not stubbed: actual DEFLATE
+inflation, actual PNG scanline defiltering (all five filter types),
+actual PCM frame parsing. JPEG/MP4/etc. genuinely require codec
+libraries; operators/multimodal.py's feature extractor stays an honest
+stub for them.
 
 Everything here is per-row CPU work executed inside Arrow-batched
-mapInPandas workers (see multimodal.py) — the decoders themselves are
+mapInPandas workers (the registry's multimodal_png_roundtrip and
+multimodal_wav_roundtrip queries) — the codecs themselves are
 deliberately dependency-free and deterministic.
 """
 
@@ -23,23 +24,9 @@ import zlib
 import numpy as np
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_WAV_MAGIC_RIFF = b"RIFF"
-_WAV_MAGIC_WAVE = b"WAVE"
 
 #: PNG color type -> samples per pixel
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def sniff_codec(data: bytes | None) -> str:
-    """Identify the container from magic bytes: 'png' | 'wav' |
-    'unknown'."""
-    if not data or len(data) < 12:
-        return "unknown"
-    if data[:8] == PNG_MAGIC:
-        return "png"
-    if data[:4] == _WAV_MAGIC_RIFF and data[8:12] == _WAV_MAGIC_WAVE:
-        return "wav"
-    return "unknown"
 
 
 def decode_png(data: bytes) -> np.ndarray:
@@ -188,33 +175,3 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
         wf.setframerate(sample_rate)
         wf.writeframes(samples.astype("<i2").tobytes())
     return buf.getvalue()
-
-
-def wav_features(data: bytes) -> dict:
-    """Signal-level audio features from a real WAV decode: duration,
-    RMS, peak, zero-crossing rate (mono-mixed)."""
-    samples, sr = decode_wav(data)
-    mono = samples.mean(axis=1)
-    n = len(mono)
-    if n == 0:
-        return {
-            "sample_rate": sr,
-            "n_samples": 0,
-            "channels": int(samples.shape[1]),
-            "duration_ms": 0.0,
-            "rms": 0.0,
-            "peak": 0.0,
-            "zero_cross_rate": 0.0,
-        }
-    rms = float(np.sqrt(np.mean(mono**2)))
-    peak = float(np.max(np.abs(mono)))
-    zc = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n > 1 else 0.0
-    return {
-        "sample_rate": sr,
-        "n_samples": int(n),
-        "channels": int(samples.shape[1]),
-        "duration_ms": round(n / sr * 1000.0, 3),
-        "rms": round(rms, 6),
-        "peak": peak,
-        "zero_cross_rate": round(zc, 6),
-    }

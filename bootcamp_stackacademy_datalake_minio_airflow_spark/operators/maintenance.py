@@ -1,58 +1,23 @@
 """Lake maintenance & skew/scale hygiene operators (SURVEY §7 M6).
 
 The reference writes one flat file per table and has no notion of
-skew, compaction, or co-location. These operators are the library
-pieces a 100 TB lake needs on top of the declarative plans:
+skew or compaction. These operators are the library pieces a 100 TB
+lake needs on top of the declarative plans:
 
-- salted joins for keys whose frequency distribution breaks a plain
-  shuffle join (one reducer gets the hot key's entire row set);
 - small-file compaction (object stores degrade badly at
   many-tiny-files: listing cost, per-object request overhead, scan
   task explosion);
-- bucketed tables for repeated co-located joins on the same key
-  (pre-shuffled on disk: the join runs with zero exchanges).
+- salted distinct counts for keys whose frequency distribution breaks
+  a plain shuffle aggregation (one reducer gets the hot key's entire
+  value set). Skewed joins need no operator: AQE's skew-join, enabled
+  in session.py, splits them at runtime;
+- outlier clipping and group-mean imputation for feature columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    how: str = "inner",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Equi-join where ``left`` is large with skewed keys and
-    ``right`` is modest-sized: salt the left key with a random bucket
-    and replicate each right row into all buckets, so a hot key's rows
-    spread over ``salt_buckets`` reducers instead of one.
-
-    AQE's skew-join handles most cases at runtime (enabled in
-    session.py); explicit salting remains for the pathological single
-    key hotter than a whole partition-split budget, and for engines/
-    modes where AQE cannot rewrite the join. Replication multiplies
-    the right side by ``salt_buckets`` — keep it for dimension-sized
-    right sides.
-    """
-    if how.lower().replace("_", "") in ("right", "rightouter", "full", "fullouter", "outer"):
-        raise ValueError(
-            f"how={how!r}: salting replicates every right row into all "
-            "buckets, so right/full outer joins would null-extend the "
-            f"{salt_buckets - 1} unmatched replicas into spurious rows; "
-            "swap the sides or use a plain join"
-        )
-    salted_l = left.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    salted_r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    out = salted_l.join(salted_r, on=[key, "__salt"], how=how)
-    return out.drop("__salt")
 
 
 def compact(
@@ -91,28 +56,6 @@ def compact(
         )
     publish_swap(spark, staging, path)
     return target
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    num_buckets: int = 32,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
-
-    Two bucketed tables with the same bucket key + count join WITHOUT
-    any exchange (and without a sort, if sorted): the shuffle was paid
-    once at write time and is reused by every subsequent join — the
-    co-location strategy for fact-to-fact joins repeated across a
-    pipeline.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, bucket_by)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table)
 
 
 def salted_distinct_count(

@@ -18,20 +18,12 @@ identity Σrx²/n − μ², so no second data pass is needed.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize
-from .multimodal import _round_half_away, _round_half_away6
+from ..engine import cache_scope, fanout_repartition, materialize, round_half_away
 
 _PI = 3.141592653589793
-
-
-def _round4(q: float) -> float:
-    """SQL-ROUND(x, 4) — the shared half-away helper at 4 decimals."""
-    return _round_half_away(q, 1e4)
 
 
 def _dens(x, w: float, mu: float, var: float):
@@ -126,8 +118,8 @@ def gmm_em_1d(
             var0 = 1.0
         params = [
             # [weight, mu, var] per component — quartile-point init
-            [0.5, _round4(mn + (mx - mn) / 4.0), var0],
-            [0.5, _round4(mn + 3.0 * (mx - mn) / 4.0), var0],
+            [0.5, round_half_away(mn + (mx - mn) / 4.0, 1e4), var0],
+            [0.5, round_half_away(mn + 3.0 * (mx - mn) / 4.0, 1e4), var0],
         ]
 
         for _ in range(n_iter):
@@ -150,10 +142,10 @@ def gmm_em_1d(
                     # oracle's p{t} CASE WHEN n_k > 0 branch mirrors this
                     nxt.append(params[k - 1])
                     continue
-                mu = _round_half_away6(float(row[f"s{k}"]) / nk)
-                var = _round_half_away6(float(row[f"q{k}"]) / nk - mu * mu)
+                mu = round_half_away(float(row[f"s{k}"]) / nk, 1e6)
+                var = round_half_away(float(row[f"q{k}"]) / nk - mu * mu, 1e6)
                 nxt.append(
-                    [_round_half_away6(nk / n), mu, var if var > 0 else 1e-06]
+                    [round_half_away(nk / n, 1e6), mu, var if var > 0 else 1e-06]
                 )
             params = nxt
 

@@ -1,61 +1,36 @@
 """Multimodal column handling (extension).
 
-Images/audio/video are opaque ``binary`` columns with a typed metadata
-struct. The Spark-side plumbing — schemas, Arrow-batched mapInPandas,
-partition sizing — is real and tested. Media decoding is REAL for the
-formats decodable with the Python stdlib (PNG: zlib inflate +
-scanline defilter; WAV: RIFF/PCM parsing — operators/codecs.py) and
-honestly STUBBED for formats that require codec libraries absent from
-this container (JPEG/MP4/...): for those, decode functions either
-raise NotImplementedError (strict mode) or produce a clearly-marked
-deterministic fake derived from the bytes, so pipelines exercise the
-full distributed path end-to-end.
+Images/audio/video are opaque ``binary`` columns. ``extract_features``
+is the Spark-side plumbing — a narrow projection, a repartition to
+decode parallelism, Arrow-batched mapInPandas — and it is real and
+tested. Its per-asset extractor is honestly STUBBED: a real
+image/audio model needs libraries absent from this container, so the
+extractor emits a clearly-marked deterministic fake derived from the
+bytes, or raises NotImplementedError in strict mode. The formats
+decodable with the Python stdlib (PNG: zlib inflate + scanline
+defilter; WAV: RIFF/PCM parsing) have REAL codecs in
+operators/codecs.py, gated by the registry's round-trip queries.
 
-Scale notes: media rows are large (MBs), so partition sizing is by
-bytes not rows — ``repartition_for_media`` targets a bytes/partition
-budget, and mapInPandas streams Arrow record batches so an executor
-never holds a whole partition of raw media in Python memory at once.
+Scale notes: media rows are large (MBs); mapInPandas streams Arrow
+record batches so an executor never holds a whole partition of raw
+media in Python memory at once.
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
-    IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-#: lake schema for a multimodal asset table
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("data", BinaryType(), True),  # opaque encoded bytes
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("mime", StringType(), True),
-                    StructField("width", IntegerType(), True),
-                    StructField("height", IntegerType(), True),
-                    StructField("duration_ms", IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
+from ..engine import round_half_away
 
 FEATURE_DIM = 8
 
@@ -87,40 +62,7 @@ def _fake_features(data: bytes | None, dim: int = FEATURE_DIM) -> list[float]:
     for i, b in enumerate(data):
         acc[i % dim] += b
     total = float(sum(acc)) or 1.0
-    return [_round_half_away6(a / total) for a in acc]
-
-
-def _round_half_away(q: float, scale: float) -> float:
-    """Round-half-away-from-zero at an arbitrary decimal ``scale``
-    (1e4 = 4 decimals, 1e6 = 6) — the parameterized core of
-    ``_round_half_away6`` below, shared so other operators
-    (operators/mixture.py) don't re-implement the subtle sign/boundary
-    behavior documented there."""
-    p = abs(q) * scale
-    fl = math.floor(p)
-    r = (fl + 1 if p - fl >= 0.5 else fl) / scale
-    return math.copysign(r, q)
-
-
-def _round_half_away6(q: float) -> float:
-    """Round-half-away-from-zero at 6 decimals on the float product —
-    bit-identical to SQL ROUND(x, 6) (DuckDB: std::round(x * 1e6) /
-    1e6). Python's round() is half-EVEN, which disagrees exactly when
-    q lands on a dyadic 6th-decimal boundary (the sf0.1 sweep hit
-    17/128 = 0.1328125 → Python 0.132812 vs SQL 0.132813 → hash
-    mismatch). |p| - floor(|p|) is exact for |p| < 2^52, so the .5
-    comparison never sees an addition rounding error. Negative q
-    mirrors through abs (ADVICE r9 #2: the old floor-based form was
-    only correct for q >= 0 — -0.1328125 would have rounded toward
-    zero, silently reintroducing the hash split for a future caller)."""
-    p = abs(q) * 1e6
-    fl = math.floor(p)
-    r = (fl + 1 if p - fl >= 0.5 else fl) / 1e6
-    # copysign, not a q < 0 branch: SQL ROUND preserves IEEE -0.0
-    # (and rounds tiny negatives to -0.0), while -0.0 < 0 is False —
-    # a sign-branch returns +0.0 there and a hash that formats floats
-    # would split on "0.0" vs "-0.0" (r10 self-review)
-    return math.copysign(r, q)
+    return [round_half_away(a / total, 1e6) for a in acc]
 
 
 def extract_features(
@@ -161,240 +103,3 @@ def extract_features(
     narrow = df.select("asset_id", "data")
     target = min_parallelism or narrow.sparkSession.sparkContext.defaultParallelism
     return narrow.repartition(target).mapInPandas(_extract, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Plan the frames to sample from each video: one row per
-    (asset_id, frame_ts_ms). Pure expression — the expensive decode of
-    each planned frame happens in extract_features downstream. Assets
-    without duration metadata plan a single frame at t=0.
-    """
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return df.filter(F.col("kind") == "video").select(
-        "asset_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.coalesce(n_frames, F.lit(1)) - 1),
-                lambda i: i * every_ms,
-            )
-        ).alias("frame_ts_ms"),
-    )
-
-
-def repartition_for_media(
-    df: DataFrame, total_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024
-) -> DataFrame:
-    """Partition a media table by its payload volume, not row count."""
-    n = max(1, total_bytes // target_partition_bytes)
-    return df.repartition(int(n))
-
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("pixels", BinaryType(), True),  # row-major HxWxC uint8
-    ]
-)
-
-
-def decode_media(
-    df: DataFrame, strict: bool = False, channels: int = 3
-) -> DataFrame:
-    """Decode assets to raw pixel buffers (HxWxC uint8, row-major).
-
-    PNG assets get a REAL decode (pure-stdlib zlib inflate + scanline
-    defilter, operators/codecs.py) — native dimensions and channel
-    count from the bitstream, metadata ignored. Formats with no
-    in-container codec (JPEG/MP4/...) remain honestly stubbed: strict
-    mode raises at executor time; otherwise the pixel buffer is a
-    deterministic fake — the encoded bytes tiled to fill the
-    metadata-declared dimensions (fallback 8x8) — so every downstream
-    transform (resize, feature extraction) exercises real buffers of
-    the real shape through the real Arrow plumbing.
-    """
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .codecs import decode_png, sniff_codec
-
-        for pdf in batches:
-            out = {"asset_id": [], "width": [], "height": [], "channels": [], "pixels": []}
-            # zip over columns, not iterrows(): iterrows materializes a
-            # Series per row (dtype-boxing every cell)
-            for aid, wv, hv, data in zip(
-                pdf["asset_id"], pdf["width"], pdf["height"], pdf["data"]
-            ):
-                if data is not None and sniff_codec(bytes(data)) == "png":
-                    # valid magic does not guarantee a decodable file
-                    # (16-bit/interlaced variants, truncation): in
-                    # non-strict mode those fall THROUGH to the stub so
-                    # the pipeline stays total; strict surfaces them
-                    try:
-                        arr = decode_png(bytes(data))
-                    except Exception:
-                        if strict:
-                            raise
-                        arr = None
-                    if arr is not None:
-                        hh, ww, cc = arr.shape
-                        out["asset_id"].append(aid)
-                        out["width"].append(ww)
-                        out["height"].append(hh)
-                        out["channels"].append(cc)
-                        out["pixels"].append(arr.tobytes())
-                        continue
-                if strict:
-                    raise NotImplementedError(
-                        "no in-container codec for this format (PNG decodes "
-                        "for real; JPEG/MP4/... need a codec library)"
-                    )
-                w = int(wv) if pd.notna(wv) else 8
-                h = int(hv) if pd.notna(hv) else 8
-                data = data if data is not None else b"\x00"
-                need = w * h * channels
-                buf = np.frombuffer(data, dtype=np.uint8)
-                reps = -(-need // max(1, len(buf)))
-                pixels = np.tile(buf, reps)[:need].tobytes()
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(channels)
-                out["pixels"].append(pixels)
-            yield pd.DataFrame(out)
-
-    narrow = df.select(
-        "asset_id",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        "data",
-    )
-    target = narrow.sparkSession.sparkContext.defaultParallelism
-    return narrow.repartition(target).mapInPandas(_decode, DECODED_SCHEMA)
-
-
-def resize_nearest(
-    decoded: DataFrame, target_w: int, target_h: int
-) -> DataFrame:
-    """Nearest-neighbor resize of decoded pixel buffers — REAL image
-    math (pure numpy index sampling), not a stub: it operates on any
-    HxWxC uint8 buffer regardless of where the pixels came from.
-
-    Same Arrow-batched shape as the decode: one mapInPandas, no
-    driver involvement, output rows are (asset_id, target dims,
-    resampled buffer).
-    """
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"asset_id": [], "width": [], "height": [], "channels": [], "pixels": []}
-            for aid, wv, hv, cv, pixels in zip(
-                pdf["asset_id"], pdf["width"], pdf["height"],
-                pdf["channels"], pdf["pixels"],
-            ):
-                w, h, c = int(wv), int(hv), int(cv)
-                img = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, c)
-                ys = (np.arange(target_h) * h) // target_h
-                xs = (np.arange(target_w) * w) // target_w
-                resized = img[ys][:, xs]
-                out["asset_id"].append(aid)
-                out["width"].append(target_w)
-                out["height"].append(target_h)
-                out["channels"].append(c)
-                out["pixels"].append(resized.tobytes())
-            yield pd.DataFrame(out)
-
-    return decoded.mapInPandas(_resize, DECODED_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("codec", StringType(), False),  # 'wav' | 'stub'
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_samples", LongType(), True),
-        StructField("channels", IntegerType(), True),
-        StructField("duration_ms", DoubleType(), True),
-        StructField("rms", DoubleType(), True),
-        StructField("peak", DoubleType(), True),
-        StructField("zero_cross_rate", DoubleType(), True),
-    ]
-)
-
-
-def audio_features(df: DataFrame, strict: bool = False) -> DataFrame:
-    """Signal-level audio features per asset. WAV assets get a REAL
-    decode (stdlib RIFF/PCM parsing, operators/codecs.py): sample
-    rate/channel count from the container, RMS/peak/zero-crossing rate
-    from the actual samples. Other audio formats have no in-container
-    codec: strict raises at executor time, otherwise a 'stub' row with
-    NULL signal fields is emitted so the pipeline stays total.
-
-    Same scale shape as extract_features: narrow projection,
-    repartition to decode parallelism, Arrow-batched mapInPandas.
-    """
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codecs import sniff_codec, wav_features
-
-        for pdf in batches:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                if data is not None and sniff_codec(bytes(data)) == "wav":
-                    # valid RIFF magic but undecodable content (24-bit
-                    # PCM, truncated frames): non-strict falls through
-                    # to the stub row instead of failing the task
-                    try:
-                        f = wav_features(bytes(data))
-                    except Exception:
-                        if strict:
-                            raise
-                        f = None
-                    if f is not None:
-                        rows.append(
-                            {
-                                "asset_id": aid,
-                                "codec": "wav",
-                                "sample_rate": f["sample_rate"],
-                                "n_samples": f["n_samples"],
-                                "channels": f["channels"],
-                                "duration_ms": f["duration_ms"],
-                                "rms": f["rms"],
-                                "peak": f["peak"],
-                                "zero_cross_rate": f["zero_cross_rate"],
-                            }
-                        )
-                        continue
-                if strict:
-                    raise NotImplementedError(
-                        "no in-container codec for this audio format (WAV "
-                        "decodes for real)"
-                    )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "codec": "stub",
-                        "sample_rate": None,
-                        "n_samples": None,
-                        "channels": None,
-                        "duration_ms": None,
-                        "rms": None,
-                        "peak": None,
-                        "zero_cross_rate": None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields],
-            )
-
-    narrow = df.select("asset_id", "data")
-    target = narrow.sparkSession.sparkContext.defaultParallelism
-    return narrow.repartition(target).mapInPandas(_features, AUDIO_FEATURES_SCHEMA)

@@ -76,35 +76,6 @@ def cosine_topk(
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
-def cosine_similarity_join(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    id_left: str = "id_a",
-    id_right: str = "id_b",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-) -> DataFrame:
-    """All pairs (left x right) with cosine >= threshold.
-
-    This is the exact (quadratic) form — correct for dim-table-sized
-    sides or post-LSH candidate sets. For corpus-x-corpus at scale,
-    bucket both sides with ``hyperplane_buckets`` first and join on
-    the bucket id, then apply this within buckets.
-    """
-    l = left.select(F.col(id_left), F.col(vec_col).cast("array<double>").alias("__va"))
-    r = right.select(F.col(id_right), F.col(vec_col).cast("array<double>").alias("__vb"))
-    return (
-        l.crossJoin(r)
-        .select(
-            id_left,
-            id_right,
-            F.round(cosine(F.col("__va"), F.col("__vb")), round_to).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
 def cosine_all_pairs_matmul(
     df: DataFrame,
     threshold: float,
@@ -270,33 +241,6 @@ def cosine_all_pairs_blocked(
 
     return exploded.groupBy("__ca", "__cb").applyInPandas(
         _cell_pairs, "id_a long, id_b long, cos_sim double"
-    )
-
-
-def cosine_all_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-    broadcast_budget_rows: int = 0,
-) -> DataFrame:
-    """All-pairs cosine router: the blocked distributed matmul by
-    default; the broadcast matmul only when the caller attests the
-    corpus fits the driver (``broadcast_budget_rows`` > 0 and the
-    corpus counts under it). The default never collects.
-    """
-    if broadcast_budget_rows > 0 and df.count() <= broadcast_budget_rows:
-        return cosine_all_pairs_matmul(
-            df,
-            threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            round_to=round_to,
-            broadcast_budget_rows=broadcast_budget_rows,
-        )
-    return cosine_all_pairs_blocked(
-        df, threshold, id_col=id_col, vec_col=vec_col, round_to=round_to
     )
 
 
@@ -1105,8 +1049,8 @@ def power_iteration_step(
     """One power-iteration step toward the top eigenvector of the
     (uncentered) second-moment matrix S = X^T X: w = S v0 for the
     seeded start vector v0, emitted L2-normalized as ``(dim,
-    component)`` rows. Full PCA is this same kernel iterated
-    (pca_top_component below); this single step is the
+    component)`` rows. Full PCA iterates this kernel, feeding the
+    normalized w back as v0; this single step is the
     SQL-replayable unit the oracle gates — the dot products never
     materialize S, so the pass is O(rows x dims) with one scalar-ish
     shuffle of |dims| partial sums. 100 TB: exactly one scan per
@@ -1143,41 +1087,3 @@ def power_iteration_step(
     return sums.selectExpr(f"sqrt({norm}) AS nrm", "*").selectExpr(
         f"stack({dims}, {stack_args}) AS (dim, component)"
     )
-
-
-def pca_top_component(
-    df: DataFrame,
-    dims: int,
-    vec_col: str = "embedding",
-    iterations: int = 10,
-    seed: str = "pi",
-) -> list[float]:
-    """Top eigenvector of the uncentered second-moment matrix by
-    driver-side power iteration over DISTRIBUTED matrix-vector
-    products: each iteration is one scan computing w = X^T (X v)
-    (never materializing X^T X), then the d-vector is normalized on
-    the driver and fed back as literals. The only driver data motion
-    is the d-float vector per iteration — the pattern that scales to
-    100 TB (cache df; iterations are scans of the cached columnar
-    batch). Pytest-gated against numpy's eigh; the per-step kernel is
-    oracle-gated via power_iteration_step."""
-    import math as _math
-
-    v = _pi_v0(dims, seed)
-    for _ in range(iterations):
-        chain = " + ".join(
-            f"CAST(element_at({vec_col}, {i + 1}) AS DOUBLE)"
-            f" * CAST('{vi!r}' AS DOUBLE)"
-            for i, vi in enumerate(v)
-        )
-        d = df.selectExpr(f"{chain} AS dv", f"{vec_col} AS e")
-        row = d.selectExpr(
-            *[
-                f"SUM(CAST(element_at(e, {j + 1}) AS DOUBLE) * dv) AS w{j}"
-                for j in range(dims)
-            ]
-        ).collect()[0]
-        w = [row[f"w{j}"] for j in range(dims)]
-        nrm = _math.sqrt(sum(x * x for x in w)) or 1.0
-        v = [x / nrm for x in w]
-    return v

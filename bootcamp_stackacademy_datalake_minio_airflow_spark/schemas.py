@@ -226,22 +226,6 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
     ),
 }
 
-# Timestamp columns the reference *intended* to cast in bronze->silver
-# (reference: ingestion_orders_bronze_to_silver.py:71-75,
-# ingestion_order_items_bronze_to_silver.py:71,
-# ingestion_order_reviews_bronze_to_silver.py:71-72).
-TIMESTAMP_COLUMNS: dict[str, list[str]] = {
-    "orders": [
-        "order_purchase_timestamp",
-        "order_approved_at",
-        "order_delivered_carrier_date",
-        "order_delivered_customer_date",
-        "order_estimated_delivery_date",
-    ],
-    "order_items": ["shipping_limit_date"],
-    "order_reviews": ["review_creation_date", "review_answer_timestamp"],
-}
-
 # Pinned pivot values for the vendas gold job (reference:
 # ingestion_vendas_silver_to_gold.py:116-120). Pinning makes the pivot
 # schema static and skips Spark's extra distinct-values job.

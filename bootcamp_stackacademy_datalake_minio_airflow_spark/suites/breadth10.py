@@ -189,10 +189,9 @@ def q_embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One seeded power-iteration step toward the top eigenvector of
     X^T X (operators/similarity.py:power_iteration_step): w = S v0
     computed as X^T (X v0) — S never materializes — emitted
-    L2-normalized as 64 (dim, component) rows. Full PCA
-    (pca_top_component) iterates this exact kernel; the single step
-    is what SQL can replay, same precedent as the unrolled-CTE
-    PageRank."""
+    L2-normalized as 64 (dim, component) rows. Full PCA iterates
+    this exact kernel; the single step is what SQL can replay, same
+    precedent as the unrolled-CTE PageRank."""
     from ..operators.similarity import power_iteration_step
 
     emb = load_table(spark, sf_dir, "embeddings")

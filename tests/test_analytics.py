@@ -20,7 +20,6 @@ from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.sketches impor
 )
 from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.similarity import (
     dim_stats,
-    pca_top_component,
     power_iteration_step,
 )
 
@@ -126,30 +125,6 @@ def test_power_iteration_step_matches_numpy(spark, sf_dir):
     got = {r["dim"]: r["component"] for r in power_iteration_step(emb, X.shape[1]).collect()}
     for j in range(X.shape[1]):
         assert got[j] == pytest.approx(w[j], abs=2e-4)
-
-
-def test_pca_top_component_converges_to_eigh(spark, sf_dir):
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    X = np.array(
-        [r["embedding"] for r in emb.select("embedding").collect()],
-        dtype=np.float64,
-    )
-    S = X.T @ X
-    vals, vecs = np.linalg.eigh(S)
-    top = vecs[:, -1]
-    got = np.array(pca_top_component(emb, X.shape[1], iterations=30))
-    # eigenvector sign is arbitrary: compare |cosine|. Random N(0,1)
-    # embeddings have a small eigengap (Marchenko–Pastur bulk), so 30
-    # iterations only contract the off-axis residual to ~(l2/l1)^30 —
-    # measured cos ~0.9994 here; assert direction, not machine eps
-    cos = abs(float(got @ top) / (np.linalg.norm(got) * np.linalg.norm(top)))
-    assert cos > 0.99
-    # and the Rayleigh quotient must be within 0.1% of the true top
-    # eigenvalue (it converges quadratically vs the vector's linear rate)
-    rayleigh = float(got @ S @ got)
-    assert rayleigh == pytest.approx(float(vals[-1]), rel=1e-3)
 
 
 def test_changepoint_finds_planted_shift(spark):

@@ -23,15 +23,15 @@ PKG = ROOT / "bootcamp_stackacademy_datalake_minio_airflow_spark"
 
 #: The only hand-written persist/cache/unpersist/localCheckpoint calls
 #: left under operators/, suites/ and jobs/, as exact per-file counts
-#: (engine.materialize is the one eager localCheckpoint). Both are
-#: caches that outlive a single call, so no scope can own them:
-#: - suites/graph_shared.py: the cross-query edge cache, which must
-#:   survive clearCache; it unpersists an entry on eviction.
+#: (engine.materialize is the one eager localCheckpoint). The one left
+#: is a cache that outlives a single call, so no scope can own it:
 #: - operators/similarity.py: ivf_index's build-once index cache; it
 #:   persists each new index and unpersists the evicted one.
+#: suites/graph_shared.py's edge cache holds engine.materialize
+#: checkpoints, which DataFrame.unpersist cannot free; eviction only
+#: drops the reference and Spark's ContextCleaner frees the blocks.
 ALLOWED_CACHE_CALLS = {
     "operators/similarity.py": 2,
-    "suites/graph_shared.py": 2,
 }
 
 MOVED = {"fanout_repartition", "normalize_text", "_norm_base", "_materialize_release"}

@@ -11,7 +11,6 @@ from bootcamp_stackacademy_datalake_minio_airflow_spark.functions import (
     rename_map,
     replace_literal,
     to_date_col,
-    to_timestamp_cols,
     upper_cols,
 )
 
@@ -20,13 +19,6 @@ def test_null_fill(spark):
     df = spark.createDataFrame([(1, None), (2, 3.5)], "k int, v double")
     out = {r.k: r.v for r in null_fill(df, 0.0, ["v"]).collect()}
     assert out == {1: 0.0, 2: 3.5}
-
-
-def test_to_timestamp_cols(spark):
-    # reference parses 'YYYY-MM-DD HH:MM:SS' strings (Olist format)
-    df = spark.createDataFrame([("2017-10-02 10:56:33",)], "ts string")
-    row = to_timestamp_cols(df, ["ts"]).first()
-    assert row.ts == datetime.datetime(2017, 10, 2, 10, 56, 33)
 
 
 def test_to_date_col(spark):

@@ -1,5 +1,5 @@
-"""Scale-hygiene operators (salting, compaction, bucketing) and the
-JSON/ORC source round-trips."""
+"""Lake maintenance (compaction, Z-order writes) and the JSON/ORC/JDBC
+source round-trips."""
 
 from __future__ import annotations
 
@@ -7,35 +7,13 @@ import os
 
 from pyspark.sql import functions as F
 
-from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.maintenance import (
-    compact,
-    salted_join,
-    write_bucketed,
-)
+from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.maintenance import compact
 from bootcamp_stackacademy_datalake_minio_airflow_spark.sources import (
     read_json,
     read_orc,
     write_json,
     write_orc,
 )
-
-
-def test_salted_join_matches_plain_join(spark):
-    # skewed fact: one hot key with 1000 rows
-    fact = spark.createDataFrame(
-        [(1, i) for i in range(1000)] + [(2, 0), (3, 0)], "k int, v int"
-    )
-    dim = spark.createDataFrame([(1, "hot"), (2, "cold"), (3, "cold")], "k int, name string")
-    plain = fact.join(dim, "k").groupBy("name").count()
-    salted = salted_join(fact, dim, "k").groupBy("name").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
-
-
-def test_salted_join_left_outer(spark):
-    fact = spark.createDataFrame([(1, 10), (9, 90)], "k int, v int")
-    dim = spark.createDataFrame([(1, "a")], "k int, name string")
-    out = {(r.k, r.name) for r in salted_join(fact, dim, "k", how="left").collect()}
-    assert out == {(1, "a"), (9, None)}  # unmatched key survives null-extended
 
 
 def test_compact_reduces_files(spark, tmp_path):
@@ -49,18 +27,6 @@ def test_compact_reduces_files(spark, tmp_path):
     assert spark.read.parquet(src).count() == 10_000
     assert not os.path.exists(src + "__compacting")
     assert not os.path.exists(src + "__replaced")
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    a = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    b = spark.range(0, 1000).withColumn("w", F.col("id") * 3)
-    write_bucketed(a, "t_bucket_a", "id", num_buckets=4, sort_by="id")
-    write_bucketed(b, "t_bucket_b", "id", num_buckets=4, sort_by="id")
-    joined = spark.table("t_bucket_a").join(spark.table("t_bucket_b"), "id")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    # co-located bucketed join: the shuffle was paid at write time
-    assert "Exchange hashpartitioning" not in plan
-    assert joined.count() == 1000
 
 
 def test_json_roundtrip(spark, tmp_path):

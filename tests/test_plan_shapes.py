@@ -198,6 +198,9 @@ def test_no_cartesian_or_nested_loop_anywhere(captured):
 #: logreg_auc_roc aggregates the score histogram under a bounded
 #: global window — training is collect-per-step aggregates, scoring
 #: one hash aggregate; no join anywhere by design.
+#: logreg_isotonic_calibration trains with per-step aggregates and
+#: returns a createDataFrame over <= n_bins driver-side PAV rows — a
+#: join has nothing to pair by design.
 JOINLESS = {
     "bpe_merge_table",
     "bpe_segment_tokens",
@@ -205,6 +208,7 @@ JOINLESS = {
     "embedding_ann_lsh_topk",
     "kmeans_embedding_clusters",
     "logreg_auc_roc",
+    "logreg_isotonic_calibration",
 }
 
 

@@ -9,10 +9,8 @@ import pytest
 from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_table
 from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.similarity import (
     ann_topk_lsh,
-    cosine_all_pairs,
     cosine_all_pairs_blocked,
     cosine_all_pairs_matmul,
-    cosine_similarity_join,
     cosine_topk,
 )
 from bootcamp_stackacademy_datalake_minio_airflow_spark.suites.extensions import QUERY_VEC
@@ -44,18 +42,6 @@ def test_cosine_topk_matches_python(vecs):
     assert abs(got[1].cos_sim - expected) < 1e-9
 
 
-def test_cosine_similarity_join_threshold(vecs):
-    a = vecs.selectExpr("vec_id AS id_a", "embedding")
-    b = vecs.selectExpr("vec_id AS id_b", "embedding")
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in cosine_similarity_join(a, b, threshold=0.99).collect()
-        if r.id_a < r.id_b
-    }
-    assert (1, 2) in pairs  # cos ~0.9939
-    assert (1, 4) not in pairs  # opposite vectors
-
-
 def test_all_pairs_blocked_equals_matmul(spark, sf_dir):
     """The distributed blocked matmul (no driver collect) must emit the
     exact same pair set and scores as the broadcast matmul baseline,
@@ -74,22 +60,6 @@ def test_all_pairs_blocked_equals_matmul(spark, sf_dir):
             ).collect()
         }
         assert got == want, f"n_blocks={n_blocks}: {len(got)} vs {len(want)} pairs"
-
-
-def test_all_pairs_router_paths(spark, sf_dir):
-    """Router: default never collects (blocked path); explicit budget
-    large enough routes to the broadcast matmul. Both agree."""
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    via_blocked = sorted(
-        (r.id_a, r.id_b) for r in cosine_all_pairs(emb, threshold=0.35).collect()
-    )
-    via_matmul = sorted(
-        (r.id_a, r.id_b)
-        for r in cosine_all_pairs(
-            emb, threshold=0.35, broadcast_budget_rows=1_000_000
-        ).collect()
-    )
-    assert via_blocked == via_matmul
 
 
 def test_ivf_recall_on_planted_neighbors(spark, sf_dir):

@@ -9,7 +9,6 @@ from bootcamp_stackacademy_datalake_minio_airflow_spark.jobs.snapshots import (
     read_snapshot,
     rollback_snapshot,
     table_versions,
-    vacuum_snapshots,
     _manifest_path,
     _write_json_atomic,
 )
@@ -67,50 +66,6 @@ def test_commit_cas_retries_on_conflict(spark, tmp_path):
     assert {r.x for r in read_snapshot(spark, root).collect()} == {1, 7}
 
 
-def test_vacuum_expires_and_deletes_orphans(spark, tmp_path):
-    import os
-
-    root = str(tmp_path / "snap_vac")
-    commit_snapshot(spark, _rows(spark, 1), root)
-    commit_snapshot(spark, _rows(spark, 2), root, mode="overwrite")
-    commit_snapshot(spark, _rows(spark, 3), root, mode="append")
-    assert len(os.listdir(f"{root}/data")) == 3
-
-    # default grace period protects fresh segments (in-flight commit
-    # window): nothing is deleted...
-    assert vacuum_snapshots(spark, root, keep_last=3) == (0, 0)
-    n_man, n_seg = vacuum_snapshots(
-        spark, root, keep_last=1, min_segment_age_seconds=0
-    )
-    assert (n_man, n_seg) == (2, 1)  # v1,v2 expired; v1's segment orphaned
-    assert table_versions(spark, root) == [3]
-    assert len(os.listdir(f"{root}/data")) == 2
-    assert {r.x for r in read_snapshot(spark, root).collect()} == {2, 3}
-    # expired versions are gone
-    with pytest.raises(Exception):
-        read_snapshot(spark, root, 1)
-    # idempotent
-    assert vacuum_snapshots(
-        spark, root, keep_last=1, min_segment_age_seconds=0
-    ) == (0, 0)
-
-
 def test_read_empty_table_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         read_snapshot(spark, str(tmp_path / "nope"))
-
-
-def test_vacuum_grace_protects_inflight_segments(spark, tmp_path):
-    """An unreferenced segment younger than the grace period must
-    survive vacuum — it may belong to a commit that has staged data
-    but not yet won the manifest CAS."""
-    import os
-
-    root = str(tmp_path / "snap_grace")
-    commit_snapshot(spark, _rows(spark, 1), root)
-    commit_snapshot(spark, _rows(spark, 2), root, mode="overwrite")
-    # simulate an in-flight writer: a staged segment, no manifest yet
-    _rows(spark, 99).write.parquet(f"{root}/data/s-inflight")
-    n_man, n_seg = vacuum_snapshots(spark, root, keep_last=1)
-    assert n_man == 1 and n_seg == 0  # manifests expire, segments survive
-    assert sorted(os.listdir(f"{root}/data")).__len__() == 3

@@ -9,7 +9,6 @@ from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_tabl
 from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.multimodal import (
     FEATURE_DIM,
     extract_features,
-    frame_sample_plan,
 )
 from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.text import (
     fingerprint,
@@ -122,17 +121,6 @@ def test_multimodal_strict_raises(spark):
     )
     with pytest.raises(Exception, match="NotImplementedError|media decoding"):
         extract_features(assets, strict=True).collect()
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame(
-        [(1, "video", (None, None, None, 3500)), (2, "image", (None, None, None, None))],
-        "asset_id long, kind string, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>",
-    )
-    frames = frame_sample_plan(df, every_ms=1000).collect()
-    got = sorted((r.asset_id, r.frame_ts_ms) for r in frames)
-    assert got == [(1, 0), (1, 1000), (1, 2000)]  # 3 full seconds; image excluded
 
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir, tmp_path):
@@ -350,53 +338,6 @@ def test_stream_enrich_static_broadcast(spark, tmp_path):
     assert got == {(1, 0.9), (2, 0.2), (3, None)}
 
 
-def test_decode_resize_pipeline(spark):
-    """decode (stubbed pixels, real plumbing) -> nearest resize (real
-    math): shapes, byte sizes, and hand-checked resampling."""
-    import numpy as np
-
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.multimodal import (
-        DECODED_SCHEMA,
-        decode_media,
-        resize_nearest,
-    )
-
-    rows = [
-        (1, "image", bytes(range(12)), ("image/png", 2, 2, None)),
-        (2, "image", b"\xff", ("image/png", None, None, None)),  # meta-less: 8x8
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "asset_id long, kind string, data binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>",
-    )
-    dec = {r.asset_id: r for r in decode_media(df).collect()}
-    assert (dec[1].width, dec[1].height, dec[1].channels) == (2, 2, 3)
-    assert len(dec[1].pixels) == 2 * 2 * 3
-    assert dec[1].pixels == bytes(range(12))  # tiling of 12 bytes into 12 slots
-    assert (dec[2].width, dec[2].height) == (8, 8)
-    assert len(dec[2].pixels) == 8 * 8 * 3
-    assert set(dec[2].pixels) == {0xFF}  # single byte tiled everywhere
-
-    up = {r.asset_id: r for r in resize_nearest(decode_media(df), 4, 4).collect()}
-    assert (up[1].width, up[1].height) == (4, 4)
-    assert len(up[1].pixels) == 4 * 4 * 3
-    # nearest-neighbor 2x upscale duplicates each source pixel 2x2:
-    src = np.frombuffer(dec[1].pixels, np.uint8).reshape(2, 2, 3)
-    got = np.frombuffer(up[1].pixels, np.uint8).reshape(4, 4, 3)
-    assert (got[0, 0] == src[0, 0]).all() and (got[1, 1] == src[0, 0]).all()
-    assert (got[3, 3] == src[1, 1]).all() and (got[0, 3] == src[0, 1]).all()
-
-    # strict mode marks the decode as honestly unimplemented
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="NotImplementedError|codec"):
-        decode_media(df, strict=True).collect()
-    assert [f.name for f in DECODED_SCHEMA.fields] == [
-        "asset_id", "width", "height", "channels", "pixels",
-    ]
-
-
 def test_stream_stream_attribution_equals_batch(spark, sf_dir, tmp_path):
     """The watermarked stream-stream self-join must emit exactly the
     pairs the batch twin produces: inner-join rows are never withheld
@@ -428,137 +369,6 @@ def test_stream_stream_attribution_equals_batch(spark, sf_dir, tmp_path):
     b = {(r.view_id, r.purchase_id): tuple(r) for r in batch.collect()}
     assert len(streamed) == len(s), "append sink must not duplicate pairs"
     assert s == b
-
-
-def test_decode_media_real_png_and_strict_dispatch(spark):
-    """PNG assets decode for REAL (bitstream dims/channels, metadata
-    ignored) while unknown formats keep the stub; strict mode raises
-    only for the formats lacking an in-container codec."""
-    import numpy as np
-
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.codecs import (
-        encode_png,
-    )
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.multimodal import (
-        decode_media,
-        resize_nearest,
-    )
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, size=(6, 4, 3), dtype=np.uint8)
-    rows = [
-        # deliberately WRONG metadata dims: the real decode must use
-        # the bitstream's 4x6, not meta's 9x9
-        (1, "image", encode_png(img), ("image/png", 9, 9, None)),
-        (2, "image", b"\xff\xd8\xff\xe0 fake jpeg", ("image/jpeg", 2, 2, None)),
-    ]
-    schema = (
-        "asset_id long, kind string, data binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>"
-    )
-    df = spark.createDataFrame(rows, schema)
-    dec = {r.asset_id: r for r in decode_media(df).collect()}
-    assert (dec[1].width, dec[1].height, dec[1].channels) == (4, 6, 3)
-    assert np.array_equal(
-        np.frombuffer(dec[1].pixels, np.uint8).reshape(6, 4, 3), img
-    )
-    assert (dec[2].width, dec[2].height) == (2, 2)  # stub path, meta dims
-
-    # real pixels flow through the real resize
-    up = {r.asset_id: r for r in resize_nearest(decode_media(df), 8, 12).collect()}
-    got = np.frombuffer(up[1].pixels, np.uint8).reshape(12, 8, 3)
-    assert np.array_equal(got[::2, ::2], img)  # 2x NN upscale keeps originals
-
-    # strict: PNG rows decode fine; the fake-jpeg row raises
-    png_only = spark.createDataFrame([rows[0]], schema)
-    assert decode_media(png_only, strict=True).count() == 1
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="codec"):
-        decode_media(df, strict=True).count()
-
-
-def test_audio_features_real_wav(spark):
-    """WAV assets produce real signal features (decoded PCM); unknown
-    audio emits a stub row; strict raises for the unknown one."""
-    import numpy as np
-
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.codecs import (
-        encode_wav,
-    )
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.multimodal import (
-        audio_features,
-    )
-
-    sr = 8000
-    tone = (
-        np.sin(2 * np.pi * 440 * np.arange(sr // 2) / sr) * 20000
-    ).astype(np.int16)
-    rows = [
-        (1, "audio", encode_wav(tone, sr), ("audio/wav", None, None, 500)),
-        (2, "audio", b"ID3 fake mp3 bytes", ("audio/mpeg", None, None, 1000)),
-    ]
-    schema = (
-        "asset_id long, kind string, data binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>"
-    )
-    df = spark.createDataFrame(rows, schema)
-    out = {r.asset_id: r for r in audio_features(df).collect()}
-    assert out[1].codec == "wav"
-    assert out[1].sample_rate == sr and out[1].n_samples == sr // 2
-    assert out[1].duration_ms == 500.0
-    assert abs(out[1].rms - 20000 / np.sqrt(2)) / (20000 / np.sqrt(2)) < 0.01
-    assert out[2].codec == "stub" and out[2].sample_rate is None
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="codec"):
-        audio_features(df, strict=True).count()
-
-
-def test_decode_fallback_on_undecodable_valid_magic(spark):
-    """Valid magic but undecodable content (truncated PNG, 24-bit WAV)
-    must fall back to the stub in non-strict mode — the pipeline stays
-    total — and raise only under strict."""
-    import numpy as np
-
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.codecs import (
-        PNG_MAGIC,
-        encode_wav,
-    )
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.multimodal import (
-        audio_features,
-        decode_media,
-    )
-
-    bad_png = PNG_MAGIC + b"\x00" * 24  # magic ok, no valid chunks
-    schema = (
-        "asset_id long, kind string, data binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>"
-    )
-    df = spark.createDataFrame(
-        [(1, "image", bad_png, ("image/png", 2, 2, None))], schema
-    )
-    dec = decode_media(df).collect()
-    assert len(dec) == 1 and (dec[0].width, dec[0].height) == (2, 2)  # stub
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        decode_media(df, strict=True).count()
-
-    # 24-bit WAV: wave module raises on sampwidth 3 at write; craft by
-    # patching a 16-bit file's fmt chunk (bytes 34-35 = bits/sample,
-    # byte 32 = block align) so it sniffs as wav but can't decode
-    good = bytearray(encode_wav(np.zeros(4, np.int16), 8000))
-    good[34] = 24
-    good[32] = 3
-    adf = spark.createDataFrame(
-        [(1, "audio", bytes(good), ("audio/wav", None, None, None))], schema
-    )
-    rows = audio_features(adf).collect()
-    assert len(rows) == 1 and rows[0].codec == "stub"
-    with _pytest.raises(Exception):
-        audio_features(adf, strict=True).count()
 
 
 def test_stream_rate_monitor_matches_batch(spark, tmp_path):

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-from bootcamp_stackacademy_datalake_minio_airflow_spark.functions.quality import (
-    duplicate_keys,
-    null_profile,
-    out_of_range,
-)
+from bootcamp_stackacademy_datalake_minio_airflow_spark.functions.quality import null_profile
 from bootcamp_stackacademy_datalake_minio_airflow_spark.jobs.upsert import (
     merge_upsert,
     upsert_parquet,
@@ -148,14 +144,6 @@ def test_null_profile_and_range(spark):
     df = spark.createDataFrame([(1, None), (2, 5.0), (None, 200.0)], "k long, v double")
     prof = null_profile(df).first()
     assert prof.k == 1 and prof.v == 1
-    bad = out_of_range(df, "v", 0.0, 100.0).collect()
-    assert len(bad) == 1 and bad[0].v == 200.0
-
-
-def test_duplicate_keys(spark):
-    df = spark.createDataFrame([(1, "x"), (1, "y"), (2, "z")], "k long, s string")
-    dups = duplicate_keys(df, ["k"]).collect()
-    assert len(dups) == 1 and dups[0].k == 1 and dups[0].n == 2
 
 
 def test_merge_upsert_version_conditional(spark):
