@@ -5,7 +5,8 @@ Three concerns live here so that no operator module hand-codes them:
 - **Cache policy.** ``cache_scope`` persists the intermediates an
   operator re-reads and releases every one of them when the block
   exits, normally or by exception; ``materialize`` is the one eager
-  ``localCheckpoint`` that pins a (small) result before that release.
+  ``localCheckpoint`` that pins a (small) result before that release,
+  and ``drop_checkpoint`` frees one a loop has superseded.
   ``return materialize(out)`` inside the block checkpoints first and
   releases second, so the returned frame never reads a dropped cache.
 - **Shared plan helpers.** ``fanout_repartition`` (explicit-N
@@ -71,6 +72,18 @@ def materialize(df: DataFrame) -> DataFrame:
     checkpoint instead.
     """
     return df.localCheckpoint(eager=True)
+
+
+def drop_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a frame ``materialize`` returned, once no
+    plan still reads it (an iterative loop's superseded round).
+
+    ``DataFrame.unpersist`` cannot: a ``localCheckpoint`` RDD is not in
+    the SQL CacheManager, so only the RDD under the analyzed plan drops
+    it. Left alone, it stays registered until JVM GC lets ContextCleaner
+    see the driver drop it.
+    """
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:

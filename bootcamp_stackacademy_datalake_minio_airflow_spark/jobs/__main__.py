@@ -29,7 +29,6 @@ def main(argv: list[str] | None = None) -> int:
 
     gold = sub.add_parser("vendas-gold", help="build the gold vendas table")
     gold.add_argument("--base", default=None)
-    gold.add_argument("--no-partition", action="store_true")
 
     pub = sub.add_parser("publish-jdbc", help="publish gold vendas to MySQL")
     pub.add_argument("--base", default=None)
@@ -44,7 +43,7 @@ def main(argv: list[str] | None = None) -> int:
         df = bronze_to_silver(spark, args.table, base=args.base)
         print(f"ingested {args.table}: {len(df.columns)} columns")
     elif args.cmd == "vendas-gold":
-        df = vendas_gold(spark, base=args.base, partition_gold=not args.no_partition)
+        df = vendas_gold(spark, base=args.base)
         print(f"vendas gold built: {len(df.columns)} columns")
     elif args.cmd == "publish-jdbc":
         publish_vendas_jdbc(spark, base=args.base, url=args.url, table=args.table)

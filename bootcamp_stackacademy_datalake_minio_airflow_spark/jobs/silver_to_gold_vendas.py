@@ -26,7 +26,6 @@ def vendas_gold(
     spark: SparkSession,
     base: str | None = None,
     gold_path: str | None = None,
-    partition_gold: bool = True,
 ) -> DataFrame:
     """Build the vendas gold table from the 5 silver tables and write
     it to the gold zone.
@@ -43,11 +42,8 @@ def vendas_gold(
     )
     df = build_vendas(items, orders, products, customers, payments)
     dst = gold_path or zone_path("gold", "vendas", base)
-    if partition_gold:
-        out = df.withColumn("MES_VENDA", F.date_format("DATA_VENDA", "yyyy-MM"))
-        write_parquet(out, dst, partition_by=["MES_VENDA"])
-    else:
-        write_parquet(df, dst)
+    out = df.withColumn("MES_VENDA", F.date_format("DATA_VENDA", "yyyy-MM"))
+    write_parquet(out, dst, partition_by=["MES_VENDA"])
     return df
 
 

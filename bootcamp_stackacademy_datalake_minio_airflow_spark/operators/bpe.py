@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import fanout_repartition, materialize, normalize_text
+from ..engine import drop_checkpoint, fanout_repartition, materialize, normalize_text
 
 
 def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
@@ -102,7 +102,9 @@ def bpe_train(
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns ``[(rank, pair, merged,
     pair_count)]`` in learned order. One distributed pair-count
-    aggregation + a 1-row argmax collect per round."""
+    aggregation + a 1-row argmax collect per round. Each round's
+    vocab checkpoint is freed once the next one is materialized, and
+    the last one on return."""
     vocab = materialize(word_vocab(df, text_col))
     merges: list[tuple[int, str, str, int]] = []
     for k in range(n_merges):
@@ -117,9 +119,12 @@ def bpe_train(
         pat, cnt = best[0].p, int(best[0].s)
         merged = pat.replace(" ", "")
         merges.append((k, pat, merged, cnt))
-        vocab = materialize(
+        merged_vocab = materialize(
             vocab.select(_apply_merge(F.col("w"), pat, merged).alias("w"), "cnt")
         )
+        drop_checkpoint(vocab)
+        vocab = merged_vocab
+    drop_checkpoint(vocab)
     return merges
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..engine import (
     _norm_base,
     cache_scope,
+    drop_checkpoint,
     fanout_repartition,
     materialize,
     normalize_text,
@@ -351,25 +352,14 @@ def dedup_minhash(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    canonicalize: bool = False,
     **lsh_kwargs,
 ) -> DataFrame:
-    """Drop near-duplicates found by MinHash LSH.
-
-    Default: for every verified pair, the larger id is the victim —
-    one pass, never drops a cluster entirely. ``canonicalize=True``
-    first collapses transitive clusters (A~B~C) with connected
-    components, keeping exactly one representative (the min id) per
-    cluster — the correct semantics when chains of near-dups are long.
+    """Drop near-duplicates found by MinHash LSH: for every verified
+    pair, the larger id is the victim — one pass, never drops a
+    cluster entirely.
     """
     pairs = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
-    if canonicalize:
-        comp = connected_components(pairs, "id_a", "id_b")
-        victims = comp.filter(F.col("node") != F.col("component")).select(
-            F.col("node").alias(id_col)
-        )
-    else:
-        victims = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    victims = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(victims, on=id_col, how="left_anti")
 
 
@@ -395,7 +385,8 @@ def connected_components(
       neighbors until fixpoint. Each iteration is one join + one
       aggregation (both on the node key); iterations needed ≈ graph
       diameter. The label frontier is localCheckpointed per round to
-      cut the lineage — without it the plan doubles every iteration.
+      cut the lineage — without it the plan doubles every iteration —
+      and the superseded round's checkpoint is freed.
       Fully distributed: the driver only coordinates the loop.
 
     Returns (node, component) with component = min node id of the
@@ -467,6 +458,7 @@ def connected_components(
                 .limit(1)
                 .count()
             )
+            drop_checkpoint(labels)
             labels = new_labels
             if changed == 0:
                 converged = True
@@ -487,9 +479,7 @@ def connected_components(
 # ---------------------------------------------------------------------------
 
 
-def _simhash_table(
-    df: DataFrame, id_col: str, text_col: str, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def _simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(__id, __sim) simhash table via explode + bit-sum aggregation.
 
     Same scale shape as ``_minhash_table``: token hashes are plain
@@ -497,11 +487,10 @@ def _simhash_table(
     map-side, so the shuffle carries 64 ints per document; the final
     projection folds the sums into one 64-bit signature.
 
-    ``hash_fn``: 'xxhash64' (fastest, full 64 active bits — default)
-    or 'md5' (the first 15 hex chars parsed as a 60-bit integer; bits
-    60-63 are always 0, which only shrinks the signature — any engine
-    with md5 reproduces it bit-for-bit, so the DuckDB oracle can
-    verify the pairs).
+    Token hashes are md5's first 15 hex chars parsed as a 60-bit
+    integer; bits 60-63 are always 0, which only shrinks the signature
+    — any engine with md5 reproduces it bit-for-bit, so the DuckDB
+    oracle can verify the pairs.
 
     The corpus routes through ``_norm_base`` (one narrow exchange on
     the doc id) BEFORE the token explode: the per-token hash + 64
@@ -516,12 +505,7 @@ def _simhash_table(
         "__id",
         F.explode(F.split(F.col("__txt"), " ")).alias("__t"),
     )
-    if hash_fn == "xxhash64":
-        token_hash = F.xxhash64("__t")
-    elif hash_fn == "md5":
-        token_hash = F.conv(F.substring(F.md5("__t"), 1, 15), 16, 10).cast("long")
-    else:
-        raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
+    token_hash = F.conv(F.substring(F.md5("__t"), 1, 15), 16, 10).cast("long")
     hashed = toks.select("__id", token_hash.alias("__h"))
     # wide column lists as SQL strings (one parse each) — 64 nested
     # Column builds cost seconds of py4j round-trips per invocation
@@ -551,7 +535,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     blocks: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: candidates share at least one
     of ``blocks`` 16-bit blocks (pigeonhole: any pair within
@@ -564,7 +547,7 @@ def simhash_pairs(
     width = 64 // blocks
     # persisted: the block self-join references this table twice
     with cache_scope() as hold:
-        sh = hold(_simhash_table(df, id_col, text_col, hash_fn=hash_fn))
+        sh = hold(_simhash_table(df, id_col, text_col))
         mask = (1 << width) - 1
         blocked = sh.select(
             "__id",
@@ -774,7 +757,6 @@ def cross_doc_ngram_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 10,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-document cross-corpus duplicated-n-gram fraction — the
     passage-level dedup signal of Lee et al., "Deduplicating Training
@@ -791,8 +773,7 @@ def cross_doc_ngram_stats(
     standard pre-filter for substring-level dedup cuts.
 
     Scale shape (100 TB): one codegen pass explodes ~one row per word
-    (hash per gram, no gram strings shuffled when hash_fn='xxhash64'),
-    then three partial-aggregated exchanges and ONE doc-level join:
+    (md5 per gram), then three partial-aggregated exchanges and ONE doc-level join:
     distinct on (doc, gram); a gram-keyed aggregate producing both the
     document frequency AND — via ``min(doc)`` — the sole owner of each
     df==1 gram; a per-doc gram total. ``n_shared`` falls out as
@@ -804,12 +785,9 @@ def cross_doc_ngram_stats(
     operator exists to find ARE the hot keys; a window over gram has
     neither property — r5's window form; r6's agg+join-back re-shuffled
     the full distinct stream and ran 3.1x slower than necessary).
-    No driver collection. ``hash_fn='md5'`` is the cross-engine-
-    verifiable family the registered oracle replays; production at
-    scale would use xxhash64 (8-byte shuffle keys instead of 32-hex
-    strings).
+    No driver collection. md5 is the cross-engine-verifiable family
+    the registered oracle replays.
     """
-    hasher = F.md5 if hash_fn == "md5" else F.xxhash64
     # NULL text dropped — see _norm_base's docstring. The repartition
     # puts one narrow exchange (id + token array) ahead of the
     # gram explode + per-gram hash + partial distinct — the dominant
@@ -832,7 +810,7 @@ def cross_doc_ngram_stats(
         ).alias("__i"),
     ).select(
         "__id",
-        hasher(F.array_join(F.slice(F.col("__w"), F.col("__i"), n), " ")).alias("__g"),
+        F.md5(F.array_join(F.slice(F.col("__w"), F.col("__i"), n), " ")).alias("__g"),
     )
     g = exploded.distinct()
     # a df==1 gram has exactly one (doc, gram) row, so min(doc) IS its

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize
+from ..engine import cache_scope, drop_checkpoint, fanout_repartition, materialize
 
 
 def cooccurrence_edges(
@@ -24,7 +24,6 @@ def cooccurrence_edges(
     group_col: str,
     item_col: str,
     partition_by: str | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """Symmetric co-occurrence edges ``(src, dst)``: items sharing a
     group, both directions, distinct.
@@ -63,13 +62,7 @@ def cooccurrence_edges(
         .select("src", F.explode("__items").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
-    if not dedup:
-        # consumers that canonicalize + dedup themselves
-        # (triangle_counts) skip this shuffle entirely — but the
-        # partitioning contract still holds if asked for (silently
-        # ignoring partition_by here handed consumers an
-        # unpartitioned stream they trusted as co-located — review
-        # finding)
+    if partition_by is not None:
         # keyless form ON PURPOSE (not fanout_repartition): the
         # consumers of this partitioning are ITERATIVE algorithms whose
         # per-round work is byte-proportional over the cached edge set
@@ -79,9 +72,6 @@ def cooccurrence_edges(
         # 3.41->4.58s standalone A/B): many small per-round jobs paid
         # 32-task scheduling for no CPU-fan-out gain. Explicit N stays
         # reserved for fan-out stages (see engine.fanout_repartition).
-        return pairs.repartition(partition_by) if partition_by else pairs
-    if partition_by is not None:
-        # keyless on purpose — see the dedup=False branch note above
         return pairs.repartition(partition_by).dropDuplicates()
     return pairs.distinct()
 
@@ -93,8 +83,6 @@ def pagerank(
     state_round: int = 10,
     out_round: int = 6,
     broadcast_rank_budget: int = 5_000_000,
-    edges_prepartitioned: bool = False,
-    external_edge_cache: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank by power method over a symmetric edge
     set: ``rank'(v) = (1-d)/N + d * sum_{u->v} rank(u)/outdeg(u)``.
@@ -108,26 +96,22 @@ def pagerank(
     five iterations of compounding would make a cross-engine hash
     check flaky.
 
-    Scale: the edge+degree table is hash-partitioned by ``src`` ONCE
-    and cached, so the per-iteration join never re-exchanges the
-    (dominant) edge side — only the |V|-row rank table moves. When
-    |V| fits ``broadcast_rank_budget`` the rank table is broadcast
-    instead, making each iteration a map-only pass over the cached
+    Scale: the caller owns the edge set — materialized and
+    dst-partitioned, like the suite-level shared co-occurrence
+    projection (suites/graph_shared.py) — and this function never
+    caches or releases it, so one edge set serves several graph
+    algorithms. When |V| fits ``broadcast_rank_budget`` the rank table
+    is broadcast, making each iteration a map-only pass over those
     edges plus one aggregation shuffle; past the budget (a 100M-node
-    web graph) it degrades to the co-partitioned shuffle join.
-    Dangling nodes cannot exist here (a symmetric edge set gives
-    every node an out-edge); for general digraphs add the
+    web graph) the edge+degree table is hash-partitioned by ``src``
+    ONCE and cached, so the per-iteration shuffle join never
+    re-exchanges the (dominant) edge side — only the |V|-row rank
+    table moves. Dangling nodes cannot exist here (a symmetric edge
+    set gives every node an out-edge); for general digraphs add the
     dangling-mass redistribution term before reusing this.
-
-    ``external_edge_cache``: the caller owns the edge materialization
-    (e.g. the suite-level shared co-occurrence projection,
-    suites/graph_shared.py) — this function then neither caches nor
-    unpersists the input, so a cache shared across several graph
-    algorithms survives the call.
     """
     with cache_scope() as hold:
-        e = edges if external_edge_cache else hold(edges)
-        deg = hold(e.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")))
+        deg = hold(edges.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")))
         # the node set IS deg's key set (symmetric edges: every node has an
         # out-edge) — deriving it from the |V|-row degree table instead of
         # a second distinct over the |E|-row edge set saves a full edge
@@ -153,17 +137,17 @@ def pagerank(
         # shuffles of |E| rows; measured ~2x slower at sf0.1). Past the
         # budget the join itself must shuffle on src, so src-partitioning
         # is the one worth pinning; deg is |V| rows and rides the same
-        # broadcast budget. When the caller already partitioned the edges
-        # by dst (cooccurrence_edges(partition_by="dst")), ce is just a
-        # broadcast-degree decoration of the cached edge set — two
-        # map-side ops per iteration, no extra exchange, no second cache
-        # holding a full copy of |E|.
-        if small and edges_prepartitioned:
-            ce = e.join(hint(deg), "src")
+        # broadcast budget. The caller's edges are already partitioned by
+        # dst (cooccurrence_edges(partition_by="dst")), so under the budget
+        # ce is just a broadcast-degree decoration of them — two map-side
+        # ops per iteration, no extra exchange, no second cache holding a
+        # full copy of |E|.
+        if small:
+            ce = edges.join(hint(deg), "src")
         else:
             ce = hold(
-                e.join(hint(deg), "src")
-                .repartition("dst" if small else "src")  # keyless on purpose: iterative consumer (see cooccurrence_edges note)
+                edges.join(hint(deg), "src")
+                .repartition("src")  # keyless on purpose: iterative consumer (see cooccurrence_edges note)
             )
         ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
         for _ in range(iters):
@@ -190,8 +174,6 @@ def label_propagation(
     edges: DataFrame,
     iters: int = 3,
     broadcast_label_budget: int = 5_000_000,
-    edges_prepartitioned: bool = False,
-    external_edge_cache: bool = False,
 ) -> DataFrame:
     """Synchronous label propagation (community detection) over a
     symmetric, distinct ``(src, dst)`` edge set with NUMERIC node
@@ -211,22 +193,21 @@ def label_propagation(
     map map-side, where the previous count-then-max(struct) pair cost
     a second exchange every round (r13; guide §2.4). Past the budget
     the label join degrades to a co-partitioned shuffle join, like
-    pagerank.
+    pagerank. As there, the caller owns the edge set (materialized,
+    dst-partitioned) and this function never caches or releases it.
     """
     with cache_scope() as hold:
         nodes = hold(edges.select(F.col("dst").alias("node")).distinct())
         n = nodes.count()
         small = n <= broadcast_label_budget
         hint = F.broadcast if small else (lambda df: df)
-        # cache exactly ONE form of the edge set (caching the raw edges
-        # and then a repartition of them would fill both); under
-        # external_edge_cache the caller owns the materialization
-        # (suites/graph_shared.py) and nothing here caches or unpersists it
-        if small and edges_prepartitioned:
-            e = edges if external_edge_cache else hold(edges)
+        # under the budget the caller's dst-partitioned edges serve as
+        # they are; past it the shuffle join needs them by src, cached once
+        if small:
+            e = edges
         else:
             # keyless on purpose: iterative consumer (see cooccurrence_edges note)
-            e = hold(edges.repartition("dst" if small else "src"))
+            e = hold(edges.repartition("src"))
         labels = nodes.select("node", F.col("node").alias("lab"))
         for _ in range(iters):
             votes = e.join(hint(labels), e.src == labels.node).select(
@@ -251,7 +232,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     rounds: int = 4,
-    edges_materialized: bool = False,
 ) -> DataFrame:
     """Bounded-round k-core peeling over a symmetric, distinct
     ``(src, dst)`` edge set: repeatedly delete nodes of degree < k
@@ -274,19 +254,21 @@ def k_core(
     peel history (the lazy chain would recompute round r-1 once per
     consumer of round r). Peeling only ever shrinks the data, so
     per-round cost is non-increasing; everything is shuffle-join/agg,
-    nothing driver-side.
+    nothing driver-side. The first round reads the caller's edges
+    directly (already materialized, like the shared co-occurrence
+    projection); each later round frees the checkpoint it supersedes.
     """
-    # round-0 state: a caller whose edge stream is already eagerly
-    # materialized (the shared co-occurrence projection) skips the
-    # initial copy — the first round's joins read it directly
-    e = edges if edges_materialized else materialize(edges)
-    for _ in range(rounds):
+    e = edges
+    for r in range(rounds):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
         keep = deg.filter(F.col("__deg") >= k).select(F.col("src").alias("node"))
-        e = materialize(
+        peeled = materialize(
             e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
         )
+        if r:
+            drop_checkpoint(e)
+        e = peeled
     deg_final = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree"))
     # converged iff the last round deleted nothing: every survivor of
     # the final degree pass still meets the bar

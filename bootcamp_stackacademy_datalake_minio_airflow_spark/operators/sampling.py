@@ -443,7 +443,6 @@ def token_budget_select(
     budget: int,
     id_col: str = "doc_id",
     round_to: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Token-budgeted corpus selection: keep the highest-quality
     documents, in (quality DESC, id ASC) order, until the cumulative
@@ -560,10 +559,6 @@ def token_budget_select(
                 F.col("__cum").alias("cum_tokens"),
             )
         )
-        if not materialize:
-            # plan-inspection path (tests/test_plans.py): checkpointing
-            # would hide the window/aggregate shapes behind a block scan.
-            return result
         return engine.materialize(result)
 
 

@@ -94,7 +94,7 @@ def cosine_all_pairs_matmul(
     speed. Emits (id_a, id_b, cos_sim) with id_a < id_b.
 
     At 100 TB corpus scale the matrix no longer broadcasts — shard the
-    right side by LSH bucket (hyperplane_buckets) and apply this
+    right side by LSH bucket (hyperplane_bucket) and apply this
     within buckets.
     """
     import numpy as np
@@ -113,7 +113,7 @@ def cosine_all_pairs_matmul(
         raise RuntimeError(
             "cosine_all_pairs_matmul: corpus exceeds the broadcast "
             f"budget of {broadcast_budget_rows} vectors; shard by LSH "
-            "bucket (hyperplane_buckets) and apply within buckets, or "
+            "bucket (hyperplane_bucket) and apply within buckets, or "
             "raise broadcast_budget_rows if the driver can hold it"
         )
     ids = np.array([r[0] for r in rows], dtype=np.int64)

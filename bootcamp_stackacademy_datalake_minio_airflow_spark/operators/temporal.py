@@ -21,11 +21,9 @@ def asof_join(
     left_time: str,
     right_time: str,
     value_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach ``value_cols`` from the latest right
-    row with the same key whose time is <= the left time
-    (direction='backward'; 'forward' = earliest right row >=).
+    row with the same key whose time is <= the left time.
 
     Ties (equal timestamps) resolve to the right row, matching pandas
     ``merge_asof(allow_exact_matches=True)``.
@@ -34,8 +32,6 @@ def asof_join(
     ``<name>_asof`` (pandas' suffix behavior) — emitting two columns
     with one name would make the result unselectable.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     out_names = {
         c: (f"{c}_asof" if c in left.columns else c) for c in value_cols
     }
@@ -77,10 +73,9 @@ def asof_join(
     # timestamp deterministic (last() picks the max value struct):
     # without it the window order among equal keys is whatever
     # survives the shuffle — racy on a real cluster.
-    t_ord = F.asc("__t") if direction == "backward" else F.desc("__t")
     w = (
         Window.partitionBy("__k")
-        .orderBy(t_ord, F.asc("__is_left"), F.asc("__v"))
+        .orderBy(F.asc("__t"), F.asc("__is_left"), F.asc("__v"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = merged.select(

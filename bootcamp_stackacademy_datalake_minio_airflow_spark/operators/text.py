@@ -144,33 +144,23 @@ def fingerprint(col: str | Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def winnow_table(
-    df, id_col: str, text_col: str, k: int = 5, window: int = 4, hash_fn: str = "xxhash64"
-):
+def winnow_table(df, id_col: str, text_col: str, k: int = 5, window: int = 4):
     """(id, fingerprints) winnowing table for a corpus.
 
     Materializes the k-gram hash array behind an exchange before the
     window-minima pass — inlined, the hash array expression would be
     re-evaluated once per window position (O(n^2) per document).
 
-    Winnowing needs only an ORDERED hash family; ``hash_fn`` picks it:
-    'xxhash64' (bigint, fastest — default) or 'md5' (hex string; ~3x
-    slower and wider, but byte-identical in any engine with md5, which
-    makes the operator's output externally verifiable).
+    Winnowing needs only an ORDERED hash family; md5 (hex string) is
+    byte-identical in any engine with md5, which makes the operator's
+    output externally verifiable.
     """
-    if hash_fn == "xxhash64":
-        gram_hash = lambda g: F.xxhash64(g)  # noqa: E731
-    elif hash_fn == "md5":
-        gram_hash = lambda g: F.md5(g)  # noqa: E731
-    else:
-        raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
-
     norm = _norm_base(df, id_col, text_col)
     grams = norm.select(
         "__id",
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length("__txt") - F.lit(k - 1), F.lit(1))),
-            lambda i: gram_hash(F.substr(F.col("__txt"), i, F.lit(k))),
+            lambda i: F.md5(F.substr(F.col("__txt"), i, F.lit(k))),
         ).alias("__hg"),
     ).transform(lambda d: fanout_repartition(d, "__id"))
     n_windows = F.greatest(F.size("__hg") - F.lit(window - 1), F.lit(1))
@@ -616,7 +606,6 @@ def winnow_fp_exploded(
     text_col: str = "text",
     k: int = 5,
     window: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> "DataFrame":
     """DISTINCT ``(__id, __fp)`` winnowing fingerprints via the
     corpus-scale explode path: one row per character position, hashed
@@ -628,7 +617,6 @@ def winnow_fp_exploded(
     O(len·window) window-minima chain pathologically (measured
     minutes vs seconds at sf0.01).
     """
-    gram_hash = F.md5 if hash_fn == "md5" else F.xxhash64
     norm = _norm_base(df, id_col, text_col)
     n_grams = F.greatest(F.length("__txt") - F.lit(k - 1), F.lit(1))
     hashed = norm.select(
@@ -644,7 +632,7 @@ def winnow_fp_exploded(
             F.lit(1),
         ).alias("__nw"),
         "__i",
-        gram_hash(F.substr(F.col("__txt"), F.col("__i"), F.lit(k))).alias("__h"),
+        F.md5(F.substr(F.col("__txt"), F.col("__i"), F.lit(k))).alias("__h"),
     )
     # position i belongs to windows [max(1, i-window+1), min(i, n_windows)]
     wins = hashed.select(
@@ -673,7 +661,6 @@ def winnow_overlap_pairs(
     window: int = 4,
     min_shared: int = 2,
     max_df: int = 64,
-    hash_fn: str = "xxhash64",
 ) -> "DataFrame":
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints
     — MOSS-style local plagiarism/quotation detection: winnowing
@@ -706,17 +693,14 @@ def winnow_overlap_pairs(
     resulting (doc, fp) table is held in an ``engine.cache_scope``
     (it feeds the df filter and both join sides) and released once
     the result materializes. The df-capped self-join's fan-out is
-    provably bounded (max_df^2 per key).
-    ``hash_fn='md5'`` is the cross-engine family the registered
-    oracle replays.
+    provably bounded (max_df^2 per key). The md5 fingerprints are
+    the cross-engine family the registered oracle replays.
     """
     from pyspark import StorageLevel
 
     with cache_scope() as hold:
         fp = hold(
-            winnow_fp_exploded(
-                df, id_col, text_col, k=k, window=window, hash_fn=hash_fn
-            ),
+            winnow_fp_exploded(df, id_col, text_col, k=k, window=window),
             StorageLevel.MEMORY_AND_DISK,
         )
         keep = (

@@ -57,7 +57,6 @@ def build_vendas(
     payment_types: Sequence[str] = tuple(PAYMENT_TYPES),
     renames: Mapping[str, str] = VENDAS_RENAMES,
     round_payments_to: int | None = None,
-    strict_payment_types: bool = True,
 ) -> DataFrame:
     """Star denormalization with the reference's exact semantics.
 
@@ -84,24 +83,23 @@ def build_vendas(
     # expression): zero extra passes, evaluated row-by-row on the
     # executors, so ANY task that meets an unknown (or NULL) type
     # fails the job with the offending value in the message.
-    if strict_payment_types:
-        payments_p = payments_p.withColumn(
-            "payment_type",
-            F.when(
-                F.col("payment_type").isin(list(payment_types)),
-                F.col("payment_type"),
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "unknown payment_type (not in pinned pivot "
-                            "values): "
-                        ),
-                        F.coalesce(F.col("payment_type"), F.lit("NULL")),
-                    )
+    payments_p = payments_p.withColumn(
+        "payment_type",
+        F.when(
+            F.col("payment_type").isin(list(payment_types)),
+            F.col("payment_type"),
+        ).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "unknown payment_type (not in pinned pivot "
+                        "values): "
+                    ),
+                    F.coalesce(F.col("payment_type"), F.lit("NULL")),
                 )
-            ),
-        )
+            )
+        ),
+    )
 
     # pivot-sum (reference :91-92) with pinned value list
     pay_pivot = pivot_sum(

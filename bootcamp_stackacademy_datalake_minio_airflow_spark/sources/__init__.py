@@ -13,7 +13,6 @@ eliminated).
 
 from .csv import read_csv
 from .jdbc import write_jdbc
-from .other import read_jdbc, read_json, read_orc, write_json, write_orc
 from .parquet import read_parquet, write_parquet
 
 __all__ = [
@@ -21,9 +20,4 @@ __all__ = [
     "read_parquet",
     "write_parquet",
     "write_jdbc",
-    "read_jdbc",
-    "read_json",
-    "write_json",
-    "read_orc",
-    "write_orc",
 ]

@@ -22,7 +22,6 @@ from pyspark.sql.types import StructType
 def read_parquet(
     spark: SparkSession,
     path: str,
-    merge_schema: bool = False,
     schema: StructType | None = None,
 ) -> DataFrame:
     """Parquet scan over a file/directory/prefix.
@@ -36,13 +35,6 @@ def read_parquet(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    if merge_schema:
-        # schema evolution: files written before a column existed read
-        # it back as NULL instead of the scan silently projecting the
-        # FIRST footer's schema (default parquet behavior picks one
-        # footer; an evolved table needs the union). Costs one footer
-        # read per file at planning — enable per-read, not globally.
-        reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
 
 

@@ -147,7 +147,7 @@ def q_graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph_shared import part_cooccurrence_edges
 
     edges, _ = part_cooccurrence_edges(spark, sf_dir)
-    return k_core(edges, k=110, rounds=4, edges_materialized=True)
+    return k_core(edges, k=110, rounds=4)
 
 
 # --- synchronous label propagation (community detection) --------------------
@@ -198,9 +198,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph_shared import part_cooccurrence_edges
 
     edges, _ = part_cooccurrence_edges(spark, sf_dir)
-    return label_propagation(
-        edges, iters=3, edges_prepartitioned=True, external_edge_cache=True
-    )
+    return label_propagation(edges, iters=3)
 
 
 # --- Zipf's-law fit of the token frequency spectrum -------------------------

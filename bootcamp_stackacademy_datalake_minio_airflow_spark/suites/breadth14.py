@@ -311,8 +311,7 @@ def q_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return winnow_overlap_pairs(
-        docs, "doc_id", "text", k=16, window=8, min_shared=3, max_df=8,
-        hash_fn="md5",
+        docs, "doc_id", "text", k=16, window=8, min_shared=3, max_df=8
     )
 
 
@@ -484,8 +483,7 @@ def q_winnow_quotation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.concat(F.col("t"), F.lit(" "), F.col("uq")).alias("text")
     ).unionByName(synth)
     return winnow_overlap_pairs(
-        lake, "doc_id", "text", k=5, window=4, min_shared=2, max_df=8,
-        hash_fn="md5",
+        lake, "doc_id", "text", k=5, window=4, min_shared=2, max_df=8
     )
 
 

@@ -3,7 +3,7 @@
 Dedup / similarity / text analysis over the documents & embeddings
 tables. Oracle-able ops use functions both engines implement
 identically (md5, regexp with explicit 'g' in DuckDB, list lambdas);
-hash-family ops (MinHash/SimHash use xxhash64, which DuckDB lacks)
+hash-family ops (MinHash uses xxhash64, which DuckDB lacks)
 register without SQL → the driver records rows-only checks, and
 pytest verifies their semantics on planted duplicates instead.
 """
@@ -311,7 +311,7 @@ _SIMHASH_ORACLE = f"""
 @register("dedup_simhash_pairs", _SIMHASH_ORACLE)
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    out = simhash_pairs(docs, "doc_id", "text", max_hamming=3, hash_fn="md5")
+    out = simhash_pairs(docs, "doc_id", "text", max_hamming=3)
     return out.withColumn("hamming", F.col("hamming").cast("long"))
 
 
@@ -389,7 +389,7 @@ def q_cross_doc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import cross_doc_ngram_stats
 
     docs = load_table(spark, sf_dir, "documents")
-    return cross_doc_ngram_stats(docs, "doc_id", "text", n=10, hash_fn="md5")
+    return cross_doc_ngram_stats(docs, "doc_id", "text", n=10)
 
 
 # --- PageRank over the part co-purchase graph (iterative algorithm) ---------
@@ -448,9 +448,7 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph_shared import part_cooccurrence_edges
 
     edges, _ = part_cooccurrence_edges(spark, sf_dir)
-    return pagerank(
-        edges, iters=5, edges_prepartitioned=True, external_edge_cache=True
-    )
+    return pagerank(edges, iters=5)
 
 
 # --- event attribution (batch twin of the stream-stream join) ---------------
@@ -1486,7 +1484,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_seeded_recall(emb, QUERY_VEC, k=10, m=4, ks=8)
 
 
-# --- winnowing fingerprints (rolling hash; xxhash-based -> rows-only) --------
+# --- winnowing fingerprints (rolling md5 hash) -------------------------------
 
 
 @register(
@@ -1517,5 +1515,5 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import winnow_table
 
     docs = load_table(spark, sf_dir, "documents")
-    out = winnow_table(docs, "doc_id", "text", hash_fn="md5")
+    out = winnow_table(docs, "doc_id", "text")
     return out.select("doc_id", F.size("fingerprints").alias("n_fingerprints"))

@@ -305,10 +305,7 @@ def q_prose_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines)."""
     from ..operators.text import winnow_overlap_pairs
 
-    return winnow_overlap_pairs(
-        prose_df(spark), k=5, window=4, min_shared=2, max_df=8,
-        hash_fn="md5",
-    )
+    return winnow_overlap_pairs(prose_df(spark), k=5, window=4, min_shared=2, max_df=8)
 
 
 @register("prose_langid_quality", _PROSE_ORACLE)

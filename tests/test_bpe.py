@@ -38,3 +38,15 @@ def test_bpe_segment_counts(spark):
     # no merges: pure character count (spaces excluded)
     out0 = {r.doc_id: r.bpe_tokens for r in bpe_segment(docs, "text", []).collect()}
     assert out0[1] == 7 and out0[2] == 2
+
+
+def test_bpe_train_frees_its_round_checkpoints(spark):
+    """Each round's vocab is an engine.materialize checkpoint, which
+    DataFrame.unpersist cannot free; bpe_train returns a list, so every
+    one of them (the last included) must be dropped before it returns
+    instead of waiting for JVM GC in a long-lived session."""
+    df = spark.createDataFrame([("abab abab abab abc abc",)], "text string")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert len(bpe_train(df, "text", n_merges=3)) == 3
+    assert jsc.getPersistentRDDs().size() <= before

@@ -205,22 +205,6 @@ def test_connected_components_chain(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_dedup_minhash_canonicalize_collapses_chain(spark):
-    """Transitive near-dup chain collapses to one representative."""
-    mid = BASE.replace("warm", "tepid")  # near-dup of BASE and of NEAR? build chain
-    docs = spark.createDataFrame(
-        [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)],
-        "doc_id long, text string",
-    )
-    kept = sorted(
-        r.doc_id
-        for r in dedup_minhash(
-            docs, "doc_id", "text", canonicalize=True, threshold=0.5
-        ).collect()
-    )
-    assert kept == [1, 4]  # cluster {1,2,3} -> keep 1; 4 unrelated
-
-
 def test_cross_doc_ngram_stats_planted_passage(spark):
     """A passage copied between two otherwise-distinct docs must be
     flagged in both (and only there); a fully-unique doc scores 0."""
@@ -248,14 +232,6 @@ def test_cross_doc_ngram_stats_planted_passage(spark):
     assert out[1].n_shared == 3 and out[2].n_shared == 3
     assert out[1].n_grams == 11 and out[2].n_grams == 11
     assert abs(out[1].shared_ratio - round(3 / 11, 4)) < 1e-9
-    # xxhash64 production family agrees on the counts
-    out_xx = {
-        r.doc_id: r
-        for r in cross_doc_ngram_stats(df, n=4, hash_fn="xxhash64").collect()
-    }
-    assert {k: (v.n_grams, v.n_shared) for k, v in out.items()} == {
-        k: (v.n_grams, v.n_shared) for k, v in out_xx.items()
-    }
 
 
 def test_cross_doc_ngram_stats_planted_skew_equals_window_form(spark):

@@ -157,14 +157,11 @@ def test_shared_edge_cache_public_evict_seam(spark, sf_dir):
     assert n2 == n1
 
 
-def test_label_propagation_caches_repartitioned_edges(spark, monkeypatch):
-    """r12 regression pin: a trailing comment swallowed the `.cache()`
-    on label_propagation's repartitioned edge set (operators/graph.py,
-    c67693e), so every non-prepartitioned caller recomputed the edge
-    shuffle per iteration. Pin that the non-prepartitioned path
-    persists exactly one edge form (nodes + repartitioned edges = 2
-    persist calls, made by engine.cache_scope's hold) and the
-    external-cache path persists only nodes."""
+def test_label_propagation_never_holds_caller_edges(spark, monkeypatch):
+    """The caller owns the edge set (suites/graph_shared.py's shared
+    projection): under the broadcast budget label_propagation persists
+    only its node table (one persist call, made by
+    engine.cache_scope's hold) and never a copy of the edges."""
     import itertools
 
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.graph import (
@@ -187,15 +184,6 @@ def test_label_propagation_caches_repartitioned_edges(spark, monkeypatch):
 
     monkeypatch.setattr(cls, "persist", counting_persist)
 
-    calls.clear()
     out = {r.node: r.community for r in label_propagation(edges, iters=2).collect()}
     assert out == {n: 1 for n in (1, 2, 3, 4)}
-    # non-prepartitioned path: nodes + the repartitioned edge set
-    assert len(calls) == 2
-
-    calls.clear()
-    label_propagation(
-        edges, iters=2, edges_prepartitioned=True, external_edge_cache=True
-    ).collect()
-    # caller owns the edge materialization: only nodes is cached here
     assert len(calls) == 1

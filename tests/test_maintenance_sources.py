@@ -1,5 +1,6 @@
-"""Lake maintenance (compaction, Z-order writes) and the JSON/ORC/JDBC
-source round-trips."""
+"""Lake maintenance (compaction, Z-order writes), the JDBC sink
+(Derby round-trip, MySQL dialect options) and CSV quarantine
+ingestion."""
 
 from __future__ import annotations
 
@@ -8,12 +9,6 @@ import os
 from pyspark.sql import functions as F
 
 from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.maintenance import compact
-from bootcamp_stackacademy_datalake_minio_airflow_spark.sources import (
-    read_json,
-    read_orc,
-    write_json,
-    write_orc,
-)
 
 
 def test_compact_reduces_files(spark, tmp_path):
@@ -29,28 +24,12 @@ def test_compact_reduces_files(spark, tmp_path):
     assert not os.path.exists(src + "__replaced")
 
 
-def test_json_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "j")
-    df = spark.createDataFrame([(1, "a"), (2, None)], "id long, s string")
-    write_json(df, path)
-    back = read_json(spark, path, schema=df.schema)
-    assert {tuple(r) for r in back.collect()} == {(1, "a"), (2, None)}
-
-
-def test_orc_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "o")
-    df = spark.createDataFrame([(1, 2.5)], "id long, x double")
-    write_orc(df, path)
-    assert read_orc(spark, path).collect()[0].x == 2.5
-
-
 def test_jdbc_roundtrip_derby(spark, tmp_path):
     """S9 round-trip against Derby embedded (ships with Spark): write
     with overwrite = drop-and-recreate (the reference's
-    to_sql(if_exists='replace') contract), read back in parallel, then
-    overwrite again and assert the table was replaced, not appended."""
+    to_sql(if_exists='replace') contract), read back, then overwrite
+    again and assert the table was replaced, not appended."""
     from bootcamp_stackacademy_datalake_minio_airflow_spark.sources.jdbc import write_jdbc
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.sources.other import read_jdbc
 
     url = f"jdbc:derby:{tmp_path}/golddb;create=true"
     driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
@@ -59,16 +38,8 @@ def test_jdbc_roundtrip_derby(spark, tmp_path):
         F.col("id").alias("pedido"), (F.col("id") * 2.5).alias("valor")
     )
     write_jdbc(df1, url, "gold_vendas", driver=driver, num_partitions=4)
-    back = read_jdbc(
-        spark,
-        url,
-        "gold_vendas",
-        partition_column="pedido",
-        lower_bound=0,
-        upper_bound=100,
-        num_partitions=4,
-        driver=driver,
-    )
+    props = {"driver": driver}
+    back = spark.read.jdbc(url, "gold_vendas", properties=props)
     assert back.count() == 100
     assert back.agg(F.sum("valor")).first()[0] == sum(i * 2.5 for i in range(100))
 
@@ -76,7 +47,7 @@ def test_jdbc_roundtrip_derby(spark, tmp_path):
         F.col("id").alias("pedido"), F.lit(1.0).alias("valor")
     )
     write_jdbc(df2, url, "gold_vendas", driver=driver, num_partitions=2)
-    assert read_jdbc(spark, url, "gold_vendas", driver=driver).count() == 7
+    assert spark.read.jdbc(url, "gold_vendas", properties=props).count() == 7
 
 
 def test_jdbc_mysql_dialect_options_pinned():
@@ -185,56 +156,3 @@ def test_read_csv_quarantines_corrupt_rows(spark, tmp_path):
     assert "not_an_int" in bad.first()["_bad"]
     # without corrupt_col the scan shape is unchanged (no extra column)
     assert read_csv(spark, str(p), schema).columns == ["id", "qty", "name"]
-
-
-def test_parquet_merge_schema_evolution(spark, tmp_path):
-    """A table whose later files carry an added column must read the
-    union schema with NULLs for pre-evolution rows (mergeSchema);
-    the default single-footer read would silently drop or keep the
-    column depending on file order."""
-    from bootcamp_stackacademy_datalake_minio_airflow_spark.sources.parquet import (
-        read_parquet,
-    )
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "k long, s string").write.parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "k long, s string, score double"
-    ).write.mode("append").parquet(path)
-
-    out = read_parquet(spark, path, merge_schema=True)
-    assert set(out.columns) == {"k", "s", "score"}
-    rows = {r.k: r.score for r in out.collect()}
-    assert rows == {1: None, 2: 9.5}
-
-
-def test_read_json_quarantines_corrupt_lines(spark, tmp_path):
-    # three good JSONL records, one truncated object, one plain garbage
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "alpha"}\n'
-        '{"doc_id": 2, "text": "beta"}\n'
-        '{"doc_id": 3, "text": "gam\n'
-        "not json at all\n"
-        '{"doc_id": 4, "text": "delta"}\n'
-    )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
-    df = read_json(spark, str(p), schema=schema, corrupt_col="_corrupt").cache()
-    clean = df.filter(F.col("_corrupt").isNull())
-    bad = df.filter(F.col("_corrupt").isNotNull())
-    assert {r.doc_id for r in clean.collect()} == {1, 2, 4}
-    raws = [r._corrupt for r in bad.collect()]
-    assert len(raws) == 2 and "not json at all" in raws
-    # quarantine demands a pinned schema - inference would drop the column
-    import pytest
-
-    with pytest.raises(ValueError):
-        read_json(spark, str(p), corrupt_col="_corrupt")
-    df.unpersist()

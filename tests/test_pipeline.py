@@ -303,7 +303,7 @@ def test_corrupt_review_line_quarantined(spark, tmp_path):
 
 def test_unknown_payment_type_fails_loudly(spark):
     """A pinned pivot silently drops unlisted types; build_vendas'
-    strict guard must instead fail the job with the offending value
+    payment-type guard must instead fail the job with the offending value
     in the message (SURVEY §7.3 'fail loudly on new ones')."""
     from bootcamp_stackacademy_datalake_minio_airflow_spark.plans.vendas import build_vendas
 
@@ -330,15 +330,6 @@ def test_unknown_payment_type_fails_loudly(spark):
     df = build_vendas(items, orders, products, customers, payments)
     with pytest.raises(Exception, match="unknown payment_type.*pix"):
         df.collect()
-
-    # contrast pin: with the guard off, the row vanishes SILENTLY from
-    # every payment column — the failure mode the guard exists to stop
-    lax = build_vendas(
-        items, orders, products, customers, payments,
-        strict_payment_types=False,
-    ).collect()
-    assert len(lax) == 1
-    assert lax[0].VALOR_BOLETO == 0.0 and lax[0].VALOR_CREDITO == 0.0
 
 
 def test_load_table_handle_cache_hits_and_invalidates(spark, tmp_path):

@@ -111,7 +111,6 @@ def test_pagerank_iteration_broadcasts_ranks(spark, sf_dir):
     out = pagerank(
         cooccurrence_edges(li, "l_orderkey", "l_partkey", partition_by="dst"),
         iters=2,
-        edges_prepartitioned=True,
     )
     # pagerank materializes via localCheckpoint; inspect the executed
     # plan it recorded through a fresh equivalent build instead
@@ -290,21 +289,22 @@ def test_hot_key_join_aqe_skew_split(spark, sf_dir, tmp_path):
     assert total == li_rows
 
 
-def test_token_budget_orders_only_the_boundary_bucket(spark, sf_dir):
+def test_token_budget_orders_only_the_boundary_bucket(spark, sf_dir, monkeypatch):
     # the histogram two-phase must never compile a corpus-sized
     # unpartitioned window: every windowspec over the doc stream is
     # partitioned by the quality bucket; the only unpartitioned
     # window runs over the per-quality aggregate (tiny by key space)
     from pyspark.sql import functions as F
 
+    from bootcamp_stackacademy_datalake_minio_airflow_spark import engine
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.sampling import (
         token_budget_select,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # materialize=False: the registered query localCheckpoints its
-    # (selection-sized) result, which would hide the plan under a
-    # block scan
+    # the operator localCheckpoints its (selection-sized) result, which
+    # would hide the plan under a block scan
+    monkeypatch.setattr(engine, "materialize", lambda df: df)
     df = token_budget_select(
         docs.filter(F.col("text").isNotNull()).select(
             "doc_id", F.length("text").alias("nt")
@@ -312,7 +312,6 @@ def test_token_budget_orders_only_the_boundary_bucket(spark, sf_dir):
         F.col("nt") % 10 / 10.0,
         F.col("nt"),
         budget=20000,
-        materialize=False,
     )
     plan = _executed_plan(df)
     import re

@@ -377,14 +377,12 @@ def test_winnow_exploded_path_equals_array_form(spark, texts):
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    wt = winnow_table(df, "doc_id", "text", k=k, window=window, hash_fn="md5")
+    wt = winnow_table(df, "doc_id", "text", k=k, window=window)
     want = {
         r.doc_id: set(r.fingerprints) for r in wt.collect() if r.fingerprints
     }
     got: dict = {}
-    for r in winnow_fp_exploded(
-        df, "doc_id", "text", k=k, window=window, hash_fn="md5"
-    ).collect():
+    for r in winnow_fp_exploded(df, "doc_id", "text", k=k, window=window).collect():
         got.setdefault(r["__id"], set()).add(r["__fp"])
     assert got == want
 

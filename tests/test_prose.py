@@ -72,11 +72,10 @@ def test_winnow_published_params_recovers_quotations(spark):
 
 
 def test_registered_prose_winnow_query_recovers_quotations(spark):
-    """The REGISTERED variant (md5 family so the oracle replays it,
-    max_df=8 boilerplate cut for the 10-doc corpus) must keep the
-    planted-pair dominance property of the xxhash64/max_df=64 pin
-    above — the hash family and the df cap change which generic
-    pairs survive, never the planted signal."""
+    """The REGISTERED variant (max_df=8 boilerplate cut for the 10-doc
+    corpus) must keep the planted-pair dominance property of the
+    max_df=64 pin above — the df cap changes which generic pairs
+    survive, never the planted signal."""
     from bootcamp_stackacademy_datalake_minio_airflow_spark.suites.prose import (
         q_prose_winnow_pairs,
     )

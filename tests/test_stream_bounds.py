@@ -31,7 +31,7 @@ def test_matmul_broadcast_budget_raises_with_shard_hint(spark):
         [(i, [float(i), 1.0]) for i in range(6)],
         "vec_id long, embedding array<double>",
     )
-    with pytest.raises(RuntimeError, match="hyperplane_buckets"):
+    with pytest.raises(RuntimeError, match=r"hyperplane_bucket\b"):
         cosine_all_pairs_matmul(df, threshold=0.5, broadcast_budget_rows=3)
     # and under budget the kernel still works
     out = cosine_all_pairs_matmul(df, threshold=0.99, broadcast_budget_rows=6)

@@ -38,16 +38,6 @@ def test_asof_exact_match_allowed(spark):
     assert row.v == 42.0  # equal timestamps match (pandas allow_exact_matches)
 
 
-def test_asof_forward(spark):
-    left = spark.createDataFrame([(1, _t(5))], "k long, t timestamp")
-    right = spark.createDataFrame(
-        [(1, _t(0), 1.0), (1, _t(8), 2.0), (1, _t(30), 3.0)],
-        "k long, qt timestamp, v double",
-    )
-    row = asof_join(left, right, "k", "t", "qt", ["v"], direction="forward").first()
-    assert row.v == 2.0  # earliest right row at/after 10:05
-
-
 def test_range_join_boundaries(spark):
     facts = spark.createDataFrame([(1, 0.0), (2, 99.9), (3, 100.0)], "id long, v double")
     ranges = spark.createDataFrame(
@@ -158,11 +148,8 @@ def test_asof_null_left_time_gets_null_fill(spark):
     right = spark.createDataFrame(
         [(1, dt.datetime(2023, 1, 1), 10.0)], ["k", "rt", "price"]
     )
-    for direction in ("backward", "forward"):
-        out = asof_join(
-            left, right, "k", "lt", "rt", ["price"], direction=direction
-        ).collect()
-        assert len(out) == 1 and out[0]["price"] is None, direction
+    out = asof_join(left, right, "k", "lt", "rt", ["price"]).collect()
+    assert len(out) == 1 and out[0]["price"] is None
 
 
 def test_asof_matched_row_nulls_are_returned_not_stitched(spark):
