@@ -9,7 +9,7 @@ Three concerns live here so that no operator module hand-codes them:
   and ``drop_checkpoint`` frees one a loop has superseded.
   ``return materialize(out)`` inside the block checkpoints first and
   releases second, so the returned frame never reads a dropped cache.
-- **Shared plan helpers.** ``fanout_repartition`` (explicit-N
+- **Shared plan helpers.** ``fanout_repartition`` (one-task-per-core
   exchange ahead of fan-out work), ``normalize_text`` (the canonical
   text form every fingerprint/dedup operator hashes) and
   ``_norm_base`` (that form materialized behind an exchange).
@@ -88,8 +88,8 @@ def drop_checkpoint(df: DataFrame) -> None:
 
 def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-repartition a narrow frame on ``cols`` with an EXPLICIT
-    partition count — ``spark.sql.shuffle.partitions`` — ahead of a
-    CPU-heavy fan-out stage (explode × hash/regex per element).
+    partition count — the cores, ``sparkContext.defaultParallelism`` —
+    ahead of a CPU-heavy fan-out stage (explode × hash/regex per element).
 
     Why explicit and not ``repartition(cols)``: AQE's partition
     coalescing sizes post-shuffle partitions by BYTES
@@ -99,11 +99,14 @@ def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
     compute defeats it (measured r12: the keyless form coalesced every
     operator exchange on this lake to 1 partition; the explicit form
     ran the GD feature build 35% faster warm at identical plans
-    otherwise). An explicit count is honored by AQE, and
-    ``spark.sql.shuffle.partitions`` is the deployment's scale knob
-    (set 2-3x total cores on a cluster per session.py), so stage
-    parallelism tracks the cluster, not a local constant — exactly
-    the non-AQE semantics every shuffle had before coalescing.
+    otherwise). An explicit count is honored by AQE.
+
+    Why the cores and not ``spark.sql.shuffle.partitions``: the stage
+    is CPU-bound, so one task per core keeps every core busy, while
+    the shuffle conf (2-3x cores) is an upper bound for AQE to
+    coalesce; pinned, it runs several short tasks per core.
+    Dynamic-allocation deployments, whose cores at plan time are not
+    those at run time, set ``spark.default.parallelism``.
 
     With no ``cols`` this is a round-robin exchange — the right form
     when no near-unique key exists: hash-partitioning on a DATA VALUE
@@ -115,13 +118,7 @@ def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
     and callers here feed global/grouped aggregates, so placement
     cannot change any result.
     """
-    # the conf may be non-numeric on deployments with auto-optimized
-    # shuffle ("auto"); fall back to the context's parallelism rather
-    # than breaking every operator routed through this helper
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *cols) if cols else df.repartition(n)
 
 

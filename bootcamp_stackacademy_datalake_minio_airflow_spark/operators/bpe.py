@@ -1,12 +1,14 @@
-"""Distributed BPE vocabulary training (extension).
+"""BPE vocabulary training (extension).
 
 Byte-pair encoding (Sennrich et al., "Neural Machine Translation of
 Rare Words with Subword Units", ACL 2016) learns a tokenizer by
 repeatedly merging the corpus's most frequent adjacent symbol pair.
-The training loop is the archetypal "iterative algorithm over 100 TB
-of text": each round is ONE distributed aggregation (pair counts over
-the weighted vocabulary) and one driver-side argmax of a single row —
-the corpus/vocab never collects.
+The corpus-sized work is ONE distributed aggregation: the weighted
+distinct-word vocabulary (``word_vocab``). Its rows are collected
+once, and the merge rounds run in driver Python over them, as
+reference BPE trainers do — each round recounts the weighted
+adjacent pairs in O(sum of word lengths) and takes the argmax, with
+no Spark job per round.
 
 Representation: one row per DISTINCT word with its corpus frequency;
 the word's current segmentation is a space-joined symbol string
@@ -16,30 +18,33 @@ separator form: adjacent pair occurrences share a boundary space
 needs), so the replace runs on '  '-joined symbols where every
 occurrence owns its own boundary chars; left-to-right non-overlapping
 replacement then merges every occurrence, exactly BPE's greedy order,
-and identically in Spark and DuckDB — which is what lets the
-registered oracle re-derive the whole merge table independently
-(argmax ties break on (count desc, pair asc), integer counts, no
-floats anywhere).
+and identically in Spark (``_apply_merge``, which ``bpe_segment``
+applies), driver Python (``_merge_word``, which training applies)
+and DuckDB — which is what lets the registered oracle re-derive the
+whole merge table independently (argmax ties break on (count desc,
+pair asc), integer counts, no floats anywhere).
 
-Scale notes: the distributed state is the vocab table (distinct
-words — millions of rows for a 100 TB corpus, not billions), rebuilt
-lazily per round and truncated with an eager localCheckpoint so round
-k's pair-count job does not re-execute rounds 1..k-1's replaces.
+Scale notes: the driver holds |V| (word, count) rows — distinct
+words, millions for a 100 TB corpus, not billions — plus one pair
+counter per round. Segmenting documents with the learned table stays
+a distributed map-only pass.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import drop_checkpoint, fanout_repartition, materialize, normalize_text
+from ..engine import fanout_repartition, normalize_text
 
 
 def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """(w, cnt): every distinct word, char-segmented ('h e l l o'),
     with its corpus frequency."""
     # one narrow text-projection exchange ahead of the token explode
-    # so the fan-out + partial word counts run at shuffle parallelism
+    # so the fan-out + partial word counts run one task per core
     # rather than inside the scan stage (one task on a single-
     # row-group parquet; guide §2.5 repartition-after-read). Keyed on
     # a synthetic per-row id, NOT the text value: hashing on the text
@@ -63,26 +68,6 @@ def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    """(p, s): adjacent symbol pairs ('l l') weighted by word count —
-    one codegen explode + one partial-aggregated exchange."""
-    sym = vocab.select(F.split("w", " ").alias("sym"), "cnt").select(
-        "sym",
-        "cnt",
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.size("sym") - 1, F.lit(1)))
-        ).alias("i"),
-    ).filter(F.size("sym") > 1)
-    pair = F.concat(
-        F.element_at("sym", F.col("i")),
-        F.lit(" "),
-        F.element_at("sym", F.col("i") + 1),
-    )
-    return sym.select(pair.alias("p"), "cnt").groupBy("p").agg(
-        F.sum("cnt").alias("s")
-    )
-
-
 def _apply_merge(col, pat: str, merged: str):
     """Merge every occurrence of adjacent pair ``pat`` ('a b') in a
     space-joined symbol string: lift to the doubled-separator form
@@ -97,34 +82,38 @@ def _apply_merge(col, pat: str, merged: str):
     return F.replace(F.trim(replaced), F.lit("  "), F.lit(" "))
 
 
+def _merge_word(w: str, pat: str, merged: str) -> str:
+    """Driver twin of ``_apply_merge`` on one symbol string: the same
+    doubled-separator replace, ``strip(" ")`` for Spark's ``trim``
+    (which strips spaces only) and the same collapse."""
+    l, r = pat.split(" ")
+    doubled = " " + w.replace(" ", "  ") + " "
+    replaced = doubled.replace(f" {l}  {r} ", f" {merged} ")
+    return replaced.strip(" ").replace("  ", " ")
+
+
 def bpe_train(
     df: DataFrame, text_col: str, n_merges: int = 10
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns ``[(rank, pair, merged,
-    pair_count)]`` in learned order. One distributed pair-count
-    aggregation + a 1-row argmax collect per round. Each round's
-    vocab checkpoint is freed once the next one is materialized, and
-    the last one on return."""
-    vocab = materialize(word_vocab(df, text_col))
+    pair_count)]`` in learned order. One distributed word count,
+    collected once; the rounds run on the driver. The argmax takes
+    (count desc, pair asc): Python orders strings by code point, the
+    same order as the UTF-8 byte comparison of Spark and the oracle."""
+    vocab = [(r.w, r.cnt) for r in word_vocab(df, text_col).collect()]
     merges: list[tuple[int, str, str, int]] = []
     for k in range(n_merges):
-        best = (
-            _pair_counts(vocab)
-            .orderBy(F.desc("s"), F.asc("p"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
+        counts: Counter[str] = Counter()
+        for w, cnt in vocab:
+            sym = w.split(" ")
+            for a, b in zip(sym, sym[1:]):
+                counts[f"{a} {b}"] += cnt
+        if not counts:
             break
-        pat, cnt = best[0].p, int(best[0].s)
+        pat, best = min(counts.items(), key=lambda pc: (-pc[1], pc[0]))
         merged = pat.replace(" ", "")
-        merges.append((k, pat, merged, cnt))
-        merged_vocab = materialize(
-            vocab.select(_apply_merge(F.col("w"), pat, merged).alias("w"), "cnt")
-        )
-        drop_checkpoint(vocab)
-        vocab = merged_vocab
-    drop_checkpoint(vocab)
+        merges.append((k, pat, merged, best))
+        vocab = [(_merge_word(w, pat, merged), cnt) for w, cnt in vocab]
     return merges
 
 

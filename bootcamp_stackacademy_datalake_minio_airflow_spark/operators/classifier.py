@@ -299,7 +299,7 @@ def naive_bayes_confusion(
         # the SAME shuffle output (ReusedExchange — tokenization runs
         # once per query instead of once per consumer, without the
         # cache cost the docstring above rejects), and the token
-        # explode runs at shuffle parallelism rather than inside the
+        # explode runs at core parallelism rather than inside the
         # scan stage (one task on a single-row-group parquet — guide
         # §2.5 repartition-after-read).
         .transform(lambda d: fanout_repartition(d, "__id"))

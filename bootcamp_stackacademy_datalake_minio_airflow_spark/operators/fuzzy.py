@@ -117,8 +117,8 @@ def fuzzy_neighbor_counts(
     equi-join + exact verify at NAME level, then the per-name
     neighbor mass ``(own_count - 1) + sum(neighbor_counts)`` fans
     back out to ids with one join. All pair work scales with distinct
-    names; row duplication only affects the first and last (narrow)
-    exchanges.
+    names; row duplication only affects the narrow per-name exchanges
+    and the final fan-back join.
     """
     if max_distance not in (1, 2):
         raise NotImplementedError(
@@ -134,16 +134,20 @@ def fuzzy_neighbor_counts(
         F.col(id_col).alias("__id"), F.col(name_col).alias("__nm")
     )
     names = base.groupBy("__nm").agg(F.count("*").cast("long").alias("__cnt"))
-    # explicit-N repartition on the VARIANT HASH between the
-    # (interpreted, O(L²)-per-name) deletion-variant explode and the
-    # self-join: the join's equi-key is __vh, so HashPartitioning
-    # (__vh, shuffle.partitions) satisfies both sides' distribution —
-    # same exchange count — while defeating AQE's byte-based coalesce,
-    # which folded this KB-sized-but-levenshtein-heavy join down to
-    # one task (the whole DP verify ran serially; guide §2.5 / the
-    # fanout_repartition rationale in engine.py)
+    # explicit-N exchanges (guide §2.5 / the fanout_repartition
+    # rationale in engine.py), each defeating AQE's byte-based
+    # coalesce, which folded this KB-sized but CPU-heavy work to one
+    # task: (a) on the NAME, below the distinct it already clusters,
+    # ahead of the (interpreted, O(L²)-per-name) deletion-variant
+    # explode — stacked on the ``names`` aggregate instead, it would
+    # be a second exchange whenever the cores differ from
+    # shuffle.partitions; (b) on the VARIANT HASH ahead of the
+    # levenshtein self-join, whose two sides are both these
+    # exchanges, so the planner re-sizes them in place (to
+    # shuffle.partitions when larger) and adds none
     idx = fanout_repartition(
-        fanout_repartition(names, "__nm")
+        fanout_repartition(base.select("__nm"), "__nm")
+        .distinct()
         .select("__nm", F.explode(variants_of(F.col("__nm"))).alias("__v"))
         .select("__nm", F.xxhash64("__v").alias("__vh")),
         "__vh",

@@ -47,7 +47,7 @@ def cooccurrence_edges(
     # groupBy needs exactly this clustering, so the plan still has ONE
     # exchange — but the collect_list (whose partial mode reduces
     # nothing: the lists carry every row either way) now builds
-    # post-exchange at shuffle parallelism instead of inside the scan
+    # post-exchange at core parallelism instead of inside the scan
     # stage (one task on a single-row-group parquet; guide §2.5 /
     # §2.4 share-one-exchange). List order within a group was already
     # arrival-nondeterministic; every consumer is set-semantic.
@@ -67,11 +67,12 @@ def cooccurrence_edges(
         # consumers of this partitioning are ITERATIVE algorithms whose
         # per-round work is byte-proportional over the cached edge set
         # — AQE's size-based partition choice is correct for them, and
-        # pinning 32 explicit partitions measured the consumers 1.3-1.4x
-        # SLOWER at sf0.1 (label-prop 2.18->3.03s, triangles
-        # 3.41->4.58s standalone A/B): many small per-round jobs paid
-        # 32-task scheduling for no CPU-fan-out gain. Explicit N stays
-        # reserved for fan-out stages (see engine.fanout_repartition).
+        # pinning an explicit count (32, the shuffle conf at the time)
+        # made the consumers 1.3-1.4x SLOWER at sf0.1 (label-prop
+        # 2.18->3.03s, triangles 3.41->4.58s standalone A/B): many
+        # small per-round jobs paid 32-task scheduling for no
+        # CPU-fan-out gain. Explicit N stays reserved for fan-out
+        # stages (see engine.fanout_repartition).
         return pairs.repartition(partition_by).dropDuplicates()
     return pairs.distinct()
 

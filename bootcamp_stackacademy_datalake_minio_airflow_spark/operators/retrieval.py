@@ -174,7 +174,7 @@ def bigram_nll_score(
     # one narrow (id, tokens) exchange shared by BOTH the bigram
     # branch and the vocabulary scalar (ReusedExchange): tokenization
     # runs once, and the bigram explode + vocabulary distinct run at
-    # shuffle parallelism instead of inside the (possibly one-task)
+    # core parallelism instead of inside the (possibly one-task)
     # scan stage — guide §2.5 repartition-after-read.
     base0 = (
         docs.select(F.col(id_col), _toks(text_col).alias("toks"))

@@ -394,7 +394,7 @@ def dsir_importance(
     ROUND residual).
     """
     # narrow (id, flag, tokens) exchange before the token explode so
-    # the fan-out runs at shuffle parallelism, not inside the scan
+    # the fan-out runs at core parallelism, not inside the scan
     # stage (one task on a single-row-group parquet; guide §2.5)
     tok = (
         df.filter(F.col(text_col).isNotNull())
@@ -480,7 +480,7 @@ def token_budget_select(
     # sf0.1 when the shard level landed without this). Released when
     # the scope below exits, after the result materializes.
     # explicit-N repartition BEFORE the scoring projection so the
-    # regex-heavy quality expressions evaluate at shuffle parallelism
+    # regex-heavy quality expressions evaluate at core parallelism
     # during the cache fill, not inside the one-task scan stage
     # (guide §2.5; rationale in engine.fanout_repartition)
     with cache_scope() as hold:

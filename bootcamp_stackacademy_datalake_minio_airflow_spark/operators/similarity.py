@@ -345,7 +345,7 @@ def ann_topk_lsh(
 
     # narrow (id, vec) projection + explicit-N exchange ahead of the
     # n_planes x dim bucket fan-out, so the per-row plane dots run at
-    # shuffle parallelism instead of inside the scan stage (guide
+    # core parallelism instead of inside the scan stage (guide
     # §2.5 repartition-after-read; the engine.fanout_repartition
     # rationale). Measured neutral at sf0.1 (the 2000-row corpus is
     # below where the exchange pays) — the change is the scale

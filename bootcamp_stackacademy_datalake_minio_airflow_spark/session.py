@@ -73,9 +73,12 @@ def get_spark(
     Scale posture: AQE coalesces post-shuffle partitions and splits
     skewed ones at runtime, so a fixed ``shuffle_partitions`` is only
     the upper bound for small local runs; on a real cluster set it
-    ~2-3x total cores and let AQE shrink. Broadcast threshold stays at
-    Spark's default (10 MB) -- dimension tables in this engine are
-    explicitly hinted with ``broadcast()`` where known-small.
+    ~2-3x total cores and let AQE shrink. Fan-out exchanges
+    (``engine.fanout_repartition``) run one task per core instead; a
+    dynamic-allocation deployment sets ``spark.default.parallelism``
+    for them. Broadcast threshold stays at Spark's default (10 MB) --
+    dimension tables in this engine are explicitly hinted with
+    ``broadcast()`` where known-small.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

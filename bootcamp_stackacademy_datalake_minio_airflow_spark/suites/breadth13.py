@@ -585,7 +585,7 @@ def q_bpe_segment_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train(docs, "text", n_merges=10)
     # the segment pass is ~30 chained whole-text replaces per row —
-    # repartition first so it runs at shuffle parallelism instead of
+    # repartition first so it runs at core parallelism instead of
     # inside the scan stage (one task on a single-row-group parquet;
     # guide §2.5). The operator itself stays map-only.
     return (

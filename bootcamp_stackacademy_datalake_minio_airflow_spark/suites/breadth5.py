@@ -197,7 +197,7 @@ def q_source_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow exchange on the doc id (NOT on source — an enum-sized
     # key would collapse parallelism to |sources| partitions) before
     # the token explode, so the fan-out + partial (source, term)
-    # counts run at shuffle parallelism instead of inside the scan
+    # counts run at core parallelism instead of inside the scan
     # stage (one task on a single-row-group parquet; guide §2.5)
     tok = (
         docs.select(

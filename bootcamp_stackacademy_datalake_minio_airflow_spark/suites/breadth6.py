@@ -138,7 +138,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # narrow (id, tokens) exchange shared by BOTH explode branches
     # (ReusedExchange — tokenize once) so the unigram/bigram fan-outs
-    # run at shuffle parallelism instead of inside the scan stage
+    # run at core parallelism instead of inside the scan stage
     # (one task on a single-row-group parquet; guide §2.5)
     base = docs.select(
         "doc_id", F.split(normalize_text("text"), " ").alias("toks")

@@ -831,16 +831,21 @@ def _bpe_oracle(n_merges: int = 10) -> str:
 @register("bpe_merge_table", _bpe_oracle(10))
 def q_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train a 10-merge BPE vocabulary on the corpus (Sennrich et al.
-    2016) — per round: one distributed weighted-pair aggregation over
-    the distinct-word vocab and a single-row argmax collect. The
-    emitted merge table IS the learned tokenizer; the oracle
-    re-derives it from scratch."""
+    2016) — one distributed distinct-word count, collected once, and
+    the merge rounds on the driver. The emitted merge table IS the
+    learned tokenizer; the oracle re-derives it from scratch."""
+    import pandas as pd
+
     from ..operators.bpe import bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train(docs, "text", n_merges=10)
+    # a pandas frame takes the Arrow path into the JVM; a Python list
+    # is parallelized, so every action on it starts Python workers
+    cols = ["merge_rank", "pair", "merged", "pair_count"]
     return spark.createDataFrame(
-        merges, "merge_rank int, pair string, merged string, pair_count long"
+        pd.DataFrame(merges, columns=cols),
+        "merge_rank int, pair string, merged string, pair_count long",
     )
 
 

@@ -33,7 +33,6 @@ exact dup-span recovery at gram_len=40.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.text import (
     language_id,

@@ -1,8 +1,17 @@
-"""BPE vocabulary training: hand-derived merge sequence + segmentation."""
+"""BPE vocabulary training: hand-derived merge sequence, the driver
+merge against Spark's, the argmax tie order, the job budget and
+segmentation."""
 
 from __future__ import annotations
 
+import uuid
+
+from hypothesis import example, given, settings, strategies as st
+from pyspark.sql import functions as F
+
 from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.bpe import (
+    _apply_merge,
+    _merge_word,
     bpe_segment,
     bpe_train,
 )
@@ -40,13 +49,59 @@ def test_bpe_segment_counts(spark):
     assert out0[1] == 7 and out0[2] == 2
 
 
-def test_bpe_train_frees_its_round_checkpoints(spark):
-    """Each round's vocab is an engine.materialize checkpoint, which
-    DataFrame.unpersist cannot free; bpe_train returns a list, so every
-    one of them (the last included) must be dropped before it returns
-    instead of waiting for JVM GC in a long-lived session."""
+# symbols as training builds them (no spaces), merged ones included,
+# with non-ASCII and a supplementary-plane code point
+_SYMBOLS = st.sampled_from(["a", "b", "ab", "é", "f", "éf", "𝔸", "ｚ"])
+_WORDS = st.lists(
+    st.lists(_SYMBOLS, min_size=1, max_size=7).map(" ".join), min_size=1, max_size=6
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(words=_WORDS, l=_SYMBOLS, r=_SYMBOLS)
+@example(words=["a b a b a", "a"], l="a", r="b")
+@example(words=["é f é f", "ｚ", "𝔸 𝔸 𝔸"], l="𝔸", r="𝔸")
+def test_driver_merge_matches_spark(spark, words, l, r):
+    """bpe_train merges on the driver (_merge_word); bpe_segment and
+    the oracle merge with Spark's _apply_merge semantics. They must
+    agree on every symbol string: repeated and overlapping pairs,
+    single-symbol words, non-ASCII symbols."""
+    pat, merged = f"{l} {r}", l + r
+    df = spark.createDataFrame([(w,) for w in words], "w string")
+    got = [
+        row.m
+        for row in df.select(_apply_merge(F.col("w"), pat, merged).alias("m")).collect()
+    ]
+    assert got == [_merge_word(w, pat, merged) for w in words]
+
+
+def test_bpe_train_tie_takes_smaller_pair_by_code_point(spark):
+    """Tied pair counts break on the smaller pair. Code-point order is
+    Spark's UTF-8 byte order (and the oracle's), not Java's UTF-16
+    order, which puts '𝔸' (a surrogate pair) before 'ｚ' (U+FF5A)."""
+    df = spark.createDataFrame([("éf ab 𝔸𝔸 ｚｚ",)], "text string")
+    assert bpe_train(df, "text", n_merges=4) == [
+        (0, "a b", "ab", 1),
+        (1, "é f", "éf", 1),
+        (2, "ｚ ｚ", "ｚｚ", 1),
+        (3, "𝔸 𝔸", "𝔸𝔸", 1),
+    ]
+    pairs = spark.createDataFrame([("𝔸 𝔸",), ("ｚ ｚ",)], "p string")
+    assert pairs.orderBy("p").first().p == "ｚ ｚ"
+
+
+def test_bpe_train_job_budget(spark):
+    """One distributed word count, collected once: the merge rounds
+    run no Spark job and leave no persisted or checkpointed RDD."""
     df = spark.createDataFrame([("abab abab abab abc abc",)], "text string")
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
-    assert len(bpe_train(df, "text", n_merges=3)) == 3
-    assert jsc.getPersistentRDDs().size() <= before
+    sc = spark.sparkContext
+    group = f"test-bpe-{uuid.uuid4().hex}"
+    before = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup(group, group)
+    try:
+        assert len(bpe_train(df, "text", n_merges=3)) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert sc._jsc.getPersistentRDDs().size() == before

@@ -12,11 +12,18 @@ cache; see tests/test_breadth15.py::test_gd_persist_released_on_error).
 from __future__ import annotations
 
 import ast
+import contextlib
 import pathlib
+import re
 
+import pytest
 from pyspark import StorageLevel
 
-from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import cache_scope
+from bootcamp_stackacademy_datalake_minio_airflow_spark import queries as q
+from bootcamp_stackacademy_datalake_minio_airflow_spark.engine import (
+    cache_scope,
+    fanout_repartition,
+)
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = ROOT / "bootcamp_stackacademy_datalake_minio_airflow_spark"
@@ -88,3 +95,50 @@ def test_cache_scope_keeps_level_and_releases_on_exit(spark):
     assert owned.is_cached
     owned.unpersist()
 
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n: int):
+    """Run the block with ``spark.sql.shuffle.partitions`` at ``n``,
+    restoring the session's value afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_fanout_partitions_follow_the_cores(spark):
+    """The fan-out exchange runs one task per core whatever the shuffle
+    conf says; the test session runs both at 4, so set it apart."""
+    sc = spark.sparkContext
+    with _shuffle_partitions(spark, 32):
+        df = fanout_repartition(spark.range(100).withColumnRenamed("id", "k"), "k")
+        assert df.rdd.getNumPartitions() == sc.defaultParallelism != 32
+
+
+_EXCHANGE = re.compile(r"(?<![A-Za-z])Exchange\b")
+
+
+def _exchanges(df) -> int:
+    """Shuffle ``Exchange`` nodes in the initial physical plan."""
+    return len(_EXCHANGE.findall(df._jdf.queryExecution().executedPlan().toString()))
+
+
+@pytest.mark.slow
+def test_fanout_adds_no_exchange_when_shuffle_partitions_exceed_cores(spark, sf_dir):
+    """A fan-out repartition stacked on an aggregate keyed the same
+    way is dropped when its count equals the aggregate's
+    (``spark.sql.shuffle.partitions``) and is a second exchange when
+    it does not. No registry query may plan more exchanges at 32
+    shuffle partitions than at 4 (= the cores here)."""
+    grown = {}
+    for name, fn in q.queries().items():
+        with _shuffle_partitions(spark, 4):
+            at_cores = _exchanges(fn(spark, sf_dir))
+        with _shuffle_partitions(spark, 32):
+            at_32 = _exchanges(fn(spark, sf_dir))
+        if at_32 > at_cores:
+            grown[name] = (at_cores, at_32)
+    assert not grown, f"exchanges at 4 -> 32 shuffle partitions: {grown}"

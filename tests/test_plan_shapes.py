@@ -181,10 +181,10 @@ def test_no_cartesian_or_nested_loop_anywhere(captured):
             assert "BroadcastNestedLoopJoin" not in plans, name
 
 
-#: targets with no join at all by design — bpe_merge_table is an
-#: iterative pair-count aggregation with a per-round 1-row argmax
-#: (its scale shape is the partial-aggregate, pinned separately
-#: below); bpe_segment_tokens reuses that loop then applies the
+#: targets with no join at all by design — bpe_merge_table is one
+#: distinct-word count whose merges are learned on the driver (its
+#: scale shape is the partial-aggregate, pinned separately below);
+#: bpe_segment_tokens reuses that training then applies the
 #: merge table as a map-only chained replace over the corpus
 #: bootstrap_ci_order_value is a block-explode -> lane-explode ->
 #: partial-aggregable groupBy(rep): resamples never join anything.
@@ -245,10 +245,10 @@ def test_every_target_joins_via_equi_join_operators(captured):
 
 
 def test_bpe_merge_loop_aggregates_map_side(captured):
-    # the per-round pair count must be a hash aggregate (map-side
-    # partial -> final), not a sort-based fallback, and the loop must
-    # never join: a join appearing here would mean the merge-apply
-    # started shipping the corpus instead of the bounded pair table
+    # the word count must be a hash aggregate (map-side partial ->
+    # final), not a sort-based fallback, and training must never
+    # join: a join appearing here would mean it started shipping the
+    # corpus instead of the bounded distinct-word table
     plans = captured["bpe_merge_table"]
     assert "HashAggregate" in plans
     for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):

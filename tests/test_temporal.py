@@ -221,8 +221,6 @@ def test_interval_overlap_join_exactly_once_vs_bruteforce(spark):
     instantaneous single-point overlaps."""
     import random
 
-    from pyspark.sql import functions as F
-
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.temporal import (
         interval_overlap_join,
     )
