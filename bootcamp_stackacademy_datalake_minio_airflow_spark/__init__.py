@@ -13,8 +13,9 @@ Layout
 - ``session``    SparkSession factory (S3A/MinIO conf, AQE, UTC)
 - ``schemas``    explicit StructTypes for the Olist tables + testdata
 - ``catalog``    zone-path resolution (bronze/silver/gold) + table loading
-- ``engine``     cache policy (persist -> materialize -> release) + shared
-                 plan helpers (fan-out exchange, text normalization)
+- ``engine``     cache policy (persist -> release; checkpoints only for
+                 loop lineage) + shared plan helpers (fan-out exchange,
+                 text normalization)
 - ``sources``    CSV / parquet / JDBC readers & writers
 - ``functions``  scalar helpers (null-fill, rename maps, text normalizers)
 - ``operators``  relational + ML-data operators (pivot, dedup, similarity)

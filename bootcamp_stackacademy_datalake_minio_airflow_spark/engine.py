@@ -3,16 +3,22 @@
 Three concerns live here so that no operator module hand-codes them:
 
 - **Cache policy.** ``cache_scope`` persists the intermediates an
-  operator re-reads and releases every one of them when the block
-  exits, normally or by exception; ``materialize`` is the one eager
-  ``localCheckpoint`` that pins a (small) result before that release,
-  and ``drop_checkpoint`` frees one a loop has superseded.
-  ``return materialize(out)`` inside the block checkpoints first and
-  releases second, so the returned frame never reads a dropped cache.
+  operator re-reads in build-time jobs (a count, a per-round collect)
+  and releases every one of them when the block exits, normally or by
+  exception. An operator returns its lazy plan, which Catalyst plans
+  whole with the caller's action, or, when its rounds already ran on
+  the driver, a literal frame of the collected result. ``materialize``
+  (an eager ``localCheckpoint``) truncates lineage: the
+  ``connected_components`` and ``k_core`` rounds and the cross-query
+  edge set of ``suites/graph_shared.py``, plus the few pair operators
+  whose lazy plan would recompute an intermediate no exchange can
+  share (the allow-list in tests/test_engine.py). ``drop_checkpoint``
+  frees a round a loop has superseded.
 - **Shared plan helpers.** ``fanout_repartition`` (one-task-per-core
   exchange ahead of fan-out work), ``normalize_text`` (the canonical
-  text form every fingerprint/dedup operator hashes) and
-  ``_norm_base`` (that form materialized behind an exchange).
+  text form every fingerprint/dedup operator hashes; ``NORM_SQL`` is
+  its oracle twin) and ``_norm_base`` (that form materialized behind
+  an exchange).
 - **Driver-side rounding.** ``round_half_away`` rounds a Python float
   exactly as SQL ``ROUND`` does, for operators that feed driver-side
   state back into a plan the oracle replays.
@@ -59,17 +65,19 @@ def cache_scope() -> Iterator[Callable[..., DataFrame]]:
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` via ``localCheckpoint`` and return
     the checkpointed frame, whose plan no longer references the
-    caches it was computed from.
+    lineage it was computed from.
 
-    Operators use it on results orders of magnitude smaller than the
-    corpus-sized intermediates they release, so eager materialization
-    is the cheap side of the trade. Trade-off, stated honestly:
-    localCheckpoint truncates lineage into executor-local storage,
-    which is NOT fault tolerant — lose an executor afterwards and the
-    blocks can't recompute. For pair results (tiny, cheap to re-derive
-    by re-running the operator) that's the right trade; for anything
-    expensive to rebuild on an unreliable cluster, write a parquet
-    checkpoint instead.
+    For lineage truncation: an iterative loop whose lazy plan would
+    grow with every round (the ``connected_components`` and ``k_core``
+    rounds), the edge set that ``suites/graph_shared.py`` shares across
+    queries, and an operator result whose lazy plan would recompute a
+    shared intermediate that ReusedExchange cannot cover (each listed,
+    with its measurement, in tests/test_engine.py). Any other operator
+    result is returned lazily. The checkpoint is NOT fault tolerant:
+    its blocks live in executor-local storage, so losing an executor
+    afterwards loses them, where a lazy plan recomputes by lineage.
+    ``clearCache()`` does not free it either (``drop_checkpoint``
+    does).
     """
     return df.localCheckpoint(eager=True)
 
@@ -127,6 +135,11 @@ def normalize_text(col: str | Column) -> Column:
     fingerprint/dedup operators hash."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
+
+
+#: ``normalize_text`` of a ``text`` column in DuckDB SQL, for the
+#: oracles that replay it.
+NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 
 def _norm_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

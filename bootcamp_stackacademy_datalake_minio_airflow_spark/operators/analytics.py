@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize, round_half_away
+from ..engine import cache_scope, fanout_repartition, round_half_away
 
 
 def pareto_front_2d(df: DataFrame, cost_col: str, gain_col: str) -> DataFrame:
@@ -790,7 +790,8 @@ def split_conformal_coverage(
     Distributed shape: the model is a broadcast-sized per-group mean
     table; the conformal quantile is ONE order statistic, fetched by
     sort+offset (never a global window over data); driver traffic is
-    two scalars (n_calib, q_hat). Determinism: draws are the house
+    three scalar rows (n_calib, q_hat, then the counts and coverage
+    the one-row result is built from). Determinism: draws are the house
     md5-prefix family, residuals ROUND(·, 4) with the row key as the
     sort tie-break, k computed by the identical ceil arithmetic on
     both engines (clamped to n_calib; the unclamped k > n_calib case
@@ -811,7 +812,7 @@ def split_conformal_coverage(
     # inside the one-task scan stage; one narrow exchange + cache runs
     # it once, parallel (guide §2.5 / §5; rationale in
     # engine.fanout_repartition). Released when the scope exits, after
-    # the 1-row result below materializes.
+    # the last collect.
     with cache_scope() as hold:
         base = hold(
             fanout_repartition(
@@ -857,7 +858,7 @@ def split_conformal_coverage(
         scored = test.join(F.broadcast(model), "__g").select(
             F.round(F.abs(F.col("__v") - F.col("__pred")), 4).alias("__r")
         )
-        out = (
+        row = (
             train.agg(F.count("*").cast("long").alias("n_train"))
             .crossJoin(
                 scored.agg(
@@ -870,12 +871,12 @@ def split_conformal_coverage(
                     ).alias("coverage"),
                 )
             )
-            .select(
-                "n_train",
-                F.lit(n_calib).cast("long").alias("n_calib"),
-                "n_test",
-                F.lit(q_hat).alias("q_hat"),
-                "coverage",
-            )
+            .collect()[0]
         )
-        return materialize(out)
+    return spark.range(1).select(
+        F.lit(row["n_train"]).cast("long").alias("n_train"),
+        F.lit(n_calib).cast("long").alias("n_calib"),
+        F.lit(row["n_test"]).cast("long").alias("n_test"),
+        F.lit(q_hat).alias("q_hat"),
+        F.lit(row["coverage"]).cast("double").alias("coverage"),
+    )

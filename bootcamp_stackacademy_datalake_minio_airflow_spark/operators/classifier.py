@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize, round_half_away
+from ..engine import cache_scope, fanout_repartition, round_half_away
 
 
 def train_embedding_classifier(
@@ -142,19 +142,16 @@ def logreg_gd_train(
             (_z(w) >= 0.0) == (F.col("__y") == 1.0)
         ).cast("int")
 
-        out = feat.agg(
+        row = feat.agg(
             F.count("*").cast("long").alias("n_docs"),
             F.round(F.sum(correct) / F.count("*"), 4).alias("accuracy"),
-        ).select(
-            "n_docs",
-            F.lit(w[0]).alias("w_bias"),
-            *[
-                F.lit(w[j + 1]).alias(f"w_{names[j]}")
-                for j in range(len(feature_cols))
-            ],
-            "accuracy",
-        )
-        return materialize(out)
+        ).collect()[0]
+    return spark.range(1).select(
+        F.lit(row["n_docs"]).cast("long").alias("n_docs"),
+        F.lit(w[0]).alias("w_bias"),
+        *[F.lit(w[j + 1]).alias(f"w_{names[j]}") for j in range(len(feature_cols))],
+        F.lit(row["accuracy"]).cast("double").alias("accuracy"),
+    )
 
 
 def _gd_feat(df: DataFrame, label_col, feature_cols: list) -> DataFrame:
@@ -226,6 +223,8 @@ def logreg_calibration_bins(
     the floor so a last-ulp exp() difference between engines cannot
     flip a bin edge. One training pass + one scoring aggregate, the
     feat frame persisted across both (see logreg_gd_train)."""
+    import pandas as pd
+
     spark = df.sparkSession
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
@@ -242,7 +241,7 @@ def logreg_calibration_bins(
         p6 = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
         b = F.least(F.floor(p6 * n_bins).cast("int"), F.lit(n_bins - 1))
 
-        out = (
+        bins = (
             feat.select(b.alias("bin"), p6.alias("__p"), "__y")
             .groupBy("bin")
             .agg(
@@ -250,8 +249,14 @@ def logreg_calibration_bins(
                 F.round(F.avg("__p"), 4).alias("mean_p"),
                 F.round(F.avg("__y"), 4).alias("frac_pos"),
             )
+            .collect()  # bounded by n_bins, never by the data
         )
-        return materialize(out)
+    # a pandas frame takes the Arrow path into the JVM; a Python list
+    # is parallelized, so every action on it starts Python workers
+    return spark.createDataFrame(
+        pd.DataFrame(bins, columns=["bin", "n_docs", "mean_p", "frac_pos"]),
+        "bin INT, n_docs BIGINT, mean_p DOUBLE, frac_pos DOUBLE",
+    )
 
 
 # --- multinomial Naive Bayes (count-exact training -> oracle-replayable) -----
@@ -440,7 +445,7 @@ def logreg_auc_roc(
             F.coalesce(F.sum("__neg").over(wd), F.lit(0)).alias("__cneg"),
         )
 
-        out = cum.agg(
+        row = cum.agg(
             F.sum("__pos").cast("long").alias("n_pos"),
             F.sum("__neg").cast("long").alias("n_neg"),
             F.sum(
@@ -459,8 +464,12 @@ def logreg_auc_roc(
                     6,
                 ),
             ).alias("auc"),
-        )
-        return materialize(out)
+        ).collect()[0]
+    return spark.range(1).select(
+        F.lit(row["n_pos"]).cast("long").alias("n_pos"),
+        F.lit(row["n_neg"]).cast("long").alias("n_neg"),
+        F.lit(row["auc"]).cast("double").alias("auc"),
+    )
 
 
 # --- depth-1 decision tree (CART root split) ----------------------------------

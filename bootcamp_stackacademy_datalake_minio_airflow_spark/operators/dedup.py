@@ -345,6 +345,10 @@ def minhash_lsh_pairs(
             )
             .filter(F.col("jaccard_sim") >= threshold)
         )
+        # kept as a checkpoint (tests/test_engine.py allow-list): the
+        # band self-join runs as a broadcast join, so a lazy plan has no
+        # exchange to reuse and builds the signature table once per side
+        # (cold median 1.45x at sf0.01, 4 cores)
         return materialize(verified)
 
 
@@ -586,6 +590,10 @@ def simhash_pairs(
             )
             .distinct()
         )
+        # kept as a checkpoint (tests/test_engine.py allow-list): the
+        # block self-join runs as a broadcast join, so a lazy plan has no
+        # exchange to reuse and builds the simhash table once per side
+        # (cold median 1.30x at sf0.01, 4 cores)
         return materialize(pairs)
 
 
@@ -749,6 +757,10 @@ def ngram_jaccard_pairs(
             .filter(F.col("__j") >= threshold)
             .select("id_a", "id_b", F.round("__j", 4).alias("jaccard_sim"))
         )
+        # kept as a checkpoint (tests/test_engine.py allow-list): lazily,
+        # the interpreted gram-set HOF runs once per consumer (document
+        # frequency, prefix join, both verification joins) — cold median
+        # 1.12x at sf0.01, 4 cores
         return materialize(verified)
 
 
@@ -913,6 +925,8 @@ def ngram_containment_pairs(
             .filter(F.col("__c") >= threshold)
             .select("id_a", "id_b", F.round("__c", 4).alias("containment"))
         )
+        # kept as a checkpoint for the same reason as
+        # ngram_jaccard_pairs (cold median 1.54x lazily at sf0.01, 4 cores)
         return materialize(verified)
 
 
@@ -1164,76 +1178,65 @@ def dup_span_stats(
     viral (no per-hash collect_list, whose hot key would be
     unsplittable). Span assembly is a per-DOCUMENT ordered window
     (partitioned — bounded by document length), then two partial-
-    aggregable groupBys. The hashed position stream feeds both the
-    count and the join, so it is held once in an ``engine.cache_scope``
-    and released after the result materializes. md5 family: DuckDB replays every
-    stage, so the oracle hash-gates spans, not just counts.
+    aggregable groupBys. md5 family: DuckDB replays every stage, so
+    the oracle hash-gates spans, not just counts.
     """
-    from pyspark import StorageLevel
-
-    with cache_scope() as hold:
-        norm = _norm_base(df, id_col, text_col).filter(
-            F.length("__txt") >= gram_len
-        )
-        n_pos = F.length("__txt") - F.lit(gram_len - 1)
-        pos = hold(
-            norm.select(
-                "__id",
-                F.length("__txt").alias("__dlen"),
-                "__txt",
-                F.explode(F.sequence(F.lit(1), n_pos)).alias("__i"),
-            )
-            .select(
-                "__id",
-                "__dlen",
-                "__i",
-                F.md5(F.substr(F.col("__txt"), F.col("__i"), F.lit(gram_len))).alias(
-                    "__h"
-                ),
+    norm = _norm_base(df, id_col, text_col).filter(
+        F.length("__txt") >= gram_len
+    )
+    n_pos = F.length("__txt") - F.lit(gram_len - 1)
+    pos = norm.select(
+        "__id",
+        F.length("__txt").alias("__dlen"),
+        "__txt",
+        F.explode(F.sequence(F.lit(1), n_pos)).alias("__i"),
+    ).select(
+        "__id",
+        "__dlen",
+        "__i",
+        F.md5(F.substr(F.col("__txt"), F.col("__i"), F.lit(gram_len))).alias("__h"),
+    )
+    dup = (
+        pos.groupBy("__h")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .filter(F.col("__c") >= 2)
+        .select("__h")
+    )
+    hits = pos.join(dup, "__h").select("__id", "__dlen", "__i")
+    wkey = Window.partitionBy("__id").orderBy("__i")
+    prev_max = F.max("__i").over(
+        wkey.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    flagged = hits.withColumn(
+        "__new",
+        F.when(
+            prev_max.isNull() | (F.col("__i") > prev_max + F.lit(gram_len)),
+            F.lit(1),
+        ).otherwise(F.lit(0)),
+    )
+    isl = flagged.withColumn(
+        "__isl",
+        F.sum("__new").over(wkey.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    spans = isl.groupBy("__id", "__dlen", "__isl").agg(
+        F.min("__i").alias("__s"),
+        (F.max("__i") + F.lit(gram_len - 1)).alias("__e"),
+    )
+    out = (
+        spans.groupBy("__id", "__dlen")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_spans"),
+            F.sum(F.col("__e") - F.col("__s") + 1).cast("long").alias(
+                "dup_chars"
             ),
-            StorageLevel.MEMORY_AND_DISK,
         )
-        dup = (
-            pos.groupBy("__h")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .filter(F.col("__c") >= 2)
-            .select("__h")
+        .select(
+            F.col("__id").alias(id_col),
+            "n_spans",
+            "dup_chars",
+            (
+                F.round(F.col("dup_chars") / F.col("__dlen"), 4) + F.lit(0.0)
+            ).alias("dup_fraction"),
         )
-        hits = pos.join(dup, "__h").select("__id", "__dlen", "__i")
-        wkey = Window.partitionBy("__id").orderBy("__i")
-        prev_max = F.max("__i").over(
-            wkey.rowsBetween(Window.unboundedPreceding, -1)
-        )
-        flagged = hits.withColumn(
-            "__new",
-            F.when(
-                prev_max.isNull() | (F.col("__i") > prev_max + F.lit(gram_len)),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        isl = flagged.withColumn(
-            "__isl",
-            F.sum("__new").over(wkey.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        spans = isl.groupBy("__id", "__dlen", "__isl").agg(
-            F.min("__i").alias("__s"),
-            (F.max("__i") + F.lit(gram_len - 1)).alias("__e"),
-        )
-        out = (
-            spans.groupBy("__id", "__dlen")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_spans"),
-                F.sum(F.col("__e") - F.col("__s") + 1).cast("long").alias(
-                    "dup_chars"
-                ),
-            )
-            .select(
-                F.col("__id").alias(id_col),
-                "n_spans",
-                "dup_chars",
-                (
-                    F.round(F.col("dup_chars") / F.col("__dlen"), 4) + F.lit(0.0)
-                ).alias("dup_fraction"),
-            )
-        )
-        return materialize(out)
+    )
+    return out

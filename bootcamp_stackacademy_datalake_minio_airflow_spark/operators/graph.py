@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, drop_checkpoint, fanout_repartition, materialize
+from ..engine import drop_checkpoint, fanout_repartition, materialize
 
 
 def cooccurrence_edges(
@@ -90,7 +90,7 @@ def pagerank(
 
     Returns ``(node, pagerank)``. Each iteration is ONE shuffle (join
     ranks to edges on src, re-aggregate on dst); the edge+degree table
-    is computed once and cached across iterations. Ranks are
+    is one subtree that every iteration reads. Ranks are
     quantized to ``state_round`` decimals per iteration so the state
     an independent replay sees is bit-identical — unordered float
     summation drifts ~1e-16 per step, and without the quantization
@@ -105,70 +105,62 @@ def pagerank(
     is broadcast, making each iteration a map-only pass over those
     edges plus one aggregation shuffle; past the budget (a 100M-node
     web graph) the edge+degree table is hash-partitioned by ``src``
-    ONCE and cached, so the per-iteration shuffle join never
-    re-exchanges the (dominant) edge side — only the |V|-row rank
-    table moves. Dangling nodes cannot exist here (a symmetric edge
+    ONCE, one exchange every iteration reuses, so the per-iteration
+    shuffle join never re-exchanges the (dominant) edge side — only
+    the |V|-row rank table moves. Dangling nodes cannot exist here (a symmetric edge
     set gives every node an out-edge); for general digraphs add the
     dangling-mass redistribution term before reusing this.
     """
-    with cache_scope() as hold:
-        deg = hold(edges.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg")))
-        # the node set IS deg's key set (symmetric edges: every node has an
-        # out-edge) — deriving it from the |V|-row degree table instead of
-        # a second distinct over the |E|-row edge set saves a full edge
-        # shuffle in the build phase
-        nodes = deg.select(F.col("src").alias("node"))
-        n = deg.count()
-        if n == 0:
-            # empty edge set (e.g. every group holds a single item):
-            # return an empty frame with the output schema instead of a
-            # driver-side ZeroDivisionError
-            return nodes.select(
-                "node", F.lit(0.0).alias("rank")
-            ).select("node", F.round("rank", out_round).alias("pagerank"))
-        base = (1.0 - damping) / n
-        small = n <= broadcast_rank_budget
-        hint = F.broadcast if small else (lambda df: df)
-        # Partition the edge+degree table by the PER-ITERATION aggregation
-        # key. In the broadcast regime the rank join is map-only, so
-        # dst-partitioning flows through the project into
-        # groupBy("node"=dst) and each iteration exchanges NOTHING but the
-        # tiny rank vector — pinning by src (the join key) instead would
-        # re-shuffle the full contribution stream every iteration (5
-        # shuffles of |E| rows; measured ~2x slower at sf0.1). Past the
-        # budget the join itself must shuffle on src, so src-partitioning
-        # is the one worth pinning; deg is |V| rows and rides the same
-        # broadcast budget. The caller's edges are already partitioned by
-        # dst (cooccurrence_edges(partition_by="dst")), so under the budget
-        # ce is just a broadcast-degree decoration of them — two map-side
-        # ops per iteration, no extra exchange, no second cache holding a
-        # full copy of |E|.
-        if small:
-            ce = edges.join(hint(deg), "src")
-        else:
-            ce = hold(
-                edges.join(hint(deg), "src")
-                .repartition("src")  # keyless on purpose: iterative consumer (see cooccurrence_edges note)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg"))
+    # the node set IS deg's key set (symmetric edges: every node has an
+    # out-edge) — deriving it from the |V|-row degree table instead of
+    # a second distinct over the |E|-row edge set saves a full edge
+    # shuffle in the build phase
+    nodes = deg.select(F.col("src").alias("node"))
+    n = deg.count()
+    if n == 0:
+        # empty edge set (e.g. every group holds a single item):
+        # return an empty frame with the output schema instead of a
+        # driver-side ZeroDivisionError
+        return nodes.select(
+            "node", F.lit(0.0).alias("rank")
+        ).select("node", F.round("rank", out_round).alias("pagerank"))
+    base = (1.0 - damping) / n
+    small = n <= broadcast_rank_budget
+    hint = F.broadcast if small else (lambda df: df)
+    # Partition the edge+degree table by the PER-ITERATION aggregation
+    # key. In the broadcast regime the rank join is map-only, so
+    # dst-partitioning flows through the project into
+    # groupBy("node"=dst) and each iteration exchanges NOTHING but the
+    # tiny rank vector — pinning by src (the join key) instead would
+    # re-shuffle the full contribution stream every iteration (5
+    # shuffles of |E| rows; measured ~2x slower at sf0.1). Past the
+    # budget the join itself must shuffle on src, so src-partitioning
+    # is the one worth pinning; deg is |V| rows and rides the same
+    # broadcast budget. The caller's edges are already partitioned by
+    # dst (cooccurrence_edges(partition_by="dst")), so under the budget
+    # ce is just a broadcast-degree decoration of them — two map-side
+    # ops per iteration, no extra exchange.
+    ce = edges.join(hint(deg), "src")
+    if not small:
+        # keyless on purpose: iterative consumer (see cooccurrence_edges note)
+        ce = ce.repartition("src")
+    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    for _ in range(iters):
+        ranks = (
+            ce.join(hint(ranks), ce.src == ranks.node)
+            .select(
+                F.col("dst").alias("node"),
+                (F.col("rank") / F.col("__outdeg")).alias("__c"),
             )
-        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-        for _ in range(iters):
-            ranks = (
-                ce.join(hint(ranks), ce.src == ranks.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("__outdeg")).alias("__c"),
-                )
-                .groupBy("node")
-                .agg(
-                    F.round(
-                        F.lit(base) + F.lit(damping) * F.sum("__c"), state_round
-                    ).alias("rank")
-                )
+            .groupBy("node")
+            .agg(
+                F.round(
+                    F.lit(base) + F.lit(damping) * F.sum("__c"), state_round
+                ).alias("rank")
             )
-        out = ranks.select("node", F.round("rank", out_round).alias("pagerank"))
-        # materialize (|V| rows) before the scope releases the cached
-        # edge tables the lazy 5-join plan references
-        return materialize(out)
+        )
+    return ranks.select("node", F.round("rank", out_round).alias("pagerank"))
 
 
 def label_propagation(
@@ -197,36 +189,34 @@ def label_propagation(
     pagerank. As there, the caller owns the edge set (materialized,
     dst-partitioned) and this function never caches or releases it.
     """
-    with cache_scope() as hold:
-        nodes = hold(edges.select(F.col("dst").alias("node")).distinct())
-        n = nodes.count()
-        small = n <= broadcast_label_budget
-        hint = F.broadcast if small else (lambda df: df)
-        # under the budget the caller's dst-partitioned edges serve as
-        # they are; past it the shuffle join needs them by src, cached once
-        if small:
-            e = edges
-        else:
-            # keyless on purpose: iterative consumer (see cooccurrence_edges note)
-            e = hold(edges.repartition("src"))
-        labels = nodes.select("node", F.col("node").alias("lab"))
-        for _ in range(iters):
-            votes = e.join(hint(labels), e.src == labels.node).select(
-                F.col("dst").alias("n"), "lab"
-            )
-            # ONE aggregation per round (r13): mode(lab, deterministic) IS
-            # the per-node argmax with ties to the LOWEST label — the
-            # exact (count DESC, label ASC) rule the old count-then-
-            # max(struct) pair computed in TWO exchanges per iteration
-            # (hashpartitioning(n,lab) then hashpartitioning(n), verified
-            # in the executed plan). mode partial-aggregates its count
-            # map map-side, so shuffle bytes stay comparable and the
-            # per-round stage count halves (guide §2.4 remove shuffles).
-            labels = votes.groupBy("n").agg(
-                F.expr("mode(lab, true)").alias("lab")
-            ).select(F.col("n").alias("node"), "lab")
-        out = labels.select("node", F.col("lab").alias("community"))
-        return materialize(out)
+    nodes = edges.select(F.col("dst").alias("node")).distinct()
+    n = nodes.count()
+    small = n <= broadcast_label_budget
+    hint = F.broadcast if small else (lambda df: df)
+    # under the budget the caller's dst-partitioned edges serve as
+    # they are; past it the shuffle join needs them by src, one
+    # exchange that every round reuses
+    e = edges
+    if not small:
+        # keyless on purpose: iterative consumer (see cooccurrence_edges note)
+        e = edges.repartition("src")
+    labels = nodes.select("node", F.col("node").alias("lab"))
+    for _ in range(iters):
+        votes = e.join(hint(labels), e.src == labels.node).select(
+            F.col("dst").alias("n"), "lab"
+        )
+        # ONE aggregation per round (r13): mode(lab, deterministic) IS
+        # the per-node argmax with ties to the LOWEST label — the
+        # exact (count DESC, label ASC) rule the old count-then-
+        # max(struct) pair computed in TWO exchanges per iteration
+        # (hashpartitioning(n,lab) then hashpartitioning(n), verified
+        # in the executed plan). mode partial-aggregates its count
+        # map map-side, so shuffle bytes stay comparable and the
+        # per-round stage count halves (guide §2.4 remove shuffles).
+        labels = votes.groupBy("n").agg(
+            F.expr("mode(lab, true)").alias("lab")
+        ).select(F.col("n").alias("node"), "lab")
+    return labels.select("node", F.col("lab").alias("community"))
 
 
 def k_core(
@@ -316,16 +306,12 @@ def triangle_counts(
       AQE-eligible, no driver state. This is the 100 TB path; the
       orientation bound keeps it hub-safe.
 
-    Cached intermediates live in an ``engine.cache_scope`` and are
-    released once the result materializes, so repeated invocation in
-    a long-lived session doesn't accumulate executor memory.
-
     Returns (node, n_triangles) for every node in ≥1 triangle.
     """
-    # und is read by the degree agg AND the orientation join; oriented
-    # is read three times (both wedge sides + the closing edge) — cache
-    # both so the co-occurrence build (the expensive part) runs once,
-    # not five times. The degree table is |V| rows — broadcast it so
+    # und is read by the degree agg AND the orientation join, and
+    # oriented by every consumer below: their exchanges (the dedup,
+    # the degree agg) are shared by ReusedExchange, so only map-side
+    # work repeats. The degree table is |V| rows — broadcast it so
     # orientation adds no exchange.
     #
     # ``edges_canonical``: a caller that KNOWS its edge stream already
@@ -337,172 +323,157 @@ def triangle_counts(
     # to keep |E|.
     # ``edges_distinct``: the caller's stream is already duplicate-free
     # AND materialized by an external cache (suites/graph_shared.py's
-    # shared projection) — skip the dedup exchange and the second
-    # cache; both und consumers (degree agg, orientation join) read
-    # the caller's materialized table map-side instead.
-    with cache_scope() as hold:
-        if edges_canonical:
-            canon = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        else:
-            canon = edges.select(
-                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-            )
-        und = canon.filter(F.col("u") < F.col("v"))
-        if not edges_distinct:
-            und = hold(und.distinct())
-        # regime decision up front (the count fills und's cache): the
-        # broadcast hints — degree table for orientation, adjacency for
-        # the intersection — are only legal under the budget. |V| <= 2|E|,
-        # so the edge count bounds both. Past the budget NOTHING is
-        # broadcast or collected; orientation and closing run as
-        # spillable shuffle joins (found in review: the degree broadcast
-        # used to be unconditional, collecting |V| rows to the driver on
-        # the very graphs the scale path exists for).
-        # ``edge_count_hint`` must be a true UPPER bound on |E| (callers
-        # can assert one cheaply, e.g. rows-in x max-group-size for a
-        # bounded-group co-occurrence build). When the bound already fits
-        # the budget the probe job is skipped and the cache fills under
-        # the first real consumer; an over-estimate merely falls back to
-        # the probe, so a conservative bound is always safe.
-        if edge_count_hint is not None and edge_count_hint <= broadcast_edge_budget:
-            small = True
-        else:
-            small = und.count() <= broadcast_edge_budget
-        hint = F.broadcast if small else (lambda df: df)
-        deg = (
-            und.select(F.col("u").alias("n"))
-            .unionAll(und.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("deg"))
+    # shared projection) — skip the dedup exchange; both und
+    # consumers (degree agg, orientation join) read the caller's
+    # materialized table map-side instead.
+    if edges_canonical:
+        canon = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    else:
+        canon = edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
-        # BOTH degree lookups join the SAME deg subtree via alias(), not
-        # via two renaming Projects: a Project on top of the exchange
-        # child changes its canonical plan, so the old form built (and
-        # fully re-aggregated) the degree table twice — once per
-        # broadcast. With identical children, ReuseExchange ships ONE
-        # build to both joins (and on the past-budget path, one shuffle
-        # of deg serves both sides — guide §2.4 share one exchange).
-        d1, d2 = deg.alias("d1"), deg.alias("d2")
-        e = (
-            und.alias("e")
-            .join(hint(d1), F.col("e.u") == F.col("d1.n"))
-            .join(hint(d2), F.col("e.v") == F.col("d2.n"))
+    und = canon.filter(F.col("u") < F.col("v"))
+    if not edges_distinct:
+        und = und.distinct()
+    # regime decision up front: the broadcast hints — degree table for
+    # orientation, adjacency for the intersection — are only legal
+    # under the budget. |V| <= 2|E|,
+    # so the edge count bounds both. Past the budget NOTHING is
+    # broadcast or collected; orientation and closing run as
+    # spillable shuffle joins (found in review: the degree broadcast
+    # used to be unconditional, collecting |V| rows to the driver on
+    # the very graphs the scale path exists for).
+    # ``edge_count_hint`` must be a true UPPER bound on |E| (callers
+    # can assert one cheaply, e.g. rows-in x max-group-size for a
+    # bounded-group co-occurrence build). When the bound already fits
+    # the budget the probe job is skipped; an over-estimate merely falls
+    # back to the probe, so a conservative bound is always safe.
+    if edge_count_hint is not None and edge_count_hint <= broadcast_edge_budget:
+        small = True
+    else:
+        small = und.count() <= broadcast_edge_budget
+    hint = F.broadcast if small else (lambda df: df)
+    deg = (
+        und.select(F.col("u").alias("n"))
+        .unionAll(und.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count("*").alias("deg"))
+    )
+    # BOTH degree lookups join the SAME deg subtree via alias(), not
+    # via two renaming Projects: a Project on top of the exchange
+    # child changes its canonical plan, so the old form built (and
+    # fully re-aggregated) the degree table twice — once per
+    # broadcast. With identical children, ReuseExchange ships ONE
+    # build to both joins (and on the past-budget path, one shuffle
+    # of deg serves both sides — guide §2.4 share one exchange).
+    d1, d2 = deg.alias("d1"), deg.alias("d2")
+    e = (
+        und.alias("e")
+        .join(hint(d1), F.col("e.u") == F.col("d1.n"))
+        .join(hint(d2), F.col("e.v") == F.col("d2.n"))
+    )
+    du, dv = F.col("d1.deg"), F.col("d2.deg")
+    u_first = (du < dv) | ((du == dv) & (F.col("e.u") < F.col("e.v")))
+    oriented = e.select(
+        F.when(u_first, F.col("e.u")).otherwise(F.col("e.v")).alias("s"),
+        F.when(u_first, F.col("e.v")).otherwise(F.col("e.u")).alias("t"),
+        F.when(u_first, dv).otherwise(du).alias("dt"),
+    )
+    if small:
+        # dense/fast path: broadcast adjacency, intersect per edge.
+        # Each triangle (s, t, w) with oriented edges s->t, s->w, t->w
+        # is found exactly once, at its base edge (s, t), as
+        # w ∈ N+(s) ∩ N+(t).
+        adj = oriented.groupBy("s").agg(
+            F.sort_array(F.collect_list("t")).alias("nbrs")
         )
-        du, dv = F.col("d1.deg"), F.col("d2.deg")
-        u_first = (du < dv) | ((du == dv) & (F.col("e.u") < F.col("e.v")))
-        oriented = hold(
-            e.select(
-                F.when(u_first, F.col("e.u")).otherwise(F.col("e.v")).alias("s"),
-                F.when(u_first, F.col("e.v")).otherwise(F.col("e.u")).alias("t"),
-                F.when(u_first, dv).otherwise(du).alias("dt"),
+        # same alias-not-Project discipline as the degree joins above:
+        # the two adjacency lookups (by s and by t) broadcast the SAME
+        # subtree, so the collect_list aggregation + driver collect +
+        # broadcast build — the dense path's heaviest setup — runs
+        # ONCE and ReuseExchange serves the second join from it
+        a1, a2 = adj.alias("a1"), adj.alias("a2")
+        tri_edges = (
+            oriented.select("s", "t")
+            .alias("o")
+            .join(F.broadcast(a1), F.col("o.s") == F.col("a1.s"))
+            .join(
+                F.broadcast(a2),
+                F.col("o.t") == F.col("a2.s"),
+                "left",  # sink nodes have no out-list
             )
+            .select(
+                F.col("o.s").alias("s"),
+                F.col("o.t").alias("t"),
+                # empty-of-the-right-type via slice(ns, 1, 0): keeps the
+                # operator generic over node id type (bigint, string, ...)
+                F.array_intersect(
+                    F.col("a1.nbrs"),
+                    F.coalesce(F.col("a2.nbrs"), F.slice(F.col("a1.nbrs"), 1, 0)),
+                ).alias("__w"),
+            )
+            .filter(F.size("__w") > 0)
         )
-        if not small:
-            # scale path: fill the cache with an explicit pass before the
-            # three shuffle-join consumers plan concurrently
-            oriented.count()
-        # dense path: the adjacency broadcast is built FIRST (broadcast
-        # sides materialize before the probe side streams), so its
-        # aggregation fills oriented's cache and the probe + second
-        # broadcast read it back — an explicit pre-count here was a whole
-        # extra pass over the build pipeline (measured ~0.7s at sf0.1)
-        if small:
-            # dense/fast path: broadcast adjacency, intersect per edge.
-            # Each triangle (s, t, w) with oriented edges s->t, s->w, t->w
-            # is found exactly once, at its base edge (s, t), as
-            # w ∈ N+(s) ∩ N+(t).
-            adj = oriented.groupBy("s").agg(
-                F.sort_array(F.collect_list("t")).alias("nbrs")
-            )
-            # same alias-not-Project discipline as the degree joins above:
-            # the two adjacency lookups (by s and by t) broadcast the SAME
-            # subtree, so the collect_list aggregation + driver collect +
-            # broadcast build — the dense path's heaviest setup — runs
-            # ONCE and ReuseExchange serves the second join from it
-            a1, a2 = adj.alias("a1"), adj.alias("a2")
-            tri_edges = (
-                oriented.select("s", "t")
-                .alias("o")
-                .join(F.broadcast(a1), F.col("o.s") == F.col("a1.s"))
-                .join(
-                    F.broadcast(a2),
-                    F.col("o.t") == F.col("a2.s"),
-                    "left",  # sink nodes have no out-list
-                )
-                .select(
-                    F.col("o.s").alias("s"),
-                    F.col("o.t").alias("t"),
-                    # empty-of-the-right-type via slice(ns, 1, 0): keeps the
-                    # operator generic over node id type (bigint, string, ...)
-                    F.array_intersect(
-                        F.col("a1.nbrs"),
-                        F.coalesce(F.col("a2.nbrs"), F.slice(F.col("a1.nbrs"), 1, 0)),
-                    ).alias("__w"),
-                )
-                .filter(F.size("__w") > 0)
-            )
-            # ONE pass over the intersect stream (r13): the previous 3-way
-            # union referenced tri_edges three times, and with nothing but
-            # map-side broadcast joins below it there is no exchange for
-            # ReuseExchange to dedupe — the scan + double join + intersect
-            # subtree executed THREE times (measured: the probe+agg leg
-            # alone ran ~3x the single-pass cost). Each row now emits all
-            # of its incidences — (s, |w|), (t, |w|), and (x, 1) per
-            # closing vertex — through a single Generate (§2.4 do fewer
-            # passes). The transform() lambda is interpreted, but it runs
-            # once per TRIANGLE, not once per probe pass.
-            out = (
-                tri_edges.select(
-                    F.explode(
-                        F.concat(
-                            F.array(
-                                F.struct(
-                                    F.col("s").alias("node"),
-                                    F.size("__w").cast("long").alias("c"),
-                                ),
-                                F.struct(
-                                    F.col("t").alias("node"),
-                                    F.size("__w").cast("long").alias("c"),
-                                ),
+        # ONE pass over the intersect stream (r13): the previous 3-way
+        # union referenced tri_edges three times, and with nothing but
+        # map-side broadcast joins below it there is no exchange for
+        # ReuseExchange to dedupe — the scan + double join + intersect
+        # subtree executed THREE times (measured: the probe+agg leg
+        # alone ran ~3x the single-pass cost). Each row now emits all
+        # of its incidences — (s, |w|), (t, |w|), and (x, 1) per
+        # closing vertex — through a single Generate (§2.4 do fewer
+        # passes). The transform() lambda is interpreted, but it runs
+        # once per TRIANGLE, not once per probe pass.
+        return (
+            tri_edges.select(
+                F.explode(
+                    F.concat(
+                        F.array(
+                            F.struct(
+                                F.col("s").alias("node"),
+                                F.size("__w").cast("long").alias("c"),
                             ),
-                            F.transform(
-                                "__w",
-                                lambda x: F.struct(
-                                    x.alias("node"), F.lit(1).cast("long").alias("c")
-                                ),
+                            F.struct(
+                                F.col("t").alias("node"),
+                                F.size("__w").cast("long").alias("c"),
                             ),
-                        )
-                    ).alias("__e")
-                )
-                .select(F.col("__e.node").alias("node"), F.col("__e.c").alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").cast("long").alias("n_triangles"))
+                        ),
+                        F.transform(
+                            "__w",
+                            lambda x: F.struct(
+                                x.alias("node"), F.lit(1).cast("long").alias("c")
+                            ),
+                        ),
+                    )
+                ).alias("__e")
             )
-            return materialize(out)
-
-        # scale path: wedge join; spillable end to end
-        o1 = oriented.select(F.col("s"), F.col("t").alias("t1"), F.col("dt").alias("d1"))
-        o2 = oriented.select(F.col("s"), F.col("t").alias("t2"), F.col("dt").alias("d2"))
-        t1_first = (F.col("d1") < F.col("d2")) | (
-            (F.col("d1") == F.col("d2")) & (F.col("t1") < F.col("t2"))
-        )
-        wedges = (
-            o1.join(o2, "s")
-            .filter(t1_first)  # each unordered wedge once, rank-ordered
-            .select(F.col("s").alias("apex"), F.col("t1").alias("lo"), F.col("t2").alias("hi"))
-        )
-        closing = oriented.select(F.col("s").alias("lo"), F.col("t").alias("hi"))
-        tris = wedges.join(closing, ["lo", "hi"])
-        # one pass: each triangle row explodes into its three member nodes
-        # instead of the 3-way union re-reading the join output (r13,
-        # same rationale as the dense path's single-pass incidence emit)
-        out = (
-            tris.select(
-                F.explode(F.array(F.col("apex"), F.col("lo"), F.col("hi"))).alias(
-                    "node"
-                )
-            )
+            .select(F.col("__e.node").alias("node"), F.col("__e.c").alias("c"))
             .groupBy("node")
-            .agg(F.count("*").cast("long").alias("n_triangles"))
+            .agg(F.sum("c").cast("long").alias("n_triangles"))
         )
-        return materialize(out)
+
+    # scale path: wedge join; spillable end to end
+    o1 = oriented.select(F.col("s"), F.col("t").alias("t1"), F.col("dt").alias("d1"))
+    o2 = oriented.select(F.col("s"), F.col("t").alias("t2"), F.col("dt").alias("d2"))
+    t1_first = (F.col("d1") < F.col("d2")) | (
+        (F.col("d1") == F.col("d2")) & (F.col("t1") < F.col("t2"))
+    )
+    wedges = (
+        o1.join(o2, "s")
+        .filter(t1_first)  # each unordered wedge once, rank-ordered
+        .select(F.col("s").alias("apex"), F.col("t1").alias("lo"), F.col("t2").alias("hi"))
+    )
+    closing = oriented.select(F.col("s").alias("lo"), F.col("t").alias("hi"))
+    tris = wedges.join(closing, ["lo", "hi"])
+    # one pass: each triangle row explodes into its three member nodes
+    # instead of the 3-way union re-reading the join output (r13,
+    # same rationale as the dense path's single-pass incidence emit)
+    return (
+        tris.select(
+            F.explode(F.array(F.col("apex"), F.col("lo"), F.col("hi"))).alias(
+                "node"
+            )
+        )
+        .groupBy("node")
+        .agg(F.count("*").cast("long").alias("n_triangles"))
+    )

@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import engine
-from ..engine import cache_scope, fanout_repartition, normalize_text
+from ..engine import fanout_repartition, normalize_text
 
 #: hex digits of md5 used for the draw; 8 digits = 32-bit resolution
 _PREFIX_W = 8
@@ -473,93 +472,86 @@ def token_budget_select(
     text upstream; the guard here keeps the boundary algebra NULL-free).
     """
     q = F.round(quality, round_to)
-    # persisted: the scoring expressions (regex-heavy quality
-    # heuristics) feed THREE consumers — the per-quality histogram,
-    # the shard totals, and the final cumsum join — and would
-    # otherwise be recomputed per branch (measured 0.3s -> 3.0s at
-    # sf0.1 when the shard level landed without this). Released when
-    # the scope below exits, after the result materializes.
     # explicit-N repartition BEFORE the scoring projection so the
-    # regex-heavy quality expressions evaluate at core parallelism
-    # during the cache fill, not inside the one-task scan stage
-    # (guide §2.5; rationale in engine.fanout_repartition)
-    with cache_scope() as hold:
-        scored = hold(
-            fanout_repartition(df, id_col)
-            .select(
-                F.col(id_col),
-                q.alias("__q"),
-                n_tokens.cast("long").alias("__nt"),
-            )
-            .filter(F.col("__q").isNotNull() & F.col("__nt").isNotNull())
+    # regex-heavy quality expressions evaluate at core parallelism,
+    # not inside the one-task scan stage (guide §2.5; rationale in
+    # engine.fanout_repartition)
+    scored = (
+        fanout_repartition(df, id_col)
+        .select(
+            F.col(id_col),
+            q.alias("__q"),
+            n_tokens.cast("long").alias("__nt"),
         )
-        per_q = scored.groupBy("__q").agg(
-            F.sum("__nt").cast("long").alias("__tot"),
-            F.min(id_col).cast("long").alias("__mn"),
-            F.max(id_col).cast("long").alias("__mx"),
+        .filter(F.col("__q").isNotNull() & F.col("__nt").isNotNull())
+    )
+    per_q = scored.groupBy("__q").agg(
+        F.sum("__nt").cast("long").alias("__tot"),
+        F.min(id_col).cast("long").alias("__mn"),
+        F.max(id_col).cast("long").alias("__mx"),
+    )
+    wq = Window.orderBy(F.desc("__q")).rowsBetween(Window.unboundedPreceding, -1)
+    buckets = per_q.select(
+        F.col("__q").alias("__qb"),
+        F.coalesce(F.sum("__tot").over(wq), F.lit(0).cast("long")).alias(
+            "__before"
+        ),
+        "__mn",
+        "__mx",
+    ).filter(F.col("__before") <= budget)
+    # buckets: every quality level whose prefix does not already
+    # overshoot. <= not <: a bucket whose prefix EQUALS the budget
+    # can still admit zero-token docs (cum unchanged, still within
+    # budget — hypothesis found the < form dropping exactly those);
+    # the in-shard cumsum filter rejects everything else.
+    #
+    # Distributed-scan tree, level 2: ORDER-PRESERVING id-range shards
+    # inside each quality bucket so no tie group owns one window
+    # partition. The shard index floor((id - mn) / step) is monotone
+    # in id whatever the id distribution, and step = (mx-mn)/S + 1 is
+    # integer arithmetic with no overflow; shard totals cumulate over
+    # a |q| x S table, and the per-row window runs per (q, shard).
+    n_shards = 64
+    joined = scored.join(F.broadcast(buckets), F.col("__q") == F.col("__qb"))
+    step = (F.col("__mx") - F.col("__mn")) / F.lit(n_shards) + F.lit(1)
+    sharded = joined.withColumn(
+        "__shard",
+        ((F.col(id_col).cast("long") - F.col("__mn")) / step.cast("long"))
+        .cast("long"),
+    )
+    shard_tot = sharded.groupBy("__q", "__shard").agg(
+        F.sum("__nt").cast("long").alias("__stot")
+    )
+    ws = Window.partitionBy("__q").orderBy(F.asc("__shard")).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    shard_prefix = shard_tot.select(
+        F.col("__q").alias("__qs"),
+        F.col("__shard").alias("__shards"),
+        F.coalesce(F.sum("__stot").over(ws), F.lit(0).cast("long")).alias(
+            "__sbefore"
+        ),
+    )
+    win = Window.partitionBy("__q", "__shard").orderBy(F.asc(id_col))
+    cum = (
+        F.col("__before") + F.col("__sbefore") + F.sum("__nt").over(win)
+    ).cast("long")
+    result = (
+        sharded.join(
+            F.broadcast(shard_prefix),
+            (F.col("__q") == F.col("__qs"))
+            & (F.col("__shard") == F.col("__shards")),
         )
-        wq = Window.orderBy(F.desc("__q")).rowsBetween(Window.unboundedPreceding, -1)
-        buckets = per_q.select(
-            F.col("__q").alias("__qb"),
-            F.coalesce(F.sum("__tot").over(wq), F.lit(0).cast("long")).alias(
-                "__before"
-            ),
-            "__mn",
-            "__mx",
-        ).filter(F.col("__before") <= budget)
-        # buckets: every quality level whose prefix does not already
-        # overshoot. <= not <: a bucket whose prefix EQUALS the budget
-        # can still admit zero-token docs (cum unchanged, still within
-        # budget — hypothesis found the < form dropping exactly those);
-        # the in-shard cumsum filter rejects everything else.
-        #
-        # Distributed-scan tree, level 2: ORDER-PRESERVING id-range shards
-        # inside each quality bucket so no tie group owns one window
-        # partition. The shard index floor((id - mn) / step) is monotone
-        # in id whatever the id distribution, and step = (mx-mn)/S + 1 is
-        # integer arithmetic with no overflow; shard totals cumulate over
-        # a |q| x S table, and the per-row window runs per (q, shard).
-        n_shards = 64
-        joined = scored.join(F.broadcast(buckets), F.col("__q") == F.col("__qb"))
-        step = (F.col("__mx") - F.col("__mn")) / F.lit(n_shards) + F.lit(1)
-        sharded = joined.withColumn(
-            "__shard",
-            ((F.col(id_col).cast("long") - F.col("__mn")) / step.cast("long"))
-            .cast("long"),
+        .withColumn("__cum", cum)
+        .filter(F.col("__cum") <= budget)
+        .select(
+            id_col,
+            (F.col("__q") + F.lit(0.0)).alias("quality"),
+            F.col("__nt").alias("n_tokens"),
+            F.col("__cum").alias("cum_tokens"),
         )
-        shard_tot = sharded.groupBy("__q", "__shard").agg(
-            F.sum("__nt").cast("long").alias("__stot")
-        )
-        ws = Window.partitionBy("__q").orderBy(F.asc("__shard")).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        shard_prefix = shard_tot.select(
-            F.col("__q").alias("__qs"),
-            F.col("__shard").alias("__shards"),
-            F.coalesce(F.sum("__stot").over(ws), F.lit(0).cast("long")).alias(
-                "__sbefore"
-            ),
-        )
-        win = Window.partitionBy("__q", "__shard").orderBy(F.asc(id_col))
-        cum = (
-            F.col("__before") + F.col("__sbefore") + F.sum("__nt").over(win)
-        ).cast("long")
-        result = (
-            sharded.join(
-                F.broadcast(shard_prefix),
-                (F.col("__q") == F.col("__qs"))
-                & (F.col("__shard") == F.col("__shards")),
-            )
-            .withColumn("__cum", cum)
-            .filter(F.col("__cum") <= budget)
-            .select(
-                id_col,
-                (F.col("__q") + F.lit(0.0)).alias("quality"),
-                F.col("__nt").alias("n_tokens"),
-                F.col("__cum").alias("cum_tokens"),
-            )
-        )
-        return engine.materialize(result)
+    )
+    return result
 
 
 def epoch_schedule(

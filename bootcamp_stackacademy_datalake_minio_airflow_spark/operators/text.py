@@ -723,6 +723,12 @@ def winnow_overlap_pairs(
             .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared)
         )
+        # kept as a checkpoint (tests/test_engine.py allow-list): fp ends
+        # in aggregates the _norm_base partitioning already satisfies, so
+        # a lazy plan has no exchange to reuse and runs the position
+        # explode + md5 once per consumer (the df count, the probe, the
+        # broadcast side) — cold median 1.40x at sf0.01, 2.27x on the
+        # prose lake, 4 cores
         return materialize(result)
 
 

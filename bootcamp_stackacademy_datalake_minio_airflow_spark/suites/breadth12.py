@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..engine import NORM_SQL
 from ..queries import register
 
 # --- planted-hot-key join (AQE skew-split demo) -----------------------------
@@ -104,11 +105,10 @@ def q_lineitem_hot_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- n-gram novelty scoring (incremental-curation signal) -------------------
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 _NOVELTY_ORACLE = rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks
       FROM documents WHERE text IS NOT NULL
     ), grams AS (
       SELECT doc_id,
@@ -154,7 +154,7 @@ _DSIR_ORACLE = rf"""
       SELECT doc_id, CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS t, w
       FROM (
         SELECT doc_id, source,
-               unnest(string_split({_NORM_SQL}, ' ')) AS w
+               unnest(string_split({NORM_SQL}, ' ')) AS w
         FROM documents WHERE text IS NOT NULL
       ) WHERE w <> ''
     ), cnt AS (

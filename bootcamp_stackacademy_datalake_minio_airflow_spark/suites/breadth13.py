@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..engine import fanout_repartition, normalize_text
+from ..engine import NORM_SQL, fanout_repartition, normalize_text
 
 from ..catalog import load_table
 from ..operators.contamination import semantic_contamination
@@ -40,17 +40,14 @@ from ..operators.text import (
     tokens,
 )
 from ..queries import register
-
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
+from .breadth4 import _T80, _T90
 
 # --- leakage-safe group split ------------------------------------------------
 
-_T80 = _hex_threshold(0.8)
-_T90 = _hex_threshold(0.9)
 
 _GROUP_SPLIT_ORACLE = rf"""
     WITH g AS (
-      SELECT doc_id, source, md5({_NORM_SQL}) AS fp
+      SELECT doc_id, source, md5({NORM_SQL}) AS fp
       FROM documents
     ), s AS (
       SELECT source, fp,
@@ -95,7 +92,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FUNNEL_ORACLE = rf"""
     WITH base AS (
-      SELECT doc_id, text, string_split({_NORM_SQL}, ' ') AS ts
+      SELECT doc_id, text, string_split({NORM_SQL}, ' ') AS ts
       FROM documents
     ), sig AS (
       SELECT doc_id, text,
@@ -180,7 +177,7 @@ def q_filter_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BOILER_ORACLE = rf"""
     WITH base AS (
-      SELECT doc_id, source, string_split({_NORM_SQL}, ' ') AS toks
+      SELECT doc_id, source, string_split({NORM_SQL}, ' ') AS toks
       FROM documents WHERE text IS NOT NULL
     ), grams AS (
       SELECT doc_id, source,
@@ -265,7 +262,7 @@ def q_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BUDGET_ORACLE = rf"""
     WITH base AS (
-      SELECT doc_id, text, string_split({_NORM_SQL}, ' ') AS ts
+      SELECT doc_id, text, string_split({NORM_SQL}, ' ') AS ts
       FROM documents WHERE text IS NOT NULL
     ), sig AS (
       SELECT doc_id, text,
@@ -320,7 +317,7 @@ _RRF_ORACLE = rf"""
     WITH base AS (
       -- doc_id IS NOT NULL mirrors bm25_topk's base (r8): a NULL-id
       -- doc must neither occupy a top-k slot nor inflate N/avgdl
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks
       FROM documents WHERE doc_id IS NOT NULL AND length(trim(text)) > 0
     ), dls AS (
       SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM base
@@ -751,7 +748,7 @@ _LEAK_AUDIT_ORACLE = rf"""
     WITH g AS (
       SELECT doc_id,
              md5(array_to_string(
-               string_split({_NORM_SQL}, ' ')[1:8], ' ')) AS fp
+               string_split({NORM_SQL}, ' ')[1:8], ' ')) AS fp
       FROM documents WHERE text IS NOT NULL
     ), labeled AS (
       SELECT fp,
@@ -898,7 +895,7 @@ def q_corpus_mixture_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUP_HIST_ORACLE = rf"""
     WITH g AS (
       SELECT md5(array_to_string(
-               string_split({_NORM_SQL}, ' ')[1:8], ' ')) AS fp
+               string_split({NORM_SQL}, ' ')[1:8], ' ')) AS fp
       FROM documents WHERE text IS NOT NULL
     ), clusters AS (
       SELECT fp, CAST(COUNT(*) AS BIGINT) AS sz FROM g GROUP BY fp

@@ -20,14 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..engine import NORM_SQL
 from ..operators.text import unigram_cross_entropy
 from ..queries import register
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 _UNIGRAM_CE_ORACLE = rf"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
+      SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS w
       FROM documents
       WHERE text IS NOT NULL AND length(trim(text)) > 0
     ), dw AS (
@@ -56,7 +56,7 @@ def q_unigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BIGRAM_CE_ORACLE = rf"""
     WITH norm AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS w
       FROM documents
       WHERE text IS NOT NULL AND length(trim(text)) > 0
     ), big AS (
@@ -96,7 +96,7 @@ def q_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COPY_MATRIX_ORACLE = rf"""
     WITH fp AS (
-      SELECT DISTINCT md5({_NORM_SQL}) AS f, source
+      SELECT DISTINCT md5({NORM_SQL}) AS f, source
       FROM documents
       WHERE text IS NOT NULL AND source IS NOT NULL
     )
@@ -125,7 +125,7 @@ _NDCG_ORACLE = rf"""
     WITH base AS (
       -- doc_id IS NOT NULL mirrors ndcg_at_k/bm25_topk (r8): a
       -- NULL-id doc can neither be ranked nor hold an ideal slot
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks
       FROM documents
       WHERE doc_id IS NOT NULL
         AND text IS NOT NULL AND length(trim(text)) > 0
@@ -321,7 +321,7 @@ _DUP_SPAN_L = 40
 
 _DUP_SPAN_ORACLE = rf"""
     WITH norm AS (
-      SELECT doc_id, {_NORM_SQL} AS t
+      SELECT doc_id, {NORM_SQL} AS t
       FROM documents WHERE text IS NOT NULL
     ), base AS (
       SELECT doc_id, t, length(t) AS dlen FROM norm
@@ -386,7 +386,7 @@ _QUOTE_ID_OFFSET = 10_000_000
 
 _WINNOW_QUOTE_ORACLE = rf"""
     WITH norm AS (
-      SELECT doc_id, {_NORM_SQL} AS t
+      SELECT doc_id, {NORM_SQL} AS t
       FROM documents WHERE text IS NOT NULL
     ), donors AS (
       SELECT doc_id, t, md5(CAST(doc_id AS VARCHAR)) AS uq FROM norm
@@ -494,12 +494,12 @@ _EPOCH_ORACLE = rf"""
     WITH counts AS (
       SELECT source,
              CAST(SUM(CASE WHEN length(trim(text)) = 0 THEN 0
-                           ELSE len(string_split({_NORM_SQL}, ' ')) END)
+                           ELSE len(string_split({NORM_SQL}, ' ')) END)
                   AS BIGINT) AS n_tokens
       FROM documents WHERE text IS NOT NULL
       GROUP BY source
       HAVING SUM(CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split({_NORM_SQL}, ' ')) END) > 0
+                      ELSE len(string_split({NORM_SQL}, ' ')) END) > 0
     ), scaled AS (
       SELECT source, n_tokens,
              pow(CAST(n_tokens AS DOUBLE), 0.5) AS w,
@@ -580,8 +580,8 @@ _DATACARD_ORACLE = rf"""
       SELECT text, lang, source,
              CASE WHEN text IS NULL THEN NULL
                   WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(string_split({_NORM_SQL}, ' ')) END AS tok,
-             CASE WHEN text IS NOT NULL THEN md5({_NORM_SQL}) END AS fp
+                  ELSE len(string_split({NORM_SQL}, ' ')) END AS tok,
+             CASE WHEN text IS NOT NULL THEN md5({NORM_SQL}) END AS fp
       FROM documents
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -707,14 +707,14 @@ def _datacard_sketch_oracle() -> str:
     tok = (
         "CASE WHEN text IS NULL THEN NULL "
         "WHEN length(trim(text)) = 0 THEN 0 "
-        f"ELSE len(string_split({_NORM_SQL}, ' ')) END"
+        f"ELSE len(string_split({NORM_SQL}, ' ')) END"
     )
     return f"""
     WITH allb AS (
       SELECT unnest(range(256)) AS bucket
     ), {_card_hll_cte("l", "CAST(lang AS VARCHAR)", "")},
     {_card_hll_cte("s", "CAST(source AS VARCHAR)", "")},
-    {_card_hll_cte("f", f"md5({_NORM_SQL})", "WHERE text IS NOT NULL")},
+    {_card_hll_cte("f", f"md5({NORM_SQL})", "WHERE text IS NOT NULL")},
     core AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(COALESCE(SUM({tok}), 0) AS BIGINT) AS n_tokens,

@@ -24,13 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import fanout_repartition
+from ..engine import NORM_SQL, fanout_repartition
 
 from ..catalog import load_table
 from ..queries import register
 from .extensions import _hex_fold
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 # --- seeded Lloyd k-means over embeddings ------------------------------------
 
@@ -118,7 +117,7 @@ def _logreg_oracle(
     parts = [
         f"""
     WITH base AS (
-      SELECT string_split({_NORM_SQL}, ' ') AS ts, lang, text
+      SELECT string_split({NORM_SQL}, ' ') AS ts, lang, text
       FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
     ), feat AS (
       SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
@@ -289,7 +288,7 @@ def q_bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LM_EXAMPLES_ORACLE = rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ts
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS ts
       FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
     ), ex AS (
       SELECT doc_id, ts[i - 2] || ' ' || ts[i - 1] AS context,
@@ -365,7 +364,7 @@ def q_crossval_fold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NB_ORACLE = rf"""
     WITH base AS (
-      SELECT doc_id, lang, string_split({_NORM_SQL}, ' ') AS ts
+      SELECT doc_id, lang, string_split({NORM_SQL}, ' ') AS ts
       FROM documents
       WHERE text IS NOT NULL AND length(trim(text)) > 0 AND lang IS NOT NULL
     ), dw AS (
@@ -699,7 +698,7 @@ def _fh_oracle(n_buckets: int = 64) -> str:
     bucket = _hex_fold("md5('fh:' || w)")
     return rf"""
     WITH toks AS (
-      SELECT unnest(string_split({_NORM_SQL}, ' ')) AS w
+      SELECT unnest(string_split({NORM_SQL}, ' ')) AS w
       FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
     ), h AS (
       SELECT CAST({bucket} % {n_buckets} AS INT) AS bucket,

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..engine import fanout_repartition, normalize_text
+from ..engine import NORM_SQL, fanout_repartition, normalize_text
 
 from ..catalog import load_table
 from ..operators.contamination import ngram_contamination
@@ -27,7 +27,6 @@ from ..operators.privacy import pii_count, redact
 from ..operators.text import repetition_signals
 from ..queries import register
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 
 @register(
@@ -102,7 +101,7 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_signals",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
     ), scalars AS (
       SELECT doc_id,
              round(len(list_distinct(toks)) * 1.0 / len(toks), 4) AS distinct_token_ratio,
@@ -135,7 +134,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contamination_ngram",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
     ), grams AS (
       SELECT doc_id,
              unnest(list_distinct(list_transform(
@@ -167,7 +166,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_term_lift",
     rf"""
     WITH tok AS (
-      SELECT source, unnest(string_split({_NORM_SQL}, ' ')) AS term FROM documents
+      SELECT source, unnest(string_split({NORM_SQL}, ' ')) AS term FROM documents
     ), st AS (
       SELECT source, term, count(*) AS cnt FROM tok GROUP BY 1, 2
     ), stot AS (

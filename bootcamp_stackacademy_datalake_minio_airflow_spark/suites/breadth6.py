@@ -19,14 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import fanout_repartition, normalize_text
+from ..engine import NORM_SQL, fanout_repartition, normalize_text
 
 from ..catalog import load_table
 from ..operators.packing import pack_sequences
 from ..operators.similarity import semantic_clusters
 from ..queries import register
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 
 @register(
@@ -101,7 +100,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bigram_pmi",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
     ), uni AS (
       SELECT unnest(toks) AS w FROM base
     ), ucnt AS (

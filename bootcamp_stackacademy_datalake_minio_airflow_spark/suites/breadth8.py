@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for suite parity)
 
 from ..catalog import load_table
-from ..engine import cache_scope, materialize
+from ..engine import NORM_SQL
 from ..operators.retrieval import (
     bigram_nll_score,
     bm25_topk,
@@ -38,7 +38,6 @@ from ..operators.retrieval import (
 )
 from ..queries import register
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 _BM25_TERMS = ["spark", "hash", "window", "merge"]
 _PHRASE = ["value", "table", "part"]
@@ -50,7 +49,7 @@ _PHRASE = ["value", "table", "part"]
     WITH base AS (
       -- doc_id IS NOT NULL mirrors bm25_topk's base (r8): a NULL-id
       -- doc must neither occupy a top-k slot nor inflate N/avgdl
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks
       FROM documents WHERE doc_id IS NOT NULL AND length(trim(text)) > 0
     ), dls AS (
       SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM base
@@ -94,7 +93,7 @@ def q_bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lm_bigram_nll",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
     ), bg AS (
       SELECT doc_id,
              unnest(list_transform(range(1, greatest(len(toks) - 1, 1) + 1),
@@ -135,7 +134,7 @@ def q_lm_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_chunks",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks
       FROM documents WHERE length(trim(text)) > 0
     )
     SELECT doc_id,
@@ -159,7 +158,7 @@ def q_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "phrase_search",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
     ), hits AS (
       SELECT doc_id,
              list_filter(list_transform(range(1, len(toks) + 1),
@@ -508,7 +507,7 @@ def q_events_salted_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     "curation_chunks_v2",
     rf"""
     WITH base AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
+      SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
     ), bg AS (
       SELECT doc_id,
              unnest(list_transform(range(1, greatest(len(toks) - 1, 1) + 1),
@@ -578,27 +577,24 @@ def q_curation_chunks_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import length_outliers
 
     docs = load_table(spark, sf_dir, "documents")
-    # scores feeds BOTH the cutoff aggregate and the keep filter —
-    # cache it so the three corpus-wide LM aggregations run once
-    # (review finding); released after the result materializes
-    with cache_scope() as hold:
-        scores = hold(bigram_nll_score(docs))
-        cutoff = scores.agg(
-            F.round(F.percentile("avg_nll", F.lit(0.75)), 4).alias("__cut")
-        )
-        keep_ids = (
-            scores.crossJoin(F.broadcast(cutoff))
-            .filter(F.col("avg_nll") <= F.col("__cut"))
-            .select("doc_id")
-        )
-        outlier_ids = length_outliers(docs, z_cutoff=2.0).select("doc_id")
-        kept = (
-            docs.join(keep_ids, "doc_id", "left_semi")
-            .join(outlier_ids, "doc_id", "left_anti")
-            .select("doc_id", "text")
-        )
-        deduped = dedup_exact(kept, ["text"], "doc_id")
-        return materialize(chunk_tokens(deduped, window=32, stride=24))
+    # scores feeds BOTH the cutoff aggregate and the keep filter
+    scores = bigram_nll_score(docs)
+    cutoff = scores.agg(
+        F.round(F.percentile("avg_nll", F.lit(0.75)), 4).alias("__cut")
+    )
+    keep_ids = (
+        scores.crossJoin(F.broadcast(cutoff))
+        .filter(F.col("avg_nll") <= F.col("__cut"))
+        .select("doc_id")
+    )
+    outlier_ids = length_outliers(docs, z_cutoff=2.0).select("doc_id")
+    kept = (
+        docs.join(keep_ids, "doc_id", "left_semi")
+        .join(outlier_ids, "doc_id", "left_anti")
+        .select("doc_id", "text")
+    )
+    deduped = dedup_exact(kept, ["text"], "doc_id")
+    return chunk_tokens(deduped, window=32, stride=24)
 
 
 @register(
@@ -714,69 +710,65 @@ def _basket_rules(
     tests can assert both paths agree on a long-tail lake."""
     li = load_table(spark, sf_dir, "lineitem")
     # NOTE r13: an explicit-N exchange between this aggregate and its
-    # cached consumers was tried and REVERTED — measured no-op: the
-    # persisted aggregate's own shuffle already materializes at the
-    # full spark.sql.shuffle.partitions count on this path (verified
-    # 32/32 partitions in the cache with and without), so the pair
-    # fan-out below never ran coalesced. See OPTIMIZATION_r13.md.
-    with cache_scope() as hold:
-        grouped = hold(
-            li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("__items"))
+    # consumers was tried and REVERTED — measured no-op: the
+    # aggregate's own shuffle already runs at the full
+    # spark.sql.shuffle.partitions count on this path (verified 32/32
+    # partitions with and without), so the pair fan-out below never
+    # ran coalesced. See OPTIMIZATION_r13.md.
+    grouped = li.groupBy("l_orderkey").agg(
+        F.collect_set("l_partkey").alias("__items")
+    )
+    n_orders = grouped.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    # one row per part; read by the prune check + 2 joins
+    item_supp = (
+        grouped.select(F.explode("__items").alias("l_partkey"))
+        .groupBy("l_partkey")
+        .agg(F.count("*").cast("double").alias("c"))
+    )
+    if prune is None:
+        # a-priori prune decision: one bounded scalar off the support table
+        prune = bool(item_supp.filter(F.col("c") < min_support).count())
+    exploded = grouped.select(F.explode("__items").alias("ante"), "__items")
+    if prune:
+        freq = item_supp.filter(F.col("c") >= min_support)
+        exploded = exploded.join(
+            F.broadcast(freq.select(F.col("l_partkey").alias("ante"))),
+            "ante",
+            "leftsemi",
         )
-        n_orders = grouped.agg(F.count(F.lit(1)).cast("double").alias("n"))
-        # one row per part; read by the prune check + 2 joins
-        item_supp = hold(
-            grouped.select(F.explode("__items").alias("l_partkey"))
-            .groupBy("l_partkey")
-            .agg(F.count("*").cast("double").alias("c"))
+    pairs = exploded.select(
+        "ante", F.explode("__items").alias("cons")
+    ).filter(F.col("ante") != F.col("cons"))
+    if prune:
+        pairs = pairs.join(
+            F.broadcast(freq.select(F.col("l_partkey").alias("cons"))),
+            "cons",
+            "leftsemi",
         )
-        if prune is None:
-            # a-priori prune decision: one bounded scalar off the persisted
-            # support table (this action also fills grouped's cache for the
-            # pair explode below, so it adds no extra corpus pass)
-            prune = bool(item_supp.filter(F.col("c") < min_support).count())
-        exploded = grouped.select(F.explode("__items").alias("ante"), "__items")
-        if prune:
-            freq = item_supp.filter(F.col("c") >= min_support)
-            exploded = exploded.join(
-                F.broadcast(freq.select(F.col("l_partkey").alias("ante"))),
-                "ante",
-                "leftsemi",
-            )
-        pairs = exploded.select(
-            "ante", F.explode("__items").alias("cons")
-        ).filter(F.col("ante") != F.col("cons"))
-        if prune:
-            pairs = pairs.join(
-                F.broadcast(freq.select(F.col("l_partkey").alias("cons"))),
-                "cons",
-                "leftsemi",
-            )
-        pair_supp = (
-            pairs.groupBy("ante", "cons")
-            .agg(F.count("*").cast("double").alias("c"))
-            .filter(F.col("c") >= min_support)
+    pair_supp = (
+        pairs.groupBy("ante", "cons")
+        .agg(F.count("*").cast("double").alias("c"))
+        .filter(F.col("c") >= min_support)
+    )
+    ia = item_supp.select(F.col("l_partkey").alias("ante"), F.col("c").alias("ca"))
+    ic = item_supp.select(F.col("l_partkey").alias("cons"), F.col("c").alias("cc"))
+    return (
+        pair_supp.join(F.broadcast(ia), "ante")
+        .join(F.broadcast(ic), "cons")
+        .crossJoin(F.broadcast(n_orders))
+        .select(
+            "ante",
+            "cons",
+            F.col("c").cast("long").alias("n_both"),
+            F.round(F.col("c") / F.col("ca"), 4).alias("confidence"),
+            # products first, one division — see oracle comment
+            F.round(
+                F.col("c") * F.col("n") / (F.col("ca") * F.col("cc")), 4
+            ).alias("lift"),
         )
-        ia = item_supp.select(F.col("l_partkey").alias("ante"), F.col("c").alias("ca"))
-        ic = item_supp.select(F.col("l_partkey").alias("cons"), F.col("c").alias("cc"))
-        out = (
-            pair_supp.join(F.broadcast(ia), "ante")
-            .join(F.broadcast(ic), "cons")
-            .crossJoin(F.broadcast(n_orders))
-            .select(
-                "ante",
-                "cons",
-                F.col("c").cast("long").alias("n_both"),
-                F.round(F.col("c") / F.col("ca"), 4).alias("confidence"),
-                # products first, one division — see oracle comment
-                F.round(
-                    F.col("c") * F.col("n") / (F.col("ca") * F.col("cc")), 4
-                ).alias("lift"),
-            )
-            .orderBy(F.col("lift").desc(), "ante", "cons")
-            .limit(50)
-        )
-        return materialize(out)
+        .orderBy(F.col("lift").desc(), "ante", "cons")
+        .limit(50)
+    )
 
 
 @register(

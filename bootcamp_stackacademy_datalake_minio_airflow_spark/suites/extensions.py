@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import cache_scope, fanout_repartition, materialize, normalize_text
+from ..engine import fanout_repartition, normalize_text
 
 from ..catalog import load_table
 from ..operators.dedup import (
@@ -754,22 +754,20 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells are linear in multiplicity, so the weighted build is
     # cell-identical to hashing the raw stream at |vocab|/|stream| of
     # the md5 work (cms_build_weighted docstring)
-    with cache_scope() as hold:
-        counts = hold(
-            docs.select(F.explode(F.split(normalize_text("text"), " ")).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("true_count"))
-        )
-        top = counts.orderBy(F.desc("true_count"), F.asc("token")).limit(30)
-        cells = cms_build_weighted(counts, "token", "true_count", depth=4, width=256)
-        est = cms_estimate(cells, top, "token", depth=4, width=256)
-        out = top.join(est, "token").select(
-            "token",
-            "true_count",
-            "cms_est",
-            (F.col("cms_est") - F.col("true_count")).alias("overcount"),
-        )
-        return materialize(out)
+    counts = (
+        docs.select(F.explode(F.split(normalize_text("text"), " ")).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("true_count"))
+    )
+    top = counts.orderBy(F.desc("true_count"), F.asc("token")).limit(30)
+    cells = cms_build_weighted(counts, "token", "true_count", depth=4, width=256)
+    est = cms_estimate(cells, top, "token", depth=4, width=256)
+    return top.join(est, "token").select(
+        "token",
+        "true_count",
+        "cms_est",
+        (F.col("cms_est") - F.col("true_count")).alias("overcount"),
+    )
 
 
 # --- distributed BPE vocabulary training (unrolled-CTE oracle) ---------------
@@ -917,77 +915,69 @@ def q_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", "source", F.split(normalize_text("text"), " ").alias("__w")
     ).transform(lambda d: fanout_repartition(d, "doc_id")).select("source", "__w")
-    with cache_scope() as hold:
-        grams = hold(
-            words.select(
-                "source",
-                "__w",
-                F.explode(
-                    F.sequence(
-                        F.lit(1), F.greatest(F.size("__w") - F.lit(n - 1), F.lit(1))
-                    )
-                ).alias("__i"),
-            )
-            .select(
-                "source",
-                F.array_join(F.slice(F.col("__w"), F.col("__i"), n), " ").alias("g"),
-            )
-            .distinct()
-        )
-        # grams is .distinct() output — the sketch can skip its own dedup
-        # exchange (assume_distinct), saving a second corpus-wide shuffle.
-        # The sketch table is consumed THREE times downstream (the pair
-        # enumerator's name fold + both broadcast equi-join sides) — left
-        # lazy, each consumer re-runs the corpus-wide bottom-k aggregation
-        # (measured +1.6s at sf0.1 when the r9 hash-join rewrite landed
-        # without this persist); it is one k-array row per source, so
-        # persisting is free and released with grams below
-        sk = hold(kmv_sketches(grams, "source", "g", k=32, assume_distinct=True))
-        est = kmv_pair_jaccard(sk, "source", k=32)
-        sizes = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-        # exact-intersection witness WITHOUT the gram self-join: group each
-        # gram's (tiny, bounded-by-#sources) source set once and explode
-        # its ordered pairs — one exchange of the gram table instead of a
-        # two-sided shuffle join carrying it twice
-        bysrc = grams.groupBy("g").agg(F.sort_array(F.collect_set("source")).alias("__ss"))
-        pair_of = F.filter(
-            F.flatten(
-                F.transform(
-                    F.col("__ss"),
-                    lambda a: F.transform(
-                        F.col("__ss"), lambda b: F.struct(a.alias("sa"), b.alias("sb"))
-                    ),
+    grams = (
+        words.select(
+            "source",
+            "__w",
+            F.explode(
+                F.sequence(
+                    F.lit(1), F.greatest(F.size("__w") - F.lit(n - 1), F.lit(1))
                 )
-            ),
-            lambda p: p.sa < p.sb,
+            ).alias("__i"),
         )
-        inter = (
-            bysrc.filter(F.size("__ss") >= 2)
-            .select(F.explode(pair_of).alias("p"))
-            .select(F.col("p.sa").alias("sa"), F.col("p.sb").alias("sb"))
-            .groupBy("sa", "sb")
-            .agg(F.count(F.lit(1)).alias("i"))
+        .select(
+            "source",
+            F.array_join(F.slice(F.col("__w"), F.col("__i"), n), " ").alias("g"),
         )
-        out = (
-            est.join(
-                inter,
-                (est.source_a == inter.sa) & (est.source_b == inter.sb),
-                "left",
+        .distinct()
+    )
+    # grams is .distinct() output — the sketch can skip its own dedup
+    # exchange (assume_distinct), saving a second corpus-wide shuffle.
+    sk = kmv_sketches(grams, "source", "g", k=32, assume_distinct=True)
+    est = kmv_pair_jaccard(sk, "source", k=32)
+    sizes = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    # exact-intersection witness WITHOUT the gram self-join: group each
+    # gram's (tiny, bounded-by-#sources) source set once and explode
+    # its ordered pairs — one exchange of the gram table instead of a
+    # two-sided shuffle join carrying it twice
+    bysrc = grams.groupBy("g").agg(F.sort_array(F.collect_set("source")).alias("__ss"))
+    pair_of = F.filter(
+        F.flatten(
+            F.transform(
+                F.col("__ss"),
+                lambda a: F.transform(
+                    F.col("__ss"), lambda b: F.struct(a.alias("sa"), b.alias("sb"))
+                ),
             )
-            .join(sizes.select(F.col("source").alias("source_a"), F.col("n").alias("na")), "source_a")
-            .join(sizes.select(F.col("source").alias("source_b"), F.col("n").alias("nb")), "source_b")
-            .select(
-                "source_a",
-                "source_b",
-                "kmv_jaccard",
-                F.round(
-                    F.coalesce(F.col("i"), F.lit(0))
-                    / (F.col("na") + F.col("nb") - F.coalesce(F.col("i"), F.lit(0))),
-                    4,
-                ).alias("exact_jaccard"),
-            )
+        ),
+        lambda p: p.sa < p.sb,
+    )
+    inter = (
+        bysrc.filter(F.size("__ss") >= 2)
+        .select(F.explode(pair_of).alias("p"))
+        .select(F.col("p.sa").alias("sa"), F.col("p.sb").alias("sb"))
+        .groupBy("sa", "sb")
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+    return (
+        est.join(
+            inter,
+            (est.source_a == inter.sa) & (est.source_b == inter.sb),
+            "left",
         )
-        return materialize(out)
+        .join(sizes.select(F.col("source").alias("source_a"), F.col("n").alias("na")), "source_a")
+        .join(sizes.select(F.col("source").alias("source_b"), F.col("n").alias("nb")), "source_b")
+        .select(
+            "source_a",
+            "source_b",
+            "kmv_jaccard",
+            F.round(
+                F.coalesce(F.col("i"), F.lit(0))
+                / (F.col("na") + F.col("nb") - F.coalesce(F.col("i"), F.lit(0))),
+                4,
+            ).alias("exact_jaccard"),
+        )
+    )
 
 
 # --- from-scratch HyperLogLog (md5 registers -> fully replayable) ------------

@@ -1,12 +1,15 @@
 """Pins for ``engine``: the one module that owns the cache policy
-(persist -> materialize -> release) and the plan helpers the operators
-share.
+(persist -> release; checkpoints only at allow-listed sites) and the
+plan helpers the operators share.
 
-The structure guards fail when a hand-written cache call or a helper
-import from ``operators/dedup.py`` creeps back in: each such site is a
-second copy of the policy, and the copies are where releases went
-missing (a raise between ``persist()`` and ``unpersist()`` leaked the
-cache; see tests/test_breadth15.py::test_gd_persist_released_on_error).
+The structure guards fail when a hand-written cache call, a new
+``engine.materialize`` call or a helper import from
+``operators/dedup.py`` creeps back in: each such site is a second copy
+of the policy, and the copies are where releases went missing (a raise
+between ``persist()`` and ``unpersist()`` leaked the cache; see
+tests/test_breadth15.py::test_gd_persist_released_on_error). The leak
+test checks the same at runtime: a returned frame must not hold a
+persisted RDD that ``clearCache()`` cannot free.
 """
 
 from __future__ import annotations
@@ -41,6 +44,36 @@ ALLOWED_CACHE_CALLS = {
     "operators/similarity.py": 2,
 }
 
+#: The only ``engine.materialize`` calls, as exact per-file counts. An
+#: operator returns its lazy plan (or a literal frame of what it
+#: collected); a checkpoint truncates lineage that would otherwise grow
+#: or be rebuilt:
+#: - operators/dedup.py (2): connected_components' initial labels and
+#:   each label round of the distributed path;
+#: - operators/graph.py: each k_core peeling round;
+#: - suites/graph_shared.py: the edge set shared across the graph
+#:   queries, which must survive clearCache().
+#: Five operator results stay checkpoints because their lazy plan
+#: recomputes a shared intermediate that no exchange covers, so
+#: ReusedExchange cannot share it (cold medians, lazy vs checkpoint,
+#: interleaved in one session at sf0.01 on 4 cores, 5 pairs each):
+#: - operators/dedup.py (+4): minhash_lsh_pairs 2.51 vs 1.73 s and
+#:   simhash_pairs 2.35 vs 1.81 s (the band/block self-join is a
+#:   broadcast join, and its build and probe sides each build the
+#:   signature table); ngram_jaccard_pairs 1.98 vs 1.77 s and
+#:   ngram_containment_pairs 1.60 vs 1.04 s (the interpreted gram-set
+#:   HOF runs once per consumer);
+#: - operators/text.py: winnow_overlap_pairs 2.75 vs 1.96 s, 14.2 vs
+#:   6.3 s on the prose lake (the fingerprint table ends in aggregates
+#:   the _norm_base partitioning satisfies, so three consumers each run
+#:   the position explode + md5).
+ALLOWED_MATERIALIZE_CALLS = {
+    "operators/dedup.py": 6,
+    "operators/graph.py": 1,
+    "operators/text.py": 1,
+    "suites/graph_shared.py": 1,
+}
+
 MOVED = {"fanout_repartition", "normalize_text", "_norm_base", "_materialize_release"}
 
 
@@ -55,6 +88,19 @@ def _cache_calls(path: pathlib.Path) -> int:
     )
 
 
+def _materialize_calls(path: pathlib.Path) -> int:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    return sum(
+        1
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and (
+            (isinstance(node.func, ast.Name) and node.func.id == "materialize")
+            or (isinstance(node.func, ast.Attribute) and node.func.attr == "materialize")
+        )
+    )
+
+
 def test_cache_calls_only_in_engine():
     found = {}
     for sub in ("operators", "suites", "jobs"):
@@ -63,8 +109,19 @@ def test_cache_calls_only_in_engine():
             if n:
                 found[path.relative_to(PKG).as_posix()] = n
     assert found == ALLOWED_CACHE_CALLS, (
-        "cache calls outside engine.py: hold the frame in "
-        "engine.cache_scope() / use engine.materialize() instead"
+        "cache calls outside engine.py: hold the frame in engine.cache_scope()"
+    )
+
+
+def test_materialize_only_truncates_loop_lineage():
+    found = {}
+    for path in sorted(PKG.rglob("*.py")):
+        n = _materialize_calls(path) if path.name != "engine.py" else 0
+        if n:
+            found[path.relative_to(PKG).as_posix()] = n
+    assert found == ALLOWED_MATERIALIZE_CALLS, (
+        "engine.materialize outside the loop/shared-cache sites: return the "
+        "lazy plan, or a literal frame of a result already collected"
     )
 
 
@@ -142,3 +199,46 @@ def test_fanout_adds_no_exchange_when_shuffle_partitions_exceed_cores(spark, sf_
         if at_32 > at_cores:
             grown[name] = (at_cores, at_32)
     assert not grown, f"exchanges at 4 -> 32 shuffle partitions: {grown}"
+
+
+#: One registry query per operator or suite function that returned an
+#: ``engine.materialize`` checkpoint before it returned its plan.
+LEAK_QUERIES = [
+    "doc_dup_span_stats",
+    "token_budget_selection",
+    "graph_pagerank_parts",
+    "graph_label_propagation",
+    "graph_triangle_counts",
+    "conformal_interval_coverage",
+    "gmm_em_order_values",
+    "quality_logreg_gd",
+    "logreg_calibration_bins",
+    "logreg_auc_roc",
+    "token_cms_heavy_hitters",
+    "source_overlap_kmv",
+    "curation_chunks_v2",
+    "basket_association_rules",
+]
+
+
+@pytest.fixture(scope="module")
+def primed(spark, sf_dir):
+    """Run every leak query once first, so the shared graph edge set
+    (a checkpoint that outlives its query by design) already exists."""
+    qs = q.queries()
+    for name in LEAK_QUERIES:
+        qs[name](spark, sf_dir).collect()
+    return qs
+
+
+@pytest.mark.parametrize("name", LEAK_QUERIES)
+def test_returned_frame_leaves_no_persisted_rdd(spark, sf_dir, primed, name):
+    """Build the query, consume every column, clearCache(): no RDD
+    registered meanwhile may stay persisted. A returned localCheckpoint
+    fails this, because clearCache() cannot free it."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    primed[name](spark, sf_dir).collect()
+    spark.catalog.clearCache()
+    leaked = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert not leaked, f"{name} left persisted RDDs {leaked}"

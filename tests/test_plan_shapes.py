@@ -1,12 +1,13 @@
 """Plan-SHAPE pins for the most expensive bench queries
 (VERDICT r7 ask #6, extended to the r8 top-5 per r8 ask #3): the
 join strategies the bench numbers depend on
-must survive a Spark upgrade or refactor. The heavy operators
-materialize intermediates (localCheckpoint / materialize-release), so
-the final DataFrame's plan is just an RDD scan — the interesting
-plans are the SUB-executions the operator runs. We capture those from
-the session's SQLAppStatusStore (the SQL tab's data source — public
-API) and scan every plan the query executed.
+must survive a Spark upgrade or refactor. The iterative operators run
+jobs while the DataFrame is built (per-round collects, checkpointed
+loop rounds and pair results), so the final plan alone does not show
+every join — we
+capture every SQL execution the query runs, build-time and final,
+from the session's SQLAppStatusStore (the SQL tab's data source —
+public API) and scan them all.
 
 Two tiers of pin:
 - HARD, scale-independent: no CartesianProduct, and no

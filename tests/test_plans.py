@@ -98,9 +98,9 @@ def test_cms_build_partial_aggregates_map_side(spark, sf_dir):
 
 
 def test_pagerank_iteration_broadcasts_ranks(spark, sf_dir):
-    """Under the rank-broadcast budget each iteration joins the
-    cached edge table against a broadcast rank vector — the edge side
-    must never re-exchange."""
+    """Under the rank-broadcast budget each iteration joins the edge
+    table against a broadcast rank vector — the edge side must never
+    re-exchange."""
     from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_table
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.graph import (
         cooccurrence_edges,
@@ -112,38 +112,16 @@ def test_pagerank_iteration_broadcasts_ranks(spark, sf_dir):
         cooccurrence_edges(li, "l_orderkey", "l_partkey", partition_by="dst"),
         iters=2,
     )
-    # pagerank materializes via localCheckpoint; inspect the executed
-    # plan it recorded through a fresh equivalent build instead
-    from pyspark.sql import functions as F
-
-    e = cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", partition_by="dst"
-    ).cache()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__outdeg"))
-    ranks = deg.select(F.col("src").alias("node"), F.lit(0.001).alias("rank"))
-    ce = e.join(F.broadcast(deg), "src")
-    it = (
-        ce.join(F.broadcast(ranks), ce.src == ranks.node)
-        .select(
-            F.col("dst").alias("node"),
-            (F.col("rank") / F.col("__outdeg")).alias("__c"),
-        )
-        .groupBy("node")
-        .agg(F.sum("__c").alias("rank"))
-    )
-    it.count()  # finalize the adaptive plan before inspecting it
-    plan = _executed_plan(it)
+    assert out.collect()  # finalize the adaptive plan before inspecting it
+    plan = _executed_plan(out)
     assert "BroadcastHashJoin" in plan
     # the dst-partitioning planted by cooccurrence_edges(partition_by=
-    # "dst") must flow through the cache and both broadcast joins into
-    # the groupBy — an iteration never re-exchanges the edge stream.
-    # Everything above the cached edge scan must be broadcast- and
-    # shuffle-free (the only hashpartitioning exchange lives BELOW the
-    # cache, fused into the edge dedup).
-    above_cache = plan.split("InMemoryTableScan", 1)[0]
-    assert "Exchange hashpartitioning" not in above_cache
-    e.unpersist()
-    assert out.count() > 0
+    # "dst") must flow through both broadcast joins into each
+    # iteration's groupBy(node = dst) — an iteration never
+    # re-exchanges the edge stream. The hashpartitioning exchanges
+    # left are the edge dedup's and the degree aggregate's.
+    assert "Exchange hashpartitioning(node" not in plan
+    assert "Exchange hashpartitioning(dst" in plan
 
 
 def test_pareto_front_joins_broadcast(spark, sf_dir):
@@ -189,9 +167,8 @@ def test_q18_scans_lineitem_once(spark, sf_dir):
 
 def test_basket_rules_single_corpus_exchange(spark, sf_dir):
     """Basket count, item supports, and pair supports all read ONE
-    grouped (collect_set) table. The registered query materialize-
-    releases its cache (the returned plan is a checkpoint scan), so
-    the pin rebuilds the same pre-release shape inline."""
+    grouped (collect_set) table; the pin builds the pair-support
+    branch inline and requires one lineitem scan under it."""
     from pyspark.sql import functions as F
 
     from bootcamp_stackacademy_datalake_minio_airflow_spark.catalog import load_table
@@ -289,22 +266,18 @@ def test_hot_key_join_aqe_skew_split(spark, sf_dir, tmp_path):
     assert total == li_rows
 
 
-def test_token_budget_orders_only_the_boundary_bucket(spark, sf_dir, monkeypatch):
+def test_token_budget_orders_only_the_boundary_bucket(spark, sf_dir):
     # the histogram two-phase must never compile a corpus-sized
     # unpartitioned window: every windowspec over the doc stream is
     # partitioned by the quality bucket; the only unpartitioned
     # window runs over the per-quality aggregate (tiny by key space)
     from pyspark.sql import functions as F
 
-    from bootcamp_stackacademy_datalake_minio_airflow_spark import engine
     from bootcamp_stackacademy_datalake_minio_airflow_spark.operators.sampling import (
         token_budget_select,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # the operator localCheckpoints its (selection-sized) result, which
-    # would hide the plan under a block scan
-    monkeypatch.setattr(engine, "materialize", lambda df: df)
     df = token_budget_select(
         docs.filter(F.col("text").isNotNull()).select(
             "doc_id", F.length("text").alias("nt")

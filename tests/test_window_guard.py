@@ -44,6 +44,9 @@ ALLOWED_GLOBAL_WINDOWS = {
     # stump's cumulative window runs over the 50-char bucket table
     # (|value range|/50 rows), never data rows
     "stump_doc_length_split",
+    # the bucket-prefix window runs over the per-quality histogram
+    # (one row per distinct ROUND(quality) value), never data rows
+    "token_budget_selection",
     "token_zipf_fit",
     "training_shuffle_topk",
 }
