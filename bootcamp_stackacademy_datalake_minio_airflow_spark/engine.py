@@ -10,7 +10,7 @@ Three concerns live here so that no operator module hand-codes them:
   the driver, a literal frame of the collected result. ``materialize``
   (an eager ``localCheckpoint``) truncates lineage: the
   ``connected_components`` and ``k_core`` rounds and the cross-query
-  edge set of ``suites/graph_shared.py``, plus the few pair operators
+  edge set of ``suites/graph_shared.py``, plus the few operators
   whose lazy plan would recompute an intermediate no exchange can
   share (the allow-list in tests/test_engine.py). ``drop_checkpoint``
   frees a round a loop has superseded.

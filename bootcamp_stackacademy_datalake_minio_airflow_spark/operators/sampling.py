@@ -475,8 +475,15 @@ def token_budget_select(
     # explicit-N repartition BEFORE the scoring projection so the
     # regex-heavy quality expressions evaluate at core parallelism,
     # not inside the one-task scan stage (guide §2.5; rationale in
-    # engine.fanout_repartition)
-    scored = (
+    # engine.fanout_repartition). The scored rows feed three consumers
+    # (the per-quality histogram, the shard totals, the final cumsum
+    # join); the second, round-robin exchange on the narrow scored rows
+    # is the subtree they share by ReusedExchange, so the regexes run
+    # once. Without it each consumer re-ran them: 2.72 s vs 2.20 s for
+    # held rows at sf0.1 (4 cores), against 2.73 vs 2.65 s with it. A
+    # hash exchange on the id would be dropped, as the first one
+    # already partitions by it.
+    scored = fanout_repartition(
         fanout_repartition(df, id_col)
         .select(
             F.col(id_col),

@@ -577,7 +577,6 @@ def q_curation_chunks_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import length_outliers
 
     docs = load_table(spark, sf_dir, "documents")
-    # scores feeds BOTH the cutoff aggregate and the keep filter
     scores = bigram_nll_score(docs)
     cutoff = scores.agg(
         F.round(F.percentile("avg_nll", F.lit(0.75)), 4).alias("__cut")

@@ -8,7 +8,7 @@ Writes OUTDIR/<query><SUFFIX>.txt per query. Operators return their
 lazy plans, so the recorded plan is the whole query, except where a
 loop checkpoints its rounds (``connected_components``, ``k_core``),
 a query reads the shared graph edge set (``suites/graph_shared.py``)
-or one of the five pair operators on the ``engine.materialize``
+or one of the six operator results on the ``engine.materialize``
 allow-list (tests/test_engine.py) checkpoints its result: those show
 up as ``Scan ExistingRDD`` leaves, and the work before them ran in
 build-time jobs this tool does not record.
